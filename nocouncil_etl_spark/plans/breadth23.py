@@ -31,6 +31,20 @@ from nocouncil_etl_spark.registry import query
 
 HAM_TOPK = 5
 HAM_QUERY_MOD = 100  # the vectors_plans query-set convention
+HAM_ID_LIMIT = 1 << 48  # c_id range the composite rank key can order
+
+
+def _ham_rank_key(h, c_ids):
+    """Composite integer key hamming·2^48 + c_id: one int64 whose order is
+    the rank window's exact (hamming, c_id) total order. That holds only
+    for 0 <= c_id < 2^48 (hamming <= 64 keeps the key below 2^55), so an id
+    outside the range raises instead of silently misordering the top-k."""
+    if len(c_ids) and (c_ids.min() < 0 or c_ids.max() >= HAM_ID_LIMIT):
+        raise ValueError(
+            f"vec_id outside [0, 2^48): {c_ids.min()}..{c_ids.max()}; "
+            "the hamming rank key cannot order it"
+        )
+    return h * HAM_ID_LIMIT + c_ids[:, None]
 
 
 def _ham_scored_joined(packed: DataFrame) -> DataFrame:
@@ -177,9 +191,7 @@ def vec_knn_hamming_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 h = popc(np.bitwise_xor(c0[:, None], q0[None, :])) + popc(
                     np.bitwise_xor(c1[:, None], q1[None, :])
                 )  # (batch, |Q|)
-                # composite integer key = hamming·2^48 + c_id realizes the
-                # window's exact (hamming, c_id) total order in one value
-                key = h * (1 << 48) + c_ids[:, None]
+                key = _ham_rank_key(h, c_ids)
                 top = min(HAM_TOPK + 1, len(c_ids))
                 out_q, out_c, out_h = [], [], []
                 for j in range(len(q_ids)):

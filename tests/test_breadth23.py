@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.plans.breadth23 import HAM_ID_LIMIT, _ham_rank_key
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()
@@ -110,3 +113,17 @@ def test_stream_heavy_hitters_equals_batch(spark, sf_dir):
     cols = ["event_type", "user_id", "n", "rk"]
     assert got.select(cols).exceptAll(want.select(cols)).count() == 0
     assert want.select(cols).exceptAll(got.select(cols)).count() == 0
+
+
+def test_hamming_rank_key_orders_by_hamming_then_id_in_range():
+    c_ids = np.array([7, HAM_ID_LIMIT - 1, 0, 3], dtype=np.int64)
+    h = np.array([[2], [1], [2], [64]], dtype=np.int64)
+    key = _ham_rank_key(h, c_ids)
+    assert list(np.argsort(key[:, 0])) == list(np.lexsort((c_ids, h[:, 0])))
+
+
+def test_hamming_rank_key_rejects_out_of_range_ids():
+    h = np.array([[1], [0]], dtype=np.int64)
+    for bad in (HAM_ID_LIMIT, -1):
+        with pytest.raises(ValueError, match="2\\^48"):
+            _ham_rank_key(h, np.array([5, bad], dtype=np.int64))
