@@ -20,8 +20,8 @@ never at query time. The artifact is two parquet tables:
 - ``norm``     L2 norm, so query-time scoring is one dot product per pair
 
 ``knn_from_index`` computes signatures for the QUERY side only (tiny) and
-equi-joins against the precomputed columns — the corpus is never rescanned
-and no signature is recomputed (asserted by plan in tests). Incremental
+scores the index keyed by the precomputed columns — no corpus-side
+signature is recomputed (asserted by plan in tests). Incremental
 growth is ``upsert_vector_index``: index only the incoming batch, then
 keep-latest merge by id (the engine twin of collection.add upsert semantics
 at article_vectorize.py:262-266).
@@ -33,10 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 import numpy as np
-import pandas as pd
 
 from nocouncil_etl_spark.functions.numeric import ravg
-from nocouncil_etl_spark.functions.vectors import as_double, cosine, dot, l2_norm
+from nocouncil_etl_spark.functions.vectors import as_double, l2_norm
 from nocouncil_etl_spark.operators.similarity import (
     _MULTI_MAT,
     _PLANES_MAT,
@@ -220,11 +219,6 @@ def serve_vector_index(
     return idx, cent
 
 
-def _topk(scored: DataFrame, k: int, q_id: str) -> DataFrame:
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col("c_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-
-
 def knn_from_index(
     queries: DataFrame,
     index: DataFrame,
@@ -235,112 +229,38 @@ def knn_from_index(
     q_id: str = "q_id",
     q_vec: str = "q_vec",
 ) -> DataFrame:
-    """Top-k against the materialized index. Signature/norm work happens on
+    """Top-k against the materialized index. Signature/probe work happens on
     the query side only; the index side is a pure parquet scan pruned to
-    (id, vec, <join key>). Results are identical to the corresponding
+    (id, vec, <key column>). Results are identical to the corresponding
     corpus-side strategy (knn_lsh / knn_lsh_multi / knn_ivf_probe), so the
     same oracles apply.
 
-    r12 opt (guide §4.2): candidate scoring is the blocked numpy kernel —
-    the (bounded) query side is collected keyed by its probe key and each
-    Arrow batch of the index scores against its key's query matrix with
-    one matmul, replacing the per-candidate interpreted-HOF dot() of the
-    broadcast equi-join (same documented ~1-ulp evaluation-order tolerance
-    and HALF_UP rounding as knn_partitioned's identical substitution; the
-    stored norm column is no longer read on this path — norms fold inside
-    the kernel). A query set above MAX_BLOCKED_QUERIES falls back to the
-    equi-join + expression shape, which never collects."""
-    from nocouncil_etl_spark.operators.similarity import (
-        MAX_BLOCKED_QUERIES,
-        _blocked_candidates_by_part,
-        _query_matrix,
-    )
+    Scoring is similarity.blocked_topk keyed by the stored column: ``bucket``
+    (lsh), the ``buckets`` array (lsh_multi — a pair colliding in several
+    tables is deduplicated inside the kernel, no shuffle), or ``ivf_part``
+    (ivf, probed by centroid cosine). The stored norm column is not read —
+    norms fold inside the kernel."""
+    from nocouncil_etl_spark.operators.similarity import _probe_cells, blocked_topk
 
     if strategy == "lsh":
-        q = attach_signature(queries, q_vec)
-        q_keyed = q.select("bucket", q_id, q_vec)
-        c_keyed, key = index, "bucket"
-        dedup = False
-    elif strategy == "lsh_multi":
-        q = attach_signature(queries, q_vec, multi=True)
-        q_keyed = q.select(F.explode("buckets").alias("bucket"), q_id, q_vec)
-        c_keyed = index.select(
-            "id", "vec", "norm", F.explode("buckets").alias("bucket")
+        q = attach_signature(queries, q_vec).select(
+            F.col("bucket").alias("key"), q_id, q_vec
         )
         key = "bucket"
-        dedup = True
+    elif strategy == "lsh_multi":
+        q = attach_signature(queries, q_vec, multi=True).select(
+            F.explode("buckets").alias("key"), q_id, q_vec
+        )
+        key = "buckets"
     elif strategy == "ivf":
         if centroids is None:
             raise ValueError("strategy='ivf' needs the centroids sidecar")
-        q_keyed = (
-            queries.crossJoin(F.broadcast(centroids))
-            .withColumn("_csim", F.round(cosine(q_vec, "cv"), 6))
-            .withColumn(
-                "_crk",
-                F.row_number().over(
-                    Window.partitionBy(q_id).orderBy(
-                        F.col("_csim").desc_nulls_last(), F.col("ivf_part")
-                    )
-                ),
-            )
-            .filter(F.col("_crk") <= nprobe)
-            .select("ivf_part", q_id, q_vec)
-        )
-        c_keyed, key = index, "ivf_part"
-        dedup = False
+        q = _probe_cells(queries, centroids, "ivf_part", nprobe, q_id, q_vec)
+        key = "ivf_part"
     else:
         raise ValueError(
             f"unknown index strategy {strategy!r}; expected lsh | lsh_multi | ivf"
         )
-
-    q_rows = q_keyed.limit(MAX_BLOCKED_QUERIES + 1).collect()
-    if len(q_rows) > MAX_BLOCKED_QUERIES:
-        return _knn_from_index_joined(
-            q_keyed, c_keyed, key, k, dedup, q_id, q_vec
-        )
-    by_key: dict = {}
-    for r in q_rows:
-        by_key.setdefault(r[key], []).append(r)
-    per_part = {p: _query_matrix(rows, q_id, q_vec) for p, rows in by_key.items()}
-    candidates = _blocked_candidates_by_part(
-        c_keyed, per_part, k, key, "id", "vec", q_id
+    return blocked_topk(q, index, k, key, q_id, "id", q_vec, "vec").select(
+        q_id, F.col("id").alias("c_id"), "sim", "rk"
     )
-    if dedup:
-        # OR over tables: a pair colliding in several (exploded) index rows
-        # scores identically; dedup before the rank window
-        candidates = candidates.dropDuplicates([q_id, "id"])
-    w = Window.partitionBy(q_id).orderBy(
-        F.col("sim").desc_nulls_last(), F.col("id")
-    )
-    return (
-        candidates.filter(F.col(q_id) != F.col("id"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(q_id, F.col("id").alias("c_id"), "sim", "rk")
-    )
-
-
-def _knn_from_index_joined(
-    q_keyed: DataFrame,
-    c_keyed: DataFrame,
-    key: str,
-    k: int,
-    dedup: bool,
-    q_id: str,
-    q_vec: str,
-) -> DataFrame:
-    """Distributed fallback for a data-sized query side: broadcast key
-    equi-join + JVM expression cosine over the stored norm column (the
-    pre-r12 shape; never collects)."""
-    q = q_keyed.withColumn("_qn", l2_norm(q_vec))
-    pairs = c_keyed.join(F.broadcast(q), on=key).filter(F.col(q_id) != F.col("id"))
-    if dedup:
-        pairs = pairs.dropDuplicates([q_id, "id"])
-    sim = F.when(
-        F.col("_qn") * F.col("norm") != 0,
-        dot(q_vec, "vec") / (F.col("_qn") * F.col("norm")),
-    )
-    scored = pairs.select(
-        q_id, F.col("id").alias("c_id"), F.round(sim, 6).alias("sim")
-    )
-    return _topk(scored, k, q_id)

@@ -11,9 +11,9 @@ a documented row cap keep the EXACT kernel; larger blocks are split into
 sign-hyperplane LSH sub-cells (SimHash over the embedding, Charikar 2002 —
 the same family as operators/similarity.attach_signature) sized so the
 expected sub-cell stays under the cap, and the exact kernel then runs per
-sub-cell. This mirrors `_knn_part_distributed`
-(operators/similarity.py:311): over-cap input degrades to a
-bounded-per-task plan instead of an unbounded one.
+sub-cell. This mirrors `blocked_topk`'s distributed fallback
+(operators/similarity.py `_distributed_topk`): over-cap input degrades to
+a bounded-per-task plan instead of an unbounded one.
 
 Semantics under celling (documented recall, not silent): pairs whose
 endpoints land in DIFFERENT sub-cells of an over-cap block are not scored.

@@ -18,9 +18,9 @@ INCOMING batch against the stored centroids (one Arrow pass over the batch
 alone) and append — existing assignments never move, exactly the property
 that makes ann_index upserts cheap, now with data-adaptive cell boundaries.
 Search quantizes the (tiny) query side, ranks the pinned cells by exact
-integer L2, probes the top-nprobe, and cosine-ranks inside probed cells via
-a cell-keyed equi-join — the corpus is never re-signed, never rescanned
-outside probed cells.
+integer L2, probes the top-nprobe, and cosine-ranks inside probed cells
+with similarity.blocked_topk keyed by the pinned cell — the corpus is never
+re-signed or re-assigned.
 """
 
 from __future__ import annotations
@@ -28,10 +28,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.functions.vectors import cosine
 from nocouncil_etl_spark.operators.centroid_artifact import (
     corpus_fingerprint,
     read_manifest,
@@ -185,78 +184,21 @@ def search_kmeans_index(
     integer-L2 rank the stored centroids, probe top-nprobe cells, cosine
     rank inside probed cells. Emits (q_id, c_id, sim, rk).
 
-    r12 opt (guide §4.2): in-cell scoring is the blocked numpy kernel —
-    the (query, probed-cell) pairs are collected once (bounded:
-    nq·nprobe rows, MAX_BLOCKED_QUERIES-guarded) and each Arrow batch of
-    the stored index scores against its cell's query matrix with one
-    matmul, replacing the per-candidate interpreted-HOF cosine() of the
-    broadcast equi-join (knn_partitioned's substitution — same documented
-    ~1-ulp evaluation-order tolerance, same HALF_UP rounding, nulls rank
-    last with the same c_id tie-break). A data-sized query set falls back
-    to the equi-join + expression-cosine shape, which never collects."""
-    from nocouncil_etl_spark.operators.similarity import (
-        MAX_BLOCKED_QUERIES,
-        _blocked_candidates_by_part,
-        _query_matrix,
-    )
+    In-cell scoring is similarity.blocked_topk keyed by the stored ``cid``:
+    the (query, probed-cell) rows — nq·nprobe of them — are collected once
+    and each Arrow batch of the stored index scores against its cell's
+    query matrix with one matmul; a data-sized query set takes the
+    primitive's distributed equi-join fallback, which never collects."""
+    from nocouncil_etl_spark.operators.similarity import blocked_topk
 
     spark = queries.sparkSession
     stored, ids, cm = read_kmeans_index(spark, path)
     qq = quantize_vectors(queries, vec_col, "xq").select(id_col, "xq")
     probes = assign_l2_topn(qq, ids, cm, nprobe, id_col=id_col).select(
-        F.col(id_col).alias("q_id"), "cid"
+        F.col(id_col).alias("q_id"), F.col("cid").alias("key")
     )
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    p_rows = (
-        probes.join(F.broadcast(q), "q_id")
-        .select("cid", "q_id", "q_vec")
-        .limit(MAX_BLOCKED_QUERIES + 1)
-        .collect()
-    )
-    if len(p_rows) > MAX_BLOCKED_QUERIES:
-        return _search_kmeans_joined(stored, probes, q, topk, id_col, vec_col)
-    by_cell: dict = {}
-    for r in p_rows:
-        by_cell.setdefault(r["cid"], []).append(r)
-    per_part = {
-        cell: _query_matrix(rows, "q_id", "q_vec")
-        for cell, rows in by_cell.items()
-    }
-    candidates = _blocked_candidates_by_part(
-        stored, per_part, topk, "cid", id_col, vec_col, "q_id"
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("sim").desc_nulls_last(), F.asc(id_col)
-    )
-    return (
-        candidates.filter(F.col("q_id") != F.col(id_col))
-        .withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= topk)
-        .select("q_id", F.col(id_col).alias("c_id"), "sim", "rk")
-    )
-
-
-def _search_kmeans_joined(
-    stored: DataFrame,
-    probes: DataFrame,
-    q: DataFrame,
-    topk: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Distributed fallback for a data-sized query side: cell-keyed
-    equi-join + JVM expression cosine (the pre-r12 shape; never collects)."""
-    cand = (
-        stored.join(F.broadcast(probes), "cid")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .join(F.broadcast(q), "q_id")
-    )
-    scored = cand.select(
-        "q_id",
-        F.col(id_col).alias("c_id"),
-        F.round(cosine("q_vec", vec_col), 6).alias("sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")).filter(
-        F.col("rk") <= topk
-    )
+    return blocked_topk(
+        probes.join(F.broadcast(q), "q_id").select("key", "q_id", "q_vec"),
+        stored, topk, "cid", "q_id", id_col, "q_vec", vec_col,
+    ).select("q_id", F.col(id_col).alias("c_id"), "sim", "rk")

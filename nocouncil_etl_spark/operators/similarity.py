@@ -14,7 +14,12 @@ queried top-k out of repo. The engine provides a strategy ladder:
    bucket key — no quadratic stage anywhere. Hyperplanes are derived from a
    fixed seed so results are deterministic and oracle-checkable.
 
-All kernels are pure column expressions (functions/vectors.py) — no UDFs.
+Every strategy but ``knn_exact`` scores through ONE primitive,
+``blocked_topk``: a per-batch numpy top-k over a bounded, collected query
+side, keyed by nothing, a column, an array column or in-kernel LSH
+signatures, with one distributed equi-join fallback above
+MAX_BLOCKED_QUERIES. ``knn_exact`` stays the pure column-expression
+reference (functions/vectors.py) the others are tested against.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nocouncil_etl_spark.functions.vectors import as_double, cosine, dot, l2_norm  # noqa: F401  (cosine kept as public kernel)
+from nocouncil_etl_spark.functions.vectors import as_double, cosine, dot, l2_norm
 
 LSH_SEED = 42
 LSH_PLANES = 8
@@ -188,25 +193,45 @@ def knn_exact(
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
+# Driver-side cap for the blocked strategy's query matrix. 64k × 64 dims ×
+# 8 B ≈ 32 MB — comfortably shippable in a task closure; beyond that the
+# query side belongs in a distributed strategy, not on the driver.
+MAX_BLOCKED_QUERIES = 65_536
+
+_SIX = Decimal("0.000001")
+
+
+def _round6_like_spark(x: float) -> float:
+    """Twin of Spark's Round(double, 6): HALF_UP on the shortest decimal
+    representation (BigDecimal.valueOf ≡ Python repr). np.round is half-even
+    on the binary value — close, but not the same rule at .5e-7 boundaries."""
+    return float(Decimal(repr(float(x))).quantize(_SIX, rounding=ROUND_HALF_UP))
+
+
+def _normalized(mat: np.ndarray):
+    """(row-normalized float64 matrix, zero-norm mask); zero rows stay 0."""
+    norm = np.linalg.norm(mat, axis=1, keepdims=True)
+    return (
+        np.divide(mat, norm, out=np.zeros_like(mat), where=norm != 0),
+        (norm == 0).ravel(),
+    )
+
 
 def _query_matrix(rows, q_id: str, q_vec: str):
     """(ids, row-normalized float64 matrix, zero-norm mask) from collected
     query rows — the shippable task-closure form of a bounded query set."""
     ids = np.array([r[q_id] for r in rows])
-    qm = np.array([r[q_vec] for r in rows], dtype=np.float64)
-    q_norm = np.linalg.norm(qm, axis=1, keepdims=True)
-    q_zero = (q_norm == 0).ravel()
-    qm = np.divide(qm, q_norm, out=np.zeros_like(qm), where=q_norm != 0)
-    return ids, qm, q_zero
+    return (ids, *_normalized(np.array([r[q_vec] for r in rows], dtype=np.float64)))
 
 
 def _emit_batch_topk(sims, c_ids, q_ids, k):
-    """Shared per-batch candidate emission (the knn_exact_blocked scoring
-    tail): per query keep the group's top min(k+1, n) with the 1e-6 epsilon
-    guard (one rounding ulp at 6dp — a candidate that would round-tie into
-    the global top-k is never dropped), −inf (undefined cosine) rows kept
-    as nulls tie-broken by smallest c_id, sims emitted with Spark's
-    HALF_UP rounding rule."""
+    """Per-batch candidate emission: per query keep the group's top
+    min(k+1, n) (+1 absorbs the self-match) with the 1e-6 epsilon guard
+    (one rounding ulp at 6dp — a candidate that would round-tie into the
+    global top-k is never dropped: anything pruned rounds strictly below
+    ≥ k same-batch survivors), −inf (undefined cosine) rows kept as nulls
+    tie-broken by smallest c_id, sims emitted with Spark's HALF_UP
+    rounding rule."""
     out_q, out_c, out_s = [], [], []
     top = min(k + 1, len(c_ids))
     for j in range(sims.shape[1]):
@@ -228,119 +253,224 @@ def _emit_batch_topk(sims, c_ids, q_ids, k):
     return out_q, out_c, out_s
 
 
-def _blocked_candidates_by_part(
-    corpus: DataFrame,
-    per_part: dict,
-    k: int,
-    part_col: str,
-    c_id: str,
-    c_vec: str,
-    q_id: str,
-) -> DataFrame:
-    """Per-partition twin of knn_exact_blocked's scoring pass: each Arrow
-    batch of corpus vectors is grouped by its partition key and scored
-    against THAT partition's query matrix with one numpy matmul, emitting
-    per-batch top-(k+1) candidates (same pruning epsilon, zero-norm-null,
-    and Spark-rule rounding as the exact kernel). per_part maps partition
-    key -> (q_ids, normalized query matrix, zero mask)."""
+# Corpus keys blocked_topk derives inside its kernel from each vector instead
+# of reading a column: the single-table LSH signature, and the L multi-table
+# signatures (attach_signature's encodings).
+LSH_KEY = "<lsh signature>"
+LSH_MULTI_KEY = "<lsh multi-table signatures>"
 
-    def score(batches):
-        for pdf in batches:
-            for part, sub in pdf.groupby(part_col, sort=False):
-                qp = per_part.get(part)
-                if qp is None:
-                    continue
-                q_ids, qm, q_zero = qp
-                cm = np.vstack(sub[c_vec].to_numpy()).astype(np.float64)
-                c_norm = np.linalg.norm(cm, axis=1, keepdims=True)
-                c_zero = (c_norm == 0).ravel()
-                cm = np.divide(
-                    cm, c_norm, out=np.zeros_like(cm), where=c_norm != 0
-                )
-                sims = cm @ qm.T
-                sims[c_zero, :] = -np.inf
-                sims[:, q_zero] = -np.inf
-                out_q, out_c, out_s = _emit_batch_topk(
-                    sims, sub[c_id].to_numpy(), q_ids, k
-                )
-                yield pd.DataFrame({q_id: out_q, c_id: out_c, "sim": out_s})
 
-    return corpus.select(part_col, c_id, c_vec).mapInPandas(
-        score, schema=f"{q_id} long, {c_id} long, sim double"
+def _several_keys(corpus: DataFrame, key) -> bool:
+    """Whether a corpus row can carry several keys (a pair may collide more
+    than once and must be deduplicated)."""
+    if key is None or key == LSH_KEY:
+        return False
+    return key == LSH_MULTI_KEY or isinstance(
+        corpus.schema[key].dataType, T.ArrayType
     )
 
 
-def _blocked_candidates_by_signature(
-    corpus: DataFrame,
-    per_part: dict,
-    k: int,
-    c_id: str,
-    c_vec: str,
-    q_id: str,
-    multi: bool = False,
-) -> DataFrame:
-    """Fused sign-and-score pass for the LSH strategies (r12 opt, guide
-    §4.2 + §2.4): ONE Arrow pass computes each corpus batch's signature(s)
-    — the same stacked numpy matmul attach_signature runs — AND scores the
-    batch against the colliding queries' matrices, so the corpus is
-    touched exactly once, no signature column materializes, and the
-    per-pair interpreted-HOF dot() the old plan evaluated is a blocked
-    matmul (the knn_partitioned substitution, same documented ~1-ulp
-    evaluation-order tolerance, same HALF_UP rounding).
+def _collect_queries(queries: DataFrame):
+    """The bounded query side on the driver, or None above
+    MAX_BLOCKED_QUERIES rows."""
+    rows = queries.limit(MAX_BLOCKED_QUERIES + 1).collect()
+    return None if len(rows) > MAX_BLOCKED_QUERIES else rows
 
-    ``multi=True`` unions candidates over the L signature tables; a pair
-    colliding in several tables scores identically, and batch-local dedup
-    is complete because a corpus row lives in exactly one Arrow batch."""
+
+def _rank(scored: DataFrame, k: int, q_id: str, c_id: str) -> DataFrame:
+    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _blocked_candidates(
+    rows, corpus: DataFrame, k: int, key, q_id: str, c_id: str, q_vec: str, c_vec: str
+) -> DataFrame:
+    """The candidate stage of blocked_topk: ONE Arrow pass over the corpus.
+    Each batch is row-normalized once, its rows are grouped by key (every
+    row in one group when ``key`` is None), and each group scores against
+    its key's query matrix with one numpy matmul, emitting the per-batch
+    top-(k+1) (_emit_batch_topk). A row with several keys joins several
+    groups; the (q, c) pairs it produces are deduplicated within the batch,
+    which is complete because a corpus row lives in exactly one batch. No
+    self-filter and no rank window: (q_id, c_id, sim) candidates."""
+    by_key: dict = {}
+    for r in rows:
+        g = 0 if key is None else r["key"]
+        if g is not None:
+            by_key.setdefault(g, []).append(r)
+    per_key = {g: _query_matrix(rs, q_id, q_vec) for g, rs in by_key.items()}
+    several = _several_keys(corpus, key)
+
+    def row_keys(pdf, mat):
+        if key == LSH_KEY:
+            return ([bits_key(s)] for s in mat @ _PLANES_MAT.T >= 0)
+        if key == LSH_MULTI_KEY:
+            return (multi_bucket_keys(s) for s in mat @ _MULTI_MAT.T >= 0)
+        return pdf[key] if several else ([g] for g in pdf[key])
 
     def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.vstack(pdf[c_vec].to_numpy()).astype(np.float64)
-            c_norm = np.linalg.norm(mat, axis=1, keepdims=True)
-            c_zero = (c_norm == 0).ravel()
-            cm = np.divide(mat, c_norm, out=np.zeros_like(mat), where=c_norm != 0)
-            c_ids_all = pdf[c_id].to_numpy()
-            if multi:
-                signs = mat @ _MULTI_MAT.T >= 0
-                keys_rows = [multi_bucket_keys(row) for row in signs]
+            cm, c_zero = _normalized(mat)
+            c_ids = pdf[c_id].to_numpy()
+            if key is None:
+                groups = {g: slice(None) for g in per_key}
             else:
-                signs = mat @ _PLANES_MAT.T >= 0
-                keys_rows = [[bits_key(row)] for row in signs]
-            groups: dict = {}
-            for i, keys in enumerate(keys_rows):
-                for key in keys:
-                    if key in per_part:
-                        groups.setdefault(key, []).append(i)
+                groups = {}
+                for i, keys in enumerate(row_keys(pdf, mat)):
+                    for g in keys:
+                        if g in per_key:
+                            groups.setdefault(g, []).append(i)
             seen: set = set()
             out_q, out_c, out_s = [], [], []
-            for key, idxs in groups.items():
-                q_ids, qm, q_zero = per_part[key]
-                sub = np.asarray(idxs)
-                sims = cm[sub] @ qm.T
-                sims[c_zero[sub], :] = -np.inf
+            for g, idx in groups.items():
+                ids, qm, q_zero = per_key[g]
+                sims = cm[idx] @ qm.T
+                # undefined cosines (zero norm) rank last, surface as null
+                sims[c_zero[idx], :] = -np.inf
                 sims[:, q_zero] = -np.inf
-                oq, oc, os_ = _emit_batch_topk(sims, c_ids_all[sub], q_ids, k)
-                if multi:
-                    # OR over tables: a pair colliding in several tables
-                    # scores once (the old dropDuplicates([q, c]))
-                    for a, b, s in zip(oq, oc, os_):
-                        if (a, b) not in seen:
-                            seen.add((a, b))
-                            out_q.append(a)
-                            out_c.append(b)
-                            out_s.append(s)
-                else:
-                    out_q.extend(oq)
-                    out_c.extend(oc)
-                    out_s.extend(os_)
+                for q, c, s in zip(*_emit_batch_topk(sims, c_ids[idx], ids, k)):
+                    if several:
+                        if (q, c) in seen:
+                            continue
+                        seen.add((q, c))
+                    out_q.append(q)
+                    out_c.append(c)
+                    out_s.append(s)
             if out_q:
                 yield pd.DataFrame({q_id: out_q, c_id: out_c, "sim": out_s})
 
-    return corpus.select(c_id, c_vec).mapInPandas(
+    stored = key not in (None, LSH_KEY, LSH_MULTI_KEY)
+    return corpus.select(*([key] if stored else []), c_id, c_vec).mapInPandas(
         score, schema=f"{q_id} long, {c_id} long, sim double"
     )
 
+
+def _distributed_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, key, q_id: str, c_id: str,
+    q_vec: str, c_vec: str,
+) -> DataFrame:
+    """blocked_topk's one fallback when the query side exceeds
+    MAX_BLOCKED_QUERIES (too big for a task closure): explode the corpus
+    keys, shuffle-hash equi-join on the key, drop duplicate pairs when a row
+    carries several keys, score with the JVM expression cosine, rank with
+    the same window. It never collects. shuffle_hash is hinted explicitly
+    so Spark can never elect to broadcast a data-sized query side.
+
+    Semantically identical to the blocked kernel — same 6dp HALF_UP
+    rounding (F.round), null sims for zero norms ranked last, same
+    (sim desc, c_id) tie-break — up to the documented ~1-ulp float
+    evaluation-order tolerance: this path computes JVM dot/(|a|·|b|) then
+    rounds, the blocked kernel a numpy normalized matmul then
+    _round6_like_spark, so a value within ~1 ulp of a .5e-7 rounding
+    boundary at 6dp can round apart and flip a rank (the same tolerance
+    vec_neardup_cosine documents at its 0.99 cutoff). No synthetic vector
+    sits on a boundary; a future mismatch here is that known artifact, not
+    a fallback bug."""
+    several = _several_keys(corpus, key)
+    if key in (LSH_KEY, LSH_MULTI_KEY):
+        corpus = attach_signature(corpus.select(c_id, c_vec), c_vec, multi=several)
+        key = "buckets" if several else "bucket"
+    keys = F.explode(key) if several else F.col(key)
+    c = corpus.withColumn("_cn", l2_norm(c_vec)).select(
+        c_id, c_vec, "_cn", keys.alias("key")
+    )
+    q = queries.withColumn("_qn", l2_norm(q_vec))
+    pairs = c.join(q.hint("shuffle_hash"), "key").filter(F.col(q_id) != F.col(c_id))
+    if several:
+        pairs = pairs.dropDuplicates([q_id, c_id])
+    norms = F.col("_qn") * F.col("_cn")
+    sim = F.when(norms != 0, dot(q_vec, c_vec) / norms)
+    return _rank(pairs.select(q_id, c_id, F.round(sim, 6).alias("sim")), k, q_id, c_id)
+
+
+def blocked_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    key=None,
+    q_id: str = "q_id",
+    c_id: str = "c_id",
+    q_vec: str = "q_vec",
+    c_vec: str = "c_vec",
+) -> DataFrame:
+    """The one keyed cosine top-k: a local per-batch top-k with pruning
+    followed by one global rank window (the REPOSE shape). Emits
+    (q_id, c_id, sim, rk), self-matches dropped, ranked by
+    (sim desc nulls last, c_id).
+
+    ``queries`` holds (q_id, q_vec) plus, when the corpus is keyed, a
+    ``key`` column with one key per row (a query probing several keys has
+    several rows). ``key`` describes the corpus side:
+    - None: one group, every query scores every corpus row;
+    - a scalar column: the partition label, an IVF cell, a stored bucket;
+    - an array column: several stored keys per row (the index's buckets);
+    - LSH_KEY / LSH_MULTI_KEY: signature(s) computed inside the kernel from
+      the vector, so the corpus is signed and scored in one pass.
+
+    Up to MAX_BLOCKED_QUERIES query rows are collected once and shipped to
+    every task (_blocked_candidates), so the window ranks ≤
+    (k+1)·|Q|·n_batches rows instead of every candidate pair. Above the cap
+    a keyed search falls back to _distributed_topk, which never leaves the
+    cluster; a keyless one fails fast instead of OOMing the driver."""
+    rows = _collect_queries(queries)
+    if rows is None:
+        if key is None:
+            raise ValueError(
+                f"the blocked top-k materializes the query side on the driver "
+                f"and got more than {MAX_BLOCKED_QUERIES} query rows; for large "
+                "query sets use knn_lsh or knn_partitioned (bucketed equi-joins "
+                "that never leave the cluster)."
+            )
+        return _distributed_topk(queries, corpus, k, key, q_id, c_id, q_vec, c_vec)
+    candidates = _blocked_candidates(rows, corpus, k, key, q_id, c_id, q_vec, c_vec)
+    return _rank(candidates.filter(F.col(q_id) != F.col(c_id)), k, q_id, c_id)
+
+
+def _probe_cells(
+    queries: DataFrame, cent: DataFrame, cell: str, nprobe: int, q_id: str, q_vec: str
+) -> DataFrame:
+    """(key, q_id, q_vec): each query's top-``nprobe`` cells of the centroid
+    table ``cent`` (cell, cv) by cosine rounded to 6dp, ties broken by the
+    cell — the keyed query side of an IVF probe. The centroid side is tiny
+    and broadcast."""
+    w = Window.partitionBy(q_id).orderBy(F.col("_csim").desc_nulls_last(), F.col("key"))
+    return (
+        queries.select(q_id, q_vec)
+        .crossJoin(F.broadcast(cent.select(F.col(cell).alias("key"), "cv")))
+        .withColumn("_csim", F.round(cosine(q_vec, "cv"), 6))
+        .withColumn("_crk", F.row_number().over(w))
+        .filter(F.col("_crk") <= nprobe)
+        .select("key", q_id, q_vec)
+    )
+
+
+def knn_exact_blocked(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    q_id: str = "q_id",
+    c_id: str = "c_id",
+    q_vec: str = "q_vec",
+    c_vec: str = "c_vec",
+) -> DataFrame:
+    """Brute-force top-k as blocked matrix multiply — the 100 TB exact-search
+    shape: blocked_topk with no key, so each Arrow batch of corpus vectors
+    scores against ALL queries with one numpy matmul.
+
+    Result-identical to knn_exact (same oracle), including edges:
+    - the query side is size-guarded (MAX_BLOCKED_QUERIES) — a larger query
+      set fails fast with a pointer at knn_lsh/knn_partitioned instead of
+      OOMing the driver;
+    - zero-norm vectors score null (knn_exact's F.when), ranked last;
+    - emitted sims use Spark's HALF_UP rounding rule, not np.round;
+    - per-batch pruning keeps every candidate within 1e-6 of the batch's
+      k-th best (_emit_batch_topk)."""
+    return blocked_topk(
+        queries.select(q_id, q_vec), corpus, k, None, q_id, c_id, q_vec, c_vec
+    )
 
 
 def knn_partitioned(
@@ -353,79 +483,18 @@ def knn_partitioned(
     q_vec: str = "q_vec",
     c_vec: str = "c_vec",
 ) -> DataFrame:
-    """IVF-style ANN: equi-join on a coarse partition key, then top-k within.
+    """IVF-style ANN: pair only within a coarse partition key, then top-k.
 
     Candidate count drops by the partition fan-out; recall is bounded by
-    the coarse quantizer (exactly IVF with nprobe=1). Scoring is the
-    blocked numpy-matmul kernel grouped by partition key (the
-    knn_exact_blocked pass with one query matrix per partition) — the
-    per-pair expression cosine it replaces evaluated interpreted and grew
-    quadratically in wall time with cell size. Query side bounded by
-    MAX_BLOCKED_QUERIES, the blocked-strategy contract; a LARGER query set
-    falls back to the fully-distributed equi-join + expression-cosine path
-    (result-identical, never leaves the cluster) instead of failing —
-    slower per pair, but the right trade when the query side itself is
-    data-sized."""
-    q_rows = (
-        queries.select(part_col, q_id, q_vec)
-        .limit(MAX_BLOCKED_QUERIES + 1)
-        .collect()
+    the coarse quantizer (exactly IVF with nprobe=1). blocked_topk keyed by
+    the partition column: one query matrix per partition, and above
+    MAX_BLOCKED_QUERIES the distributed equi-join fallback instead of a
+    failure — slower per pair, but the right trade when the query side
+    itself is data-sized."""
+    return blocked_topk(
+        queries.select(F.col(part_col).alias("key"), q_id, q_vec),
+        corpus, k, part_col, q_id, c_id, q_vec, c_vec,
     )
-    if len(q_rows) > MAX_BLOCKED_QUERIES:
-        return _knn_part_distributed(
-            queries.withColumn("_qn", l2_norm(q_vec)),
-            corpus, k, part_col, q_id, c_id, q_vec, c_vec,
-        )
-    by_part: dict = {}
-    for r in q_rows:
-        by_part.setdefault(r[part_col], []).append(r)
-    per_part = {p: _query_matrix(rows, q_id, q_vec) for p, rows in by_part.items()}
-    candidates = _blocked_candidates_by_part(
-        corpus, per_part, k, part_col, c_id, c_vec, q_id
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return (
-        candidates.filter(F.col(q_id) != F.col(c_id))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
-
-
-def _knn_part_distributed(
-    q_with_norm: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    part_col: str,
-    q_id: str,
-    c_id: str,
-    q_vec: str,
-    c_vec: str,
-) -> DataFrame:
-    """Fallback scoring when the query/probe side exceeds
-    MAX_BLOCKED_QUERIES (too big for a task closure): shuffle-hash
-    equi-join on the partition key + JVM expression cosine. shuffle_hash
-    is hinted explicitly so Spark can never elect to broadcast a
-    data-sized query side. Semantically identical to the blocked kernel —
-    same 6dp HALF_UP rounding (F.round), null sims for zero norms ranked
-    last, same (sim desc, c_id) tie-break — up to the documented ~1-ulp
-    float evaluation-order tolerance: this path computes JVM
-    dot/(|a|·|b|) then rounds, the blocked kernel a numpy normalized
-    matmul then _round6_like_spark, so a value within ~1 ulp of a .5e-7
-    rounding boundary at 6dp can round apart and flip a rank (the same
-    tolerance vec_neardup_cosine documents at its 0.99 cutoff). No
-    synthetic vector sits on a boundary; a future mismatch here is that
-    known artifact, not a fallback bug."""
-    cn = corpus.withColumn("_cn", l2_norm(c_vec))
-    pairs = cn.join(q_with_norm.hint("shuffle_hash"), on=part_col).filter(
-        F.col(q_id) != F.col(c_id)
-    )
-    sim = F.when(
-        F.col("_qn") * F.col("_cn") != 0,
-        dot(q_vec, c_vec) / (F.col("_qn") * F.col("_cn")),
-    )
-    scored = pairs.select(q_id, c_id, F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
 def knn_lsh(
@@ -439,54 +508,14 @@ def knn_lsh(
 ) -> DataFrame:
     """LSH ANN: pair only vectors sharing the hyperplane sign signature.
 
-    r12 opt (guide §4.2): the query side (tiny by the ANN contract) is
-    signed and collected once; the corpus side runs the fused
-    sign-and-score Arrow kernel (_blocked_candidates_by_signature) — one
-    corpus pass, no per-pair interpreted-HOF dot(), no signature column
-    shuffled. A query set above MAX_BLOCKED_QUERIES falls back to the
-    broadcast bucket equi-join + expression cosine (result-identical up
-    to the documented ~1-ulp evaluation-order tolerance, same as
-    knn_partitioned's fallback)."""
+    The query side (tiny by the ANN contract) is signed once; blocked_topk
+    signs AND scores each corpus batch in one Arrow pass (LSH_KEY) — no
+    per-pair interpreted-HOF dot(), no signature column shuffled."""
     q = attach_signature(queries, q_vec)
-    q_rows = q.select("bucket", q_id, q_vec).limit(MAX_BLOCKED_QUERIES + 1).collect()
-    if len(q_rows) > MAX_BLOCKED_QUERIES:
-        return _knn_lsh_joined(queries, corpus, k, q_id, c_id, q_vec, c_vec)
-    by_part: dict = {}
-    for r in q_rows:
-        by_part.setdefault(r["bucket"], []).append(r)
-    per_part = {p: _query_matrix(rows, q_id, q_vec) for p, rows in by_part.items()}
-    candidates = _blocked_candidates_by_signature(
-        corpus, per_part, k, c_id, c_vec, q_id
+    return blocked_topk(
+        q.select(F.col("bucket").alias("key"), q_id, q_vec),
+        corpus, k, LSH_KEY, q_id, c_id, q_vec, c_vec,
     )
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return (
-        candidates.filter(F.col(q_id) != F.col(c_id))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
-
-
-def _knn_lsh_joined(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    c_id: str,
-    q_vec: str,
-    c_vec: str,
-) -> DataFrame:
-    """Distributed fallback for a data-sized query side: broadcast bucket
-    equi-join + JVM expression cosine (the pre-r12 shape; never collects)."""
-    q = attach_signature(queries, q_vec).withColumn("_qn", l2_norm(q_vec))
-    c = attach_signature(corpus, c_vec).withColumn("_cn", l2_norm(c_vec))
-    pairs = c.join(F.broadcast(q), on="bucket").filter(F.col(q_id) != F.col(c_id))
-    sim = F.when(
-        F.col("_qn") * F.col("_cn") != 0,
-        dot(q_vec, c_vec) / (F.col("_qn") * F.col("_cn")),
-    )
-    scored = pairs.select(q_id, c_id, F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
 def knn_lsh_multi(
@@ -502,71 +531,13 @@ def knn_lsh_multi(
     candidate if it collides in ANY table, so recall compounds as
     1-(1-p^r)^L instead of p^r (single table). The recall-vs-candidates
     trade is measured in SCALE.md and property-tested against the exact
-    kernel.
-
-    r12 opt (guide §4.2): same fused sign-and-score corpus pass as
-    knn_lsh with per-batch pair dedup across the L tables (complete — a
-    corpus row lives in exactly one Arrow batch); oversized query sets
-    fall back to the explode + broadcast equi-join shape, whose 100 TB
-    story is the single-table one ×L, never quadratic."""
+    kernel. One query row per (query, table); the kernel signs each corpus
+    row into all L tables (LSH_MULTI_KEY) and scores a colliding pair once."""
     q = attach_signature(queries, q_vec, multi=True)
-    q_rows = (
-        q.select(F.explode("buckets").alias("bucket"), q_id, q_vec)
-        .limit(MAX_BLOCKED_QUERIES + 1)
-        .collect()
+    return blocked_topk(
+        q.select(F.explode("buckets").alias("key"), q_id, q_vec),
+        corpus, k, LSH_MULTI_KEY, q_id, c_id, q_vec, c_vec,
     )
-    if len(q_rows) > MAX_BLOCKED_QUERIES:
-        return _knn_lsh_multi_joined(queries, corpus, k, q_id, c_id, q_vec, c_vec)
-    by_part: dict = {}
-    for r in q_rows:
-        by_part.setdefault(r["bucket"], []).append(r)
-    per_part = {p: _query_matrix(rows, q_id, q_vec) for p, rows in by_part.items()}
-    candidates = _blocked_candidates_by_signature(
-        corpus, per_part, k, c_id, c_vec, q_id, multi=True
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return (
-        candidates.filter(F.col(q_id) != F.col(c_id))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
-
-
-def _knn_lsh_multi_joined(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    c_id: str,
-    q_vec: str,
-    c_vec: str,
-) -> DataFrame:
-    """Distributed fallback for a data-sized query side (pre-r12 shape)."""
-    q = (
-        attach_signature(queries, q_vec, multi=True)
-        .withColumn("bucket", F.explode("buckets"))
-        .drop("buckets")
-        .withColumn("_qn", l2_norm(q_vec))
-    )
-    c = (
-        attach_signature(corpus, c_vec, multi=True)
-        .withColumn("bucket", F.explode("buckets"))
-        .drop("buckets")
-        .withColumn("_cn", l2_norm(c_vec))
-    )
-    pairs = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col(q_id) != F.col(c_id))
-        # OR over tables: a pair colliding in several tables scores once
-        .dropDuplicates([q_id, c_id])
-    )
-    sim = F.when(
-        F.col("_qn") * F.col("_cn") != 0,
-        dot(q_vec, c_vec) / (F.col("_qn") * F.col("_cn")),
-    )
-    scored = pairs.select(q_id, c_id, F.round(sim, 6).alias("sim"))
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc(), F.col(c_id))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
 def knn_ivf_probe(
@@ -588,9 +559,9 @@ def knn_ivf_probe(
 
     Stage shapes: centroid build = explode(dims) + partial+final agg (tiny
     result: |partitions|·dims rows); probe ranking = broadcast of the
-    centroid table against queries; candidate join = equi-join on the
-    partition key, nprobe rows per query — linear everywhere, the knob
-    between knn_partitioned (nprobe=1) and exact."""
+    centroid table against queries; scoring = blocked_topk keyed by the
+    partition, |Q|·nprobe query rows — linear everywhere, the knob between
+    knn_partitioned (nprobe=1) and exact."""
     from nocouncil_etl_spark.functions.numeric import ravg
 
     cexp = corpus.select(
@@ -606,147 +577,9 @@ def knn_ivf_probe(
             ).alias("cv")
         )
     )
-    probes = (
-        queries.crossJoin(F.broadcast(cent.withColumnRenamed(part_col, "_probe")))
-        .withColumn("_csim", F.round(cosine(q_vec, "cv"), 6))
-        .withColumn(
-            "_crk",
-            F.row_number().over(
-                Window.partitionBy(q_id).orderBy(
-                    F.col("_csim").desc_nulls_last(), F.col("_probe")
-                )
-            ),
-        )
-        .filter(F.col("_crk") <= nprobe)
-        .select(q_id, q_vec, F.col("_probe").alias(part_col))
-        .withColumn("_qn", l2_norm(q_vec))
-    )
-    # probe rows are |Q| x nprobe — the same bounded contract as the
-    # blocked kernels; scoring is the per-partition matmul pass (a query
-    # appears in every partition it probes)
-    p_rows = (
-        probes.select(part_col, q_id, q_vec)
-        .limit(MAX_BLOCKED_QUERIES + 1)
-        .collect()
-    )
-    if len(p_rows) > MAX_BLOCKED_QUERIES:
-        # |Q|·nprobe outgrew the task-closure contract: score the probe
-        # assignments with the distributed equi-join path instead
-        # (probes already carries part_col, q_vec, and _qn per probe row)
-        return _knn_part_distributed(
-            probes, corpus, k, part_col, q_id, c_id, q_vec, c_vec
-        )
-    by_part: dict = {}
-    for r in p_rows:
-        by_part.setdefault(r[part_col], []).append(r)
-    per_part = {p: _query_matrix(rows, q_id, q_vec) for p, rows in by_part.items()}
-    candidates = _blocked_candidates_by_part(
-        corpus, per_part, k, part_col, c_id, c_vec, q_id
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return (
-        candidates.filter(F.col(q_id) != F.col(c_id))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-    )
-
-
-# Driver-side cap for the blocked strategy's query matrix. 64k × 64 dims ×
-# 8 B ≈ 32 MB — comfortably shippable in a task closure; beyond that the
-# query side belongs in a distributed strategy, not on the driver.
-MAX_BLOCKED_QUERIES = 65_536
-
-_SIX = Decimal("0.000001")
-
-
-def _round6_like_spark(x: float) -> float:
-    """Twin of Spark's Round(double, 6): HALF_UP on the shortest decimal
-    representation (BigDecimal.valueOf ≡ Python repr). np.round is half-even
-    on the binary value — close, but not the same rule at .5e-7 boundaries."""
-    return float(Decimal(repr(float(x))).quantize(_SIX, rounding=ROUND_HALF_UP))
-
-
-def knn_exact_blocked(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str = "q_id",
-    c_id: str = "c_id",
-    q_vec: str = "q_vec",
-    c_vec: str = "c_vec",
-) -> DataFrame:
-    """Brute-force top-k as blocked matrix multiply — the 100 TB exact-search
-    shape: the (small) query matrix is captured once and shipped to every
-    task; each Arrow batch of corpus vectors scores against ALL queries with
-    one numpy matmul and emits only its per-batch top-k candidates, so the
-    final window ranks ≤ (k+1)·|Q|·n_batches rows instead of |Q|·|C|.
-
-    Result-identical to knn_exact (same oracle), including edges:
-    - the query side is size-guarded (MAX_BLOCKED_QUERIES) — a larger query
-      set fails fast with a pointer at knn_lsh/knn_partitioned instead of
-      OOMing the driver;
-    - zero-norm vectors score null (knn_exact's F.when), ranked last;
-    - emitted sims use Spark's HALF_UP rounding rule, not np.round;
-    - per-batch pruning keeps every candidate within 1e-6 (one rounding
-      ulp at 6dp) of the batch's k-th best, so a candidate that would
-      round-tie into the global top-k is never dropped: anything pruned
-      rounds strictly below ≥ k same-batch survivors."""
-    q_rows = queries.select(q_id, q_vec).limit(MAX_BLOCKED_QUERIES + 1).collect()
-    if len(q_rows) > MAX_BLOCKED_QUERIES:
-        raise ValueError(
-            f"knn_exact_blocked materializes the query side on the driver and "
-            f"got more than {MAX_BLOCKED_QUERIES} query rows; for large query "
-            "sets use knn_lsh or knn_partitioned (bucketed equi-joins that "
-            "never leave the cluster)."
-        )
-    q_ids = np.array([r[q_id] for r in q_rows])
-    qm = np.array([r[q_vec] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(qm, axis=1, keepdims=True)
-    q_zero = (q_norm == 0).ravel()
-    qm = np.divide(qm, q_norm, out=np.zeros_like(qm), where=q_norm != 0)
-
-    def score(batches):
-        for pdf in batches:
-            cm = np.vstack(pdf[c_vec].to_numpy()).astype(np.float64)
-            c_norm = np.linalg.norm(cm, axis=1, keepdims=True)
-            c_zero = (c_norm == 0).ravel()
-            cm = np.divide(cm, c_norm, out=np.zeros_like(cm), where=c_norm != 0)
-            sims = cm @ qm.T  # (batch, |Q|)
-            # undefined cosines (zero norm) rank last, surface as null
-            sims[c_zero, :] = -np.inf
-            sims[:, q_zero] = -np.inf
-            c_ids = pdf[c_id].to_numpy()
-            out_q, out_c, out_s = [], [], []
-            top = min(k + 1, len(c_ids))  # +1 absorbs the self-match
-            for j in range(qm.shape[0]):
-                col = sims[:, j]
-                finite = np.nonzero(np.isfinite(col))[0]
-                if len(finite) >= top:
-                    vals = col[finite]
-                    kth = np.partition(vals, len(vals) - top)[len(vals) - top]
-                    idx = finite[vals >= kth - 1e-6]
-                else:
-                    # fewer than `top` defined sims: keep them all, plus the
-                    # smallest-c_id null rows (the window's null tie-break)
-                    nulls = np.nonzero(~np.isfinite(col))[0]
-                    pick = nulls[np.argsort(c_ids[nulls])[: top - len(finite)]]
-                    idx = np.concatenate([finite, pick])
-                out_q.extend([q_ids[j]] * len(idx))
-                out_c.extend(c_ids[idx])
-                out_s.extend(
-                    _round6_like_spark(s) if np.isfinite(s) else None
-                    for s in col[idx]
-                )
-            yield pd.DataFrame({q_id: out_q, c_id: out_c, "sim": out_s})
-
-    candidates = corpus.select(c_id, c_vec).mapInPandas(
-        score, schema=f"{q_id} long, {c_id} long, sim double"
-    )
-    w = Window.partitionBy(q_id).orderBy(F.col("sim").desc_nulls_last(), F.col(c_id))
-    return (
-        candidates.filter(F.col(q_id) != F.col(c_id))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    return blocked_topk(
+        _probe_cells(queries, cent, part_col, nprobe, q_id, q_vec),
+        corpus, k, part_col, q_id, c_id, q_vec, c_vec,
     )
 
 

@@ -45,49 +45,24 @@ EVAL_K = 10
 
 def _dense_scored(e: DataFrame, n: int) -> DataFrame:
     """(doc_id, c) dense cosine scores against the fixed query vector
-    (vec_id 0), pruned per Arrow batch to the batch top-``n``.
+    (vec_id 0), pruned per Arrow batch to the batch top-``n``: the
+    candidate stage of similarity.blocked_topk (one numpy matmul per batch,
+    1e-6 epsilon guard, HALF_UP rounding, zero-norm-null) with no rank
+    window and no self-filter. The caller's global orderBy/limit ranks the
+    surviving ≤ (n+1)·n_batches rows."""
+    from nocouncil_etl_spark.operators.similarity import (
+        _blocked_candidates,
+        _collect_queries,
+    )
 
-    r12 opt (guide §4.2): the old shape crossJoined the broadcast query
-    vector and evaluated the interpreted-HOF cosine() expression per
-    corpus row; now one blocked numpy pass scores each batch against the
-    single collected query vector and emits only its top-``n`` candidates
-    (same 1e-6 epsilon guard, HALF_UP rounding and zero-norm-null
-    semantics as the knn blocked kernels — the documented ~1-ulp
-    evaluation-order tolerance). The caller's global orderBy/limit ranks
-    the surviving ≤ n·n_batches rows."""
-    import numpy as np
-    import pandas as pd
-
-    from nocouncil_etl_spark.operators.similarity import _emit_batch_topk
-
-    spark = e.sparkSession
-    q_rows = e.filter(F.col("vec_id") == 0).select("embedding").limit(1).collect()
-    if not q_rows:
-        return spark.createDataFrame([], "doc_id long, c double")
-    qm = np.array([q_rows[0]["embedding"]], dtype=np.float64)
-    q_norm = np.linalg.norm(qm, axis=1, keepdims=True)
-    q_zero = (q_norm == 0).ravel()
-    qm = np.divide(qm, q_norm, out=np.zeros_like(qm), where=q_norm != 0)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_norm = np.linalg.norm(cm, axis=1, keepdims=True)
-            c_zero = (c_norm == 0).ravel()
-            cm = np.divide(cm, c_norm, out=np.zeros_like(cm), where=c_norm != 0)
-            sims = cm @ qm.T
-            sims[c_zero, :] = -np.inf
-            sims[:, q_zero] = -np.inf
-            out_q, out_c, out_s = _emit_batch_topk(
-                sims, pdf["vec_id"].to_numpy(), np.zeros(1, dtype=np.int64), n
-            )
-            if out_c:
-                yield pd.DataFrame({"doc_id": out_c, "c": out_s})
-
-    return e.select("vec_id", "embedding").mapInPandas(
-        score, schema="doc_id long, c double"
+    q = e.filter(F.col("vec_id") == 0).select(F.lit(0).alias("q_id"), "embedding")
+    rows = _collect_queries(q.limit(1))
+    if not rows:
+        return e.sparkSession.createDataFrame([], "doc_id long, c double")
+    return (
+        _blocked_candidates(rows, e, n, None, "q_id", "vec_id", "embedding", "embedding")
+        .toDF("q_id", "doc_id", "c")
+        .drop("q_id")
     )
 
 # Shared SQL: per-(doc, query-term) BM25 part as DECIMAL(18,6) — identical

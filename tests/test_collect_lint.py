@@ -125,38 +125,14 @@ WHITELIST: dict[str, tuple[int, str]] = {
     f"{_P}/operators/quantiles.py:ranged_group_rank_cumsum": (
         8192, "(#partitions + #groups)-sized offset table (contiguous "
               "composite ranges), broadcast back"),
-    f"{_P}/operators/similarity.py:knn_exact_blocked": (
-        65_537, "query side, size-guarded at MAX_BLOCKED_QUERIES+1"),
-    f"{_P}/plans/retrieval2.py:_dense_scored": (
-        8, "the single fixed query vector (vec_id 0), limit(1) fetch"),
+    f"{_P}/operators/similarity.py:_collect_queries": (
+        65_537, "keyed query side of the one blocked top-k primitive "
+        "(blocked_topk: |Q|, x L tables for multi-table LSH, x nprobe for "
+        "IVF probes), size-guarded at MAX_BLOCKED_QUERIES+1; over the cap "
+        "it takes the distributed shuffle_hash equi-join fallback"),
     f"{_P}/plans/breadth38.py:vec_triplet_semihard": (
         31, "fixed TRIPLET_ANCHORS=30 probe batch, shipped in the task "
         "closure (r9: anchor-distance pass is one Arrow matmul)"),
-    f"{_P}/operators/similarity.py:knn_partitioned": (
-        65_537, "query side, size-guarded at MAX_BLOCKED_QUERIES+1 (r9: "
-        "partitioned blocked kernel ships per-part query matrices; r10: "
-        "over the cap it falls back to the distributed shuffle_hash join "
-        "instead of raising)"),
-    f"{_P}/operators/similarity.py:knn_ivf_probe": (
-        65_537, "probe rows = |Q| x nprobe, size-guarded at "
-        "MAX_BLOCKED_QUERIES+1 (r9: partitioned blocked kernel; r10: over "
-        "the cap it falls back to the distributed shuffle_hash join)"),
-    f"{_P}/operators/similarity.py:knn_lsh": (
-        65_537, "signed query side, size-guarded at MAX_BLOCKED_QUERIES+1 "
-        "(r12: fused sign-and-score blocked kernel; over the cap it falls "
-        "back to the broadcast bucket equi-join)"),
-    f"{_P}/operators/similarity.py:knn_lsh_multi": (
-        65_537, "query rows x L tables, size-guarded at "
-        "MAX_BLOCKED_QUERIES+1 (r12: fused blocked kernel; over the cap it "
-        "falls back to the exploded broadcast equi-join)"),
-    f"{_P}/operators/kmeans_index.py:search_kmeans_index": (
-        65_537, "probe rows = |Q| x nprobe, size-guarded at "
-        "MAX_BLOCKED_QUERIES+1 (r12: per-cell blocked kernel; over the cap "
-        "it falls back to the cell-keyed equi-join)"),
-    f"{_P}/operators/ann_index.py:knn_from_index": (
-        65_537, "keyed query side (|Q|, x L tables for lsh_multi, x nprobe "
-        "for ivf), size-guarded at MAX_BLOCKED_QUERIES+1 (r12: blocked "
-        "kernel; over the cap it falls back to the broadcast equi-join)"),
     f"{_P}/plans/breadth23.py:vec_knn_hamming_packed": (
         65_537, "packed query codes (|C|/100 rows of 2 longs), size-guarded "
         "at MAX_BLOCKED_QUERIES+1 (r12: per-batch exact top-k pruning; over "

@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -128,40 +129,76 @@ def test_knn_blocked_guards_large_query_side(spark, monkeypatch):
         similarity.knn_exact_blocked(vecs, corpus, k=2)
 
 
-def test_knn_partitioned_falls_back_distributed_over_cap(spark, monkeypatch):
-    """knn_partitioned / knn_ivf_probe over MAX_BLOCKED_QUERIES must NOT
-    fail: they fall back to the distributed shuffle_hash equi-join path,
-    and the fallback's results are identical to the blocked kernel's."""
-    from nocouncil_etl_spark.operators import similarity
+_FALLBACK_CASES = [
+    "partitioned", "ivf_probe", "lsh", "lsh_multi", "kmeans_index",
+    "index_lsh", "index_lsh_multi", "index_ivf",
+]
 
-    vecs = spark.createDataFrame(
-        [(i, i % 3, [float(i % 5) + 0.5, float(i % 7) + 1.0]) for i in range(12)],
-        "q_id long, part int, q_vec array<double>",
-    )
+
+@pytest.mark.parametrize("case", _FALLBACK_CASES)
+def test_knn_falls_back_distributed_over_cap(spark, tmp_path, monkeypatch, case):
+    """Every keyed kNN path over MAX_BLOCKED_QUERIES must NOT fail: it takes
+    blocked_topk's one distributed shuffle_hash equi-join fallback, and the
+    fallback's results are identical to the blocked kernel's. Vectors are
+    three tight 64-dim clusters (so LSH buckets collide) plus a zero vector
+    (null sims ranked last)."""
+    import contextlib
+    import io
+
+    import numpy as np
+
+    from nocouncil_etl_spark.operators import ann_index, kmeans_index, similarity
+
+    rng = np.random.default_rng(3)
+    bases = rng.standard_normal((3, 64))
+    noisy = bases[np.arange(24) % 3] + 0.05 * rng.standard_normal((24, 64))
+    rows = [
+        (i, i % 3, [round(float(x), 6) for x in noisy[i]]) for i in range(24)
+    ] + [(24, 0, [0.0] * 64)]
+    vecs = spark.createDataFrame(rows, "q_id long, part int, q_vec array<double>")
     corpus = vecs.select(
         vecs.part, vecs.q_id.alias("c_id"), vecs.q_vec.alias("c_vec")
     )
+    if case == "kmeans_index":
+        kvecs = vecs.select(vecs.q_id.alias("vec_id"), vecs.q_vec.alias("v"))
+        path = str(tmp_path / "kidx")
+        kmeans_index.publish_kmeans_index(kvecs, 3, 2, path)
+    if case.startswith("index_"):
+        index, cent = ann_index.build_vector_index(corpus)
+    run = {
+        "partitioned": lambda: similarity.knn_partitioned(vecs, corpus, 3, "part"),
+        "ivf_probe": lambda: similarity.knn_ivf_probe(
+            vecs, corpus, 3, "part", nprobe=2
+        ),
+        "lsh": lambda: similarity.knn_lsh(vecs, corpus, 3),
+        "lsh_multi": lambda: similarity.knn_lsh_multi(vecs, corpus, 3),
+        "kmeans_index": lambda: kmeans_index.search_kmeans_index(kvecs, path, 2, 3),
+        "index_lsh": lambda: ann_index.knn_from_index(vecs, index, cent, 3, "lsh"),
+        "index_lsh_multi": lambda: ann_index.knn_from_index(
+            vecs, index, cent, 3, "lsh_multi"
+        ),
+        "index_ivf": lambda: ann_index.knn_from_index(
+            vecs, index, cent, 3, "ivf", nprobe=2
+        ),
+    }[case]
 
-    def run_part():
-        return sorted(
-            (r.q_id, r.c_id, r.sim)
-            for r in similarity.knn_partitioned(
-                vecs, corpus, k=2, part_col="part"
-            ).collect()
-        )
+    def result(df):
+        return sorted(map(tuple, df.select("q_id", "c_id", "sim", "rk").collect()))
 
-    def run_ivf():
-        return sorted(
-            (r.q_id, r.c_id, r.sim)
-            for r in similarity.knn_ivf_probe(
-                vecs, corpus, k=2, part_col="part", nprobe=2
-            ).collect()
-        )
+    def plan(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        return buf.getvalue()
 
-    blocked_part, blocked_ivf = run_part(), run_ivf()
+    blocked = run()
+    assert "ShuffledHashJoin" not in plan(blocked)
+    want = result(blocked)
     monkeypatch.setattr(similarity, "MAX_BLOCKED_QUERIES", 3)
-    assert run_part() == blocked_part
-    assert run_ivf() == blocked_ivf
+    fallback = run()
+    assert "ShuffledHashJoin" in plan(fallback)
+    assert result(fallback) == want
+    assert len(want) > 24
 
 
 def test_knn_blocked_zero_norm_scores_null(spark):

@@ -295,11 +295,20 @@ def test_round6_bloom_join_is_broadcast_hash(spark, sf_dir):
     assert "SortMergeJoin" not in p
 
 
-def test_round6_hamming_scan_is_broadcast_crossjoin(spark, sf_dir):
-    """The binary-hamming scan's ONE allowed join is a broadcast nested
-    loop against the tiny query side — the plan must show the broadcast
-    and must NOT shuffle the packed corpus."""
+def test_round6_hamming_scan_is_broadcast_crossjoin(spark, sf_dir, monkeypatch):
+    """The binary-hamming scan never shuffles the packed corpus into a
+    join. Below MAX_BLOCKED_QUERIES the query codes ride the task closure
+    and the scan is one MapInPandas pass with no join at all; above the cap
+    the ONE allowed join is a broadcast nested loop against the query
+    side."""
+    from nocouncil_etl_spark.operators import similarity
+
     p = plan_of(REGISTRY["vec_knn_hamming_packed"].fn(spark, sf_dir))
-    assert "BroadcastExchange" in p
+    assert "MapInPandas" in p
+    assert "Join" not in p and "CartesianProduct" not in p
+
+    monkeypatch.setattr(similarity, "MAX_BLOCKED_QUERIES", 3)
+    p = plan_of(REGISTRY["vec_knn_hamming_packed"].fn(spark, sf_dir))
+    assert "BroadcastNestedLoopJoin" in p
     assert "SortMergeJoin" not in p
     assert "CartesianProduct" not in p
