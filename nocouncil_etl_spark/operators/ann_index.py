@@ -24,7 +24,8 @@ scores the index keyed by the precomputed columns — no corpus-side
 signature is recomputed (asserted by plan in tests). Incremental
 growth is ``upsert_vector_index``: index only the incoming batch, then
 keep-latest merge by id (the engine twin of collection.add upsert semantics
-at article_vectorize.py:262-266).
+at article_vectorize.py:262-266). Publishing commits through
+operators/centroid_artifact.py's protocol.
 """
 
 from __future__ import annotations
@@ -36,6 +37,11 @@ import numpy as np
 
 from nocouncil_etl_spark.functions.numeric import ravg
 from nocouncil_etl_spark.functions.vectors import as_double, l2_norm
+from nocouncil_etl_spark.operators.centroid_artifact import (
+    corpus_fingerprint,
+    publish,
+    serve,
+)
 from nocouncil_etl_spark.operators.similarity import (
     _MULTI_MAT,
     _PLANES_MAT,
@@ -148,17 +154,24 @@ def upsert_vector_index(
     )
 
 
+def _write_index(index: DataFrame, stage: str, payload: dict) -> dict:
+    """The index parquet lands first, then the centroid sidecar is derived
+    from the WRITTEN files — so the signature pass runs exactly once
+    regardless of how many readers the lineage has (writing index and
+    centroids from the same unpersisted lineage would sign the corpus
+    twice)."""
+    index.write.parquet(f"{stage}/index")
+    stored = index.sparkSession.read.parquet(f"{stage}/index")
+    build_centroids(stored).write.parquet(f"{stage}/centroids")
+    return payload
+
+
 def publish_vector_index(index: DataFrame, path: str) -> tuple[DataFrame, DataFrame]:
-    """Write-once publish: the index parquet lands first, then the centroid
-    sidecar is derived from the PUBLISHED files — so the signature pass runs
-    exactly once regardless of how many readers the lineage has (writing
-    index and centroids from the same unpersisted lineage would sign the
-    corpus twice). Returns the stored (index, centroids)."""
-    spark = index.sparkSession
-    index.write.mode("overwrite").parquet(f"{path}/index")
-    stored = spark.read.parquet(f"{path}/index")
-    build_centroids(stored).write.mode("overwrite").parquet(f"{path}/centroids")
-    return stored, spark.read.parquet(f"{path}/centroids")
+    """Write-once publish of an indexed frame. Its manifest carries no
+    corpus fingerprint, so serve_vector_index never counts it as a hit.
+    Returns the stored (index, centroids)."""
+    publish(path, lambda stage: _write_index(index, stage, {}))
+    return read_vector_index(index.sparkSession, path)
 
 
 def read_vector_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -166,20 +179,6 @@ def read_vector_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFr
         spark.read.parquet(f"{path}/index"),
         spark.read.parquet(f"{path}/centroids"),
     )
-
-
-def _corpus_fingerprint(corpus: DataFrame, id_col: str) -> dict:
-    """Cheap freshness probe: one single-column aggregate (count + id sum/max
-    over parquet footers/one narrow column). Production pins an artifact
-    VERSION instead (the reference ships a dated tarball —
-    sample_cron_job.sh:10); the probe exists so the correctness gate can
-    never serve a stale artifact when the underlying test corpus changes."""
-    row = corpus.select(
-        F.count("*").alias("n"),
-        F.sum(F.col(id_col).cast("long")).alias("s"),
-        F.max(F.col(id_col).cast("long")).alias("m"),
-    ).first()
-    return {"n": row["n"], "s": int(row["s"] or 0), "m": int(row["m"] or 0)}
 
 
 def serve_vector_index(
@@ -191,32 +190,21 @@ def serve_vector_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Publish-if-absent serving: the nightly-build / query-time split of the
     reference's cron (build chroma_db once, serve from the artifact). First
-    call pays the signature pass and writes the artifact + a manifest;
-    subsequent calls validate the manifest against a cheap corpus
-    fingerprint and serve straight from parquet — the vectors are never
-    re-signed."""
-    import json
-    import os
-
-    spark = corpus.sparkSession
-    fp = _corpus_fingerprint(corpus, id_col)
-    mf_path = os.path.join(path, "manifest.json")
-    if os.path.isfile(mf_path):
-        try:
-            with open(mf_path) as fh:
-                stored_fp = json.load(fh)
-        except (OSError, ValueError):
-            stored_fp = None
-        if stored_fp == fp:
-            return read_vector_index(spark, path)
-    idx, cent = publish_vector_index(
-        index_vectors(corpus, id_col, vec_col, meta_cols=meta_cols), path
+    call pays the signature pass and publishes the artifact; subsequent
+    calls validate the manifest against a cheap corpus fingerprint and
+    serve straight from parquet — the vectors are never re-signed.
+    Production pins an artifact VERSION instead (the reference ships a
+    dated tarball — sample_cron_job.sh:10); the probe exists so the
+    correctness gate can never serve a stale artifact."""
+    key = {"fp": corpus_fingerprint(corpus, id_col)}
+    serve(
+        path,
+        key,
+        lambda stage: _write_index(
+            index_vectors(corpus, id_col, vec_col, meta_cols=meta_cols), stage, key
+        ),
     )
-    tmp = mf_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(fp, fh)
-    os.replace(tmp, mf_path)
-    return idx, cent
+    return read_vector_index(corpus.sparkSession, path)
 
 
 def knn_from_index(

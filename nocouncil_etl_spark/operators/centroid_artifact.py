@@ -1,15 +1,30 @@
-"""Publish-once / serve-many trained k-means centroids.
+"""Publish-once / serve-many artifacts: the one commit protocol, plus the
+trained k-means centroid artifact.
 
-The round-5 scale gap: ``dedup_semantic_centroid`` and
-``vec_knn_index_kmeans`` retrained Lloyd's k-means inside every query
-invocation. Training is the expensive, batch-time step; at 100 TB you train
-once and serve many times — the reference itself is persistent-index shaped
-(vectorize.py:119-123 builds Chroma's HNSW once on disk;
-sample_cron_job.sh:10 ships the artifact tarball to serving). This module is
-the trained-centroid twin of operators/ann_index.py's
-publish/validate/read pattern:
+Training and index builds are the expensive, batch-time steps; at 100 TB
+you build once and serve many times — the reference itself is
+persistent-index shaped (vectorize.py:119-123 builds Chroma's HNSW once on
+disk; sample_cron_job.sh:10 ships the artifact tarball to serving). Three
+artifact kinds share this module's protocol: the centroids below,
+operators/kmeans_index.py's trained-IVF index and operators/ann_index.py's
+materialized vector index.
+
+**Commit protocol.** ``publish(path, write)`` runs ``write(stage)`` into a
+fresh sibling directory ``<path>.stage-<token>`` (same filesystem; the name
+never starts with ``_``/``.``, which Hadoop would treat as hidden), writes
+``manifest.json`` LAST inside it, then swaps it in: the live directory is
+renamed aside, the stage renamed onto ``path``, the old copy removed. If
+anything raises before the swap the stage is removed and the live artifact
+is untouched — a manifest never blesses half-written data, and between the
+two renames a reader sees no artifact at all (it republishes or refuses).
+``serve(path, key, write)`` is the one publish-if-absent check: a hit is a
+stored manifest whose fields equal every field of ``key``; anything else
+publishes. Callers re-read ``path`` after the swap, never the stage.
+
+The centroid artifact:
 
   {path}/kcentroids/    parquet (cid, cv array<long>) — the pinned matrix
+  {path}/assignments/   parquet (id, cid) — serve_assignments only
   {path}/manifest.json  cheap corpus fingerprint + training params
 
 ``serve_centroids`` validates the manifest against a one-aggregate corpus
@@ -25,17 +40,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.operators.kmeans import kmeans_fit
+from nocouncil_etl_spark.operators.kmeans import assign_l2, kmeans_fit
 
 
 def scratch_path(sf_dir: str, name: str) -> str:
-    """Repo-local artifact scratch dir keyed by (artifact name, sf tag) —
-    the _kidx_scratch convention, shared so every artifact query agrees."""
+    """Repo-local artifact scratch dir keyed by (artifact name, sf tag), so
+    every artifact query agrees and concurrent scales never collide
+    (.scratch/ is gitignored)."""
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
@@ -44,9 +63,9 @@ def scratch_path(sf_dir: str, name: str) -> str:
 
 
 def corpus_fingerprint(points: DataFrame, id_col: str) -> dict:
-    """One single-column aggregate (count + id sum/max) — the
-    ann_index._corpus_fingerprint shape. Cheap relative to training and
-    sufficient for the test surface's deterministic corpora."""
+    """Cheap freshness probe: one single-column aggregate (count + id
+    sum/max). Cheap relative to training and sufficient for the test
+    surface's deterministic corpora."""
     row = points.select(
         F.count("*").alias("n"),
         F.sum(F.col(id_col).cast("long")).alias("s"),
@@ -56,33 +75,84 @@ def corpus_fingerprint(points: DataFrame, id_col: str) -> dict:
 
 
 def write_manifest(path: str, payload: dict) -> None:
-    """Atomic manifest write (tmp + rename), AFTER the data files land —
-    a crash mid-publish leaves a missing/stale manifest, never a manifest
-    that blesses half-written parquet."""
-    os.makedirs(path, exist_ok=True)
-    mf = os.path.join(path, "manifest.json")
-    tmp = mf + ".tmp"
-    with open(tmp, "w") as fh:
+    """Write ``manifest.json`` into a directory — publish's stage, so the
+    rename swap, not this write, makes the manifest visible."""
+    with open(os.path.join(path, "manifest.json"), "w") as fh:
         json.dump(payload, fh, sort_keys=True)
-    os.replace(tmp, mf)
 
 
 def read_manifest(path: str) -> dict | None:
-    mf = os.path.join(path, "manifest.json")
-    if not os.path.isfile(mf):
-        return None
     try:
-        with open(mf) as fh:
+        with open(os.path.join(path, "manifest.json")) as fh:
             return json.load(fh)
     except (OSError, ValueError):
         return None
 
 
-def _centroid_rows_to_matrix(rows) -> tuple[np.ndarray, np.ndarray]:
-    rows = sorted(rows, key=lambda r: r["cid"])
+def _matches(path: str, key: dict) -> bool:
+    mf = read_manifest(path)
+    return isinstance(mf, dict) and all(mf.get(f) == v for f, v in key.items())
+
+
+def publish(path: str, write: Callable[[str], dict]) -> dict:
+    """Commit ``write(stage) -> manifest payload`` onto ``path`` (module
+    docstring: stage, manifest last, rename swap). Returns the payload."""
+    path = os.path.normpath(path)
+    token = uuid.uuid4().hex[:12]
+    stage = f"{path}.stage-{token}"
+    os.makedirs(stage)
+    try:
+        payload = write(stage)
+        write_manifest(stage, payload)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    old = f"{path}.old-{token}"
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
+    return payload
+
+
+def serve(path: str, key: dict, write: Callable[[str], dict]) -> None:
+    """Publish-if-absent: keep the artifact when its manifest carries every
+    field of ``key``; otherwise ``publish(path, write)``."""
+    if not _matches(path, key):
+        publish(path, write)
+
+
+def write_centroids(
+    spark: SparkSession, cent_ids: np.ndarray, cm: np.ndarray, path: str
+) -> None:
+    """The one centroid-matrix writer: ``{path}/kcentroids`` as
+    (cid long, cv array<long>)."""
+    spark.createDataFrame(
+        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(cent_ids)],
+        "cid long, cv array<long>",
+    ).write.parquet(f"{path}/kcentroids")
+
+
+def read_centroids(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
+    """Load the pinned centroid matrix (k rows — driver-trivial by the
+    MAX_CENTROIDS contract that guarded training), sorted by cid."""
+    rows = sorted(
+        spark.read.parquet(f"{path}/kcentroids").collect(), key=lambda r: r["cid"]
+    )
     ids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cm = np.array([r["cv"] for r in rows], dtype=np.int64)
     return ids, cm
+
+
+def _trainer(
+    points: DataFrame, k: int, iters: int, id_col: str, q_col: str, payload: dict
+):
+    def write(stage: str) -> dict:
+        cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col, q_col=q_col)
+        write_centroids(points.sparkSession, cent_ids, cm, stage)
+        return payload
+
+    return write
 
 
 def publish_centroids(
@@ -95,24 +165,11 @@ def publish_centroids(
     fingerprint: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Train fixed-k integer Lloyd's k-means on ``points`` (quantized
-    vectors) and pin the result: centroid parquet first, manifest last.
-    Returns (cent_ids, k×dim int64 matrix)."""
-    spark = points.sparkSession
-    cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col, q_col=q_col)
-    spark.createDataFrame(
-        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(cent_ids)],
-        "cid long, cv array<long>",
-    ).write.mode("overwrite").parquet(f"{path}/kcentroids")
+    vectors) and pin the result. Returns (cent_ids, k×dim int64 matrix)."""
     fp = fingerprint if fingerprint is not None else corpus_fingerprint(points, id_col)
-    write_manifest(path, {"fp": fp, "k": k, "iters": iters})
-    return cent_ids, cm
-
-
-def read_centroids(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
-    """Load the pinned centroid matrix (k rows — driver-trivial by the
-    MAX_CENTROIDS contract that guarded training)."""
-    rows = spark.read.parquet(f"{path}/kcentroids").collect()
-    return _centroid_rows_to_matrix(rows)
+    payload = {"fp": fp, "k": k, "iters": iters}
+    publish(path, _trainer(points, k, iters, id_col, q_col, payload))
+    return read_centroids(points.sparkSession, path)
 
 
 def serve_centroids(
@@ -123,17 +180,13 @@ def serve_centroids(
     id_col: str = "vec_id",
     q_col: str = "xq",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Publish-if-absent serving: validate the manifest against the corpus
-    fingerprint + params; on a hit, load the pinned matrix (k-row parquet
-    read, NO training); on a miss, train and publish. The warm path is the
-    100 TB path — training cost is paid once per corpus version."""
-    fp = corpus_fingerprint(points, id_col)
-    mf = read_manifest(path)
-    if mf is not None and mf.get("fp") == fp and mf.get("k") == k and mf.get("iters") == iters:
-        return read_centroids(points.sparkSession, path)
-    return publish_centroids(
-        points, k, iters, path, id_col=id_col, q_col=q_col, fingerprint=fp
-    )
+    """Publish-if-absent serving: on a manifest hit (fingerprint + params),
+    load the pinned matrix (k-row parquet read, NO training); on a miss,
+    train and publish. The warm path is the 100 TB path — training cost is
+    paid once per corpus version."""
+    key = {"fp": corpus_fingerprint(points, id_col), "k": k, "iters": iters}
+    serve(path, key, _trainer(points, k, iters, id_col, q_col, key))
+    return read_centroids(points.sparkSession, path)
 
 
 def serve_assignments(
@@ -145,42 +198,33 @@ def serve_assignments(
     to_quantized=None,
 ) -> DataFrame:
     """Publish-if-absent serving of the CORPUS-SIDE ASSIGNMENTS (id, cid)
-    alongside the pinned centroids (r12 opt, the r11 verdict's serve-path
-    item): assignments against pinned centroids over an unchanged corpus
-    are themselves immutable — exactly the property that lets the
-    kmeans_index artifact pin each vector's cell — so the warm path is ONE
-    fingerprint aggregate over ``raw`` plus an assignments parquet read:
-    no quantization pass, no corpus-wide assignment kernel, no training.
+    alongside the pinned centroids: assignments against pinned centroids
+    over an unchanged corpus are themselves immutable — exactly the
+    property that lets the kmeans_index artifact pin each vector's cell —
+    so the warm path is ONE fingerprint aggregate over ``raw`` plus an
+    assignments parquet read: no quantization pass, no corpus-wide
+    assignment kernel, no training.
 
     ``raw`` carries (id_col, raw vector); ``to_quantized`` maps it to the
     (id_col, xq) frame training/assignment run on, and is only invoked on
     a publish (cold) call. The manifest gains an ``assignments`` flag so a
-    pre-r12 artifact (centroids only) republishes instead of serving a
-    missing parquet. Cells are written centroids-then-assignments with the
-    manifest last, preserving the crash-safe publish order."""
-    from nocouncil_etl_spark.operators.kmeans import assign_l2
-
+    centroid-only artifact republishes instead of serving a missing
+    parquet; when its fingerprint and params still validate, the republish
+    reuses its pinned centroids (assignment only, no retraining)."""
     spark = raw.sparkSession
-    fp = corpus_fingerprint(raw, id_col)
-    mf = read_manifest(path)
-    if (
-        mf is not None
-        and mf.get("fp") == fp
-        and mf.get("k") == k
-        and mf.get("iters") == iters
-        and mf.get("assignments")
-    ):
-        return spark.read.parquet(f"{path}/assignments")
-    points = to_quantized(raw)
-    cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col)
-    spark.createDataFrame(
-        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(cent_ids)],
-        "cid long, cv array<long>",
-    ).write.mode("overwrite").parquet(f"{path}/kcentroids")
-    assign_l2(points, cent_ids, cm, id_col=id_col).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/assignments")
-    write_manifest(
-        path, {"fp": fp, "k": k, "iters": iters, "assignments": True}
-    )
+    key = {"fp": corpus_fingerprint(raw, id_col), "k": k, "iters": iters}
+
+    def write(stage: str) -> dict:
+        points = to_quantized(raw)
+        if _matches(path, key):
+            cent_ids, cm = read_centroids(spark, path)
+        else:
+            cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col)
+        write_centroids(spark, cent_ids, cm, stage)
+        assign_l2(points, cent_ids, cm, id_col=id_col).write.parquet(
+            f"{stage}/assignments"
+        )
+        return {**key, "assignments": True}
+
+    serve(path, {**key, "assignments": True}, write)
     return spark.read.parquet(f"{path}/assignments")

@@ -3,15 +3,16 @@
 The trained sibling of operators/ann_index.py (whose coarse cells are
 data-independent LSH signatures). Here the coarse quantizer is a fixed-k
 integer k-means trained on the corpus (operators/kmeans.py), and the whole
-artifact is pinned to storage — the reference's build-nightly/serve-always
-split (vectorize.py:119-123 builds the HNSW once; sample_cron_job.sh:10
-ships it):
+artifact is pinned to storage through operators/centroid_artifact.py's
+commit protocol — the reference's build-nightly/serve-always split
+(vectorize.py:119-123 builds the HNSW once; sample_cron_job.sh:10 ships
+it):
 
   {path}/index/         parquet (vec_id, v array<double>, cid) — each vector
                         with its PINNED coarse cell
   {path}/kcentroids/    parquet (cid, cv array<long>) — the quantized
                         centroid matrix (k rows)
-  {path}/manifest.json  corpus fingerprint + {k, iters}
+  {path}/manifest.json  corpus fingerprint + {k, iters, auto}
 
 Because cells are pinned after training, incremental upserts assign the
 INCOMING batch against the stored centroids (one Arrow pass over the batch
@@ -33,8 +34,10 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.operators.centroid_artifact import (
     corpus_fingerprint,
-    read_manifest,
-    write_manifest,
+    publish,
+    read_centroids,
+    serve,
+    write_centroids,
 )
 from nocouncil_etl_spark.operators.kmeans import (
     MAX_CENTROIDS,
@@ -66,6 +69,29 @@ def auto_nlist(n: int) -> int:
     return int(min(MAX_CENTROIDS, 2 ** round(math.log2(math.sqrt(n)))))
 
 
+def _builder(
+    e: DataFrame, k: int | None, iters: int, id_col: str, vec_col: str, fp: dict
+):
+    """The artifact writer: quantize, train the coarse quantizer (``k=None``
+    sizes nlist from the corpus count, auto_nlist ≈ √n), pin every
+    vector's cell, write index + centroid sidecar. The payload records the
+    resolved k and the auto flag so serving can validate."""
+
+    def write(stage: str) -> dict:
+        eq = quantize_vectors(e, vec_col, "xq").select(id_col, "xq").persist()
+        try:
+            kk = auto_nlist(eq.count()) if k is None else k
+            cent_ids, cm = kmeans_fit(eq, kk, iters, id_col=id_col)
+            cells = assign_l2(eq, cent_ids, cm, id_col=id_col)
+            e.join(cells, id_col).write.parquet(f"{stage}/index")
+            write_centroids(e.sparkSession, cent_ids, cm, stage)
+        finally:
+            eq.unpersist()
+        return {"fp": fp, "k": kk, "iters": iters, "auto": k is None}
+
+    return write
+
+
 def publish_kmeans_index(
     e: DataFrame,
     k: int | None,
@@ -74,51 +100,18 @@ def publish_kmeans_index(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> int:
-    """Full build: quantize, train the coarse quantizer, pin every vector's
-    cell, write index + centroid sidecar, manifest last. ``e`` carries
-    (id_col, vec_col array<double>). ``k=None`` sizes nlist from the
-    corpus count at build time (auto_nlist ≈ √n, power-of-two bucketed);
-    the manifest records both the resolved k and the auto flag so serving
-    can validate. Returns the resolved k."""
-    spark = e.sparkSession
-    eq = quantize_vectors(e, vec_col, "xq").select(id_col, "xq").persist()
-    try:
-        auto = k is None
-        if auto:
-            k = auto_nlist(eq.count())
-        cent_ids, cm = kmeans_fit(eq, k, iters, id_col=id_col)
-        cells = assign_l2(eq, cent_ids, cm, id_col=id_col)
-        e.join(cells, id_col).write.mode("overwrite").parquet(f"{path}/index")
-        spark.createDataFrame(
-            [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(cent_ids)],
-            "cid long, cv array<long>",
-        ).write.mode("overwrite").parquet(f"{path}/kcentroids")
-        write_manifest(
-            path,
-            {
-                "fp": corpus_fingerprint(e, id_col),
-                "k": k,
-                "iters": iters,
-                "auto": auto,
-            },
-        )
-        return k
-    finally:
-        eq.unpersist()
+    """Full build (``_builder``) committed onto ``path``. ``e`` carries
+    (id_col, vec_col array<double>). Returns the resolved k."""
+    fp = corpus_fingerprint(e, id_col)
+    return publish(path, _builder(e, k, iters, id_col, vec_col, fp))["k"]
 
 
 def read_kmeans_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, np.ndarray, np.ndarray]:
     """(stored index frame, cent_ids, k×dim centroid matrix) straight from
-    the artifact — the centroid side is k rows (MAX_CENTROIDS-bounded)."""
-    stored = spark.read.parquet(f"{path}/index")
-    rows = sorted(
-        spark.read.parquet(f"{path}/kcentroids").collect(), key=lambda r: r["cid"]
-    )
-    ids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cm = np.array([r["cv"] for r in rows], dtype=np.int64)
-    return stored, ids, cm
+    the artifact."""
+    return (spark.read.parquet(f"{path}/index"), *read_centroids(spark, path))
 
 
 def serve_kmeans_index(
@@ -136,17 +129,8 @@ def serve_kmeans_index(
     same corpus count, hence the same auto_nlist, so a warm serve never
     recounts, never retrains."""
     fp = corpus_fingerprint(e, id_col)
-    mf = read_manifest(path)
-    k_ok = mf is not None and (
-        mf.get("auto", False) if k is None else mf.get("k") == k
-    )
-    if not (
-        mf is not None
-        and mf.get("fp") == fp
-        and k_ok
-        and mf.get("iters") == iters
-    ):
-        publish_kmeans_index(e, k, iters, path, id_col=id_col, vec_col=vec_col)
+    key = {"fp": fp, "iters": iters, **({"auto": True} if k is None else {"k": k})}
+    serve(path, key, _builder(e, k, iters, id_col, vec_col, fp))
     return read_kmeans_index(e.sparkSession, path)
 
 

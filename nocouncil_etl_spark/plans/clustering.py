@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
+from nocouncil_etl_spark.operators.centroid_artifact import scratch_path
 from nocouncil_etl_spark.operators.kmeans import (
     OFFSET,
     QUANT,
@@ -193,16 +194,6 @@ _COS_AB_IDX = (
 )
 
 
-def _kidx_scratch(sf_dir: str) -> str:
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(repo, ".scratch", f"vec_kidx_{tag}")
-
-
 # Shared by the build twin and the serve twin — identical results by
 # construction (same recurrence, same pinned cells, same ranking), so one
 # oracle string checks both.
@@ -267,7 +258,7 @@ def vec_knn_index_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _embeddings(spark, sf_dir)
-    path = _kidx_scratch(sf_dir)
+    path = scratch_path(sf_dir, "vec_kidx")
     publish_kmeans_index(e, KC, KC_ITERS, path)
     return search_kmeans_index(
         e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK
@@ -293,7 +284,7 @@ def vec_knn_index_kmeans_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _embeddings(spark, sf_dir)
-    path = _kidx_scratch(sf_dir) + "_serve"
+    path = scratch_path(sf_dir, "vec_kidx") + "_serve"
     serve_kmeans_index(e, KC, KC_ITERS, path)
     return search_kmeans_index(
         e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK
@@ -317,13 +308,14 @@ def vec_knn_index_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantize → k-means train → pin cells → write index + centroid
     sidecar + manifest) and returns the pinned per-cell populations read
     back from the artifact — the build's verifiable output. Every call
-    REBUILDS (mode=overwrite), so a bench sample is a true nightly-build
-    cost; the serving cost lives in vec_knn_index_kmeans_serve. Oracle:
-    the same unrolled k-means recurrence, reduced to cell histograms."""
+    REBUILDS (a fresh commit swapped over the last one), so a bench sample
+    is a true nightly-build cost; the serving cost lives in
+    vec_knn_index_kmeans_serve. Oracle: the same unrolled k-means
+    recurrence, reduced to cell histograms."""
     from nocouncil_etl_spark.operators.kmeans_index import publish_kmeans_index
 
     e = _embeddings(spark, sf_dir)
-    path = _kidx_scratch(sf_dir) + "_build"
+    path = scratch_path(sf_dir, "vec_kidx") + "_build"
     publish_kmeans_index(e, KC, KC_ITERS, path)
     return (
         spark.read.parquet(f"{path}/index")
@@ -386,7 +378,7 @@ def vec_knn_index_kmeans_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _embeddings(spark, sf_dir)
-    path = _kidx_scratch(sf_dir) + "_auto"
+    path = scratch_path(sf_dir, "vec_kidx") + "_auto"
     serve_kmeans_index(e, None, KC_ITERS, path)
     return search_kmeans_index(
         e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.vectors import cosine, dot, l2_norm
 from nocouncil_etl_spark.io import load
+from nocouncil_etl_spark.operators.centroid_artifact import scratch_path
 from nocouncil_etl_spark.operators.similarity import (
     HYPERPLANES,
     HYPERPLANES_MULTI,
@@ -294,16 +295,6 @@ def vec_knn_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("q_id", "c_id", "sim", "rk")
 
 
-def _index_scratch(sf_dir: str) -> str:
-    """Repo-local scratch path for the materialized index artifact, keyed by
-    sf so concurrent scales never collide (.scratch/ is gitignored)."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(repo, ".scratch", f"vec_index_{tag}")
-
-
 @query("vec_knn_from_index", oracle=f"""
 WITH b AS ({_BUCKET_SQL}),
 scored AS (
@@ -331,7 +322,7 @@ def vec_knn_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     queries, corpus = _query_corpus(spark, sf_dir)
-    path = _index_scratch(sf_dir)
+    path = scratch_path(sf_dir, "vec_index")
     idx, cent = publish_vector_index(
         index_vectors(corpus.drop("label"), "c_id", "c_vec"), path
     )
@@ -391,7 +382,7 @@ def vec_knn_from_index_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     queries, corpus = _query_corpus(spark, sf_dir)
-    path = _index_scratch(sf_dir) + "_ivf"
+    path = scratch_path(sf_dir, "vec_index") + "_ivf"
     idx, cent = publish_vector_index(
         index_vectors(corpus.drop("label"), "c_id", "c_vec"), path
     )
@@ -427,9 +418,8 @@ def vec_knn_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     queries, corpus = _query_corpus(spark, sf_dir)
-    idx, cent = serve_vector_index(
-        corpus.drop("label"), _index_scratch(sf_dir) + "_serve", "c_id", "c_vec"
-    )
+    path = scratch_path(sf_dir, "vec_index") + "_serve"
+    idx, cent = serve_vector_index(corpus.drop("label"), path, "c_id", "c_vec")
     return knn_from_index(
         queries.drop("label"), idx, cent, K, strategy="lsh"
     ).select("q_id", "c_id", "sim", "rk")
@@ -464,7 +454,7 @@ def vec_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, corpus = _query_corpus(spark, sf_dir)
     idx, cent = serve_vector_index(
         corpus,
-        _index_scratch(sf_dir) + "_meta",
+        scratch_path(sf_dir, "vec_index") + "_meta",
         "c_id",
         "c_vec",
         meta_cols=("label",),

@@ -227,6 +227,24 @@ def test_serve_publishes_once_then_reads_artifact(spark, corpus, tmp_path):
     assert _artifact_files(path) != files1  # stale manifest → republished
 
 
+def test_plain_publish_onto_served_path_invalidates_manifest(
+    spark, corpus, tmp_path
+):
+    """publish_vector_index (Engine.build_index) over a served path must
+    not leave the served corpus's manifest blessing its data: the next
+    serve of the original corpus republishes and returns every row."""
+    from nocouncil_etl_spark.operators.ann_index import serve_vector_index
+
+    a = corpus.filter(F.col("c_id") < 200)
+    path = str(tmp_path / "served")
+    serve_vector_index(a, path, "c_id", "c_vec")
+    publish_vector_index(
+        index_vectors(a.filter(F.col("c_id") < 100), "c_id", "c_vec"), path
+    )
+    idx, _ = serve_vector_index(a, path, "c_id", "c_vec")
+    assert idx.count() == 200
+
+
 def test_filtered_search_pushes_predicate_into_index_scan(spark, corpus, tmp_path):
     """Hybrid filtered ANN: metadata carried in the artifact (meta_cols) lets
     the predicate reach the index parquet scan as a pushed filter — no join

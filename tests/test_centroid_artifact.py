@@ -7,10 +7,13 @@ with the same pinned centroids.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.operators import ann_index as ai
 from nocouncil_etl_spark.operators import centroid_artifact as ca
 from nocouncil_etl_spark.operators import kmeans_index as ki
 from nocouncil_etl_spark.operators.kmeans import quantize_vectors
@@ -133,16 +136,86 @@ def test_serve_assignments_warm_never_quantizes_or_trains(
     assert sorted(first) == sorted(second)
 
 
-def test_serve_assignments_rejects_centroid_only_artifact(vecs, tmp_path):
+def test_serve_assignments_rejects_centroid_only_artifact(
+    vecs, tmp_path, monkeypatch
+):
     """A pre-r12 artifact (centroids, no assignments parquet) must
-    republish rather than serve a missing file."""
+    republish rather than serve a missing file — and, since its
+    fingerprint and params still validate, the republish assigns against
+    the pinned centroids instead of retraining."""
     path = str(tmp_path / "old")
     ca.serve_centroids(_eq(vecs), 4, 2, path)  # old-format manifest
+    pinned_ids, pinned_cm = ca.read_centroids(vecs.sparkSession, path)
+
+    def boom(*a, **k):  # pragma: no cover
+        raise AssertionError("kmeans_fit ran on an assignments-only miss")
+
+    monkeypatch.setattr(ca, "kmeans_fit", boom)
     got = ca.serve_assignments(
         vecs, 4, 2, path, to_quantized=lambda d: _eq(d)
     )
     assert got.count() == 120
     assert ca.read_manifest(path)["assignments"] is True
+    ids, cm = ca.read_centroids(vecs.sparkSession, path)
+    assert (ids == pinned_ids).all() and (cm == pinned_cm).all()
+
+
+# --------------------------------------------------------------------------
+# crash-safe commit protocol (one publisher for every artifact kind)
+# --------------------------------------------------------------------------
+
+
+def _vector_kind(d, path):
+    return ai.serve_vector_index(d, path, "vec_id", "v")[0].select("id", "bucket")
+
+
+_KINDS = {
+    # kind -> (serve the artifact and return a result frame, the build step
+    # a warm serve must never reach)
+    "vector_index": (_vector_kind, (ai, "index_vectors")),
+    "kmeans_index": (
+        lambda d, path: ki.serve_kmeans_index(d, 4, 2, path)[0],
+        (ki, "kmeans_fit"),
+    ),
+    "assignments": (
+        lambda d, path: ca.serve_assignments(d, 4, 2, path, to_quantized=_eq),
+        (ca, "kmeans_fit"),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_crash_before_manifest_keeps_previous_artifact(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A republish that dies between its data write and its manifest write
+    must leave the previous artifact serving the previous corpus: no
+    training on the next serve, identical results, no staging sibling."""
+    serve_fn, (mod, build_fn) = _KINDS[kind]
+    rng = np.random.default_rng(5)
+    vecs = spark.createDataFrame(  # 64 dims: the LSH planes' width
+        [
+            (i, [float(round(x, 6)) for x in rng.standard_normal(64)])
+            for i in range(120)
+        ],
+        "vec_id long, v array<double>",
+    )
+    path = str(tmp_path / "art")
+    want = sorted(serve_fn(vecs, path).collect())
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the manifest")
+
+    monkeypatch.setattr(ca, "write_manifest", crash)
+    with pytest.raises(RuntimeError, match="crash before the manifest"):
+        serve_fn(vecs.filter(F.col("vec_id") < 60), path)
+
+    def boom(*a, **k):  # pragma: no cover
+        raise AssertionError(f"{build_fn} ran after the failed republish")
+
+    monkeypatch.setattr(mod, build_fn, boom)
+    assert sorted(serve_fn(vecs, path).collect()) == want
+    assert os.listdir(tmp_path) == ["art"]
 
 
 # --------------------------------------------------------------------------

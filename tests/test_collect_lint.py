@@ -51,7 +51,6 @@ _P = "nocouncil_etl_spark"
 # single-scalar-normalizer contract. Cap 8 catches any drift to
 # data-sized frames.
 _SCALAR = (
-    f"{_P}/operators/ann_index.py:_corpus_fingerprint",
     f"{_P}/operators/centroid_artifact.py:corpus_fingerprint",
     f"{_P}/operators/graph.py:hits_fixed_point",
     f"{_P}/operators/treereduce.py:tree_reduce",
@@ -112,8 +111,6 @@ WHITELIST: dict[str, tuple[int, str]] = {
         262_144,
         "k*dim Lloyd's-update rows (fused _assign_stats partials reduce to "
         "the same k*dim means), k <= MAX_CENTROIDS, dim fixed"),
-    f"{_P}/operators/kmeans_index.py:read_kmeans_index": (
-        4096, "k-row centroid sidecar, k <= MAX_CENTROIDS"),
     f"{_P}/operators/pq.py:pq_seed": (
         4096, "M subspace seeds, M fixed by codec layout"),
     f"{_P}/operators/pq.py:pq_update_pass": (
