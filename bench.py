@@ -234,6 +234,7 @@ def main() -> None:
                 "calibration_after_sec": calibration_after,
                 "calibration_floor_sec": CAL_QUIET_FLOOR_SEC,
                 "degraded_host": degraded_host,
+                "transient_contended": transient_contended,
                 # total scaled by quiet-floor/warm-probe: a rough
                 # host-speed-normalized number for cross-round comparison
                 # when degraded_host is true (the raw total stays `value`)

@@ -37,6 +37,7 @@ import numpy as np
 
 from nocouncil_etl_spark.functions.numeric import ravg
 from nocouncil_etl_spark.functions.vectors import as_double, l2_norm
+from nocouncil_etl_spark.io import read_parquet
 from nocouncil_etl_spark.operators.centroid_artifact import (
     corpus_fingerprint,
     publish,
@@ -161,7 +162,7 @@ def _write_index(index: DataFrame, stage: str, payload: dict) -> dict:
     centroids from the same unpersisted lineage would sign the corpus
     twice)."""
     index.write.parquet(f"{stage}/index")
-    stored = index.sparkSession.read.parquet(f"{stage}/index")
+    stored = read_parquet(index.sparkSession, f"{stage}/index")
     build_centroids(stored).write.parquet(f"{stage}/centroids")
     return payload
 
@@ -176,8 +177,8 @@ def publish_vector_index(index: DataFrame, path: str) -> tuple[DataFrame, DataFr
 
 def read_vector_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     return (
-        spark.read.parquet(f"{path}/index"),
-        spark.read.parquet(f"{path}/centroids"),
+        read_parquet(spark, f"{path}/index"),
+        read_parquet(spark, f"{path}/centroids"),
     )
 
 
@@ -191,7 +192,7 @@ def serve_vector_index(
     """Publish-if-absent serving: the nightly-build / query-time split of the
     reference's cron (build chroma_db once, serve from the artifact). First
     call pays the signature pass and publishes the artifact; subsequent
-    calls validate the manifest against a cheap corpus fingerprint and
+    calls validate the manifest against the job-free corpus fingerprint and
     serve straight from parquet — the vectors are never re-signed.
     Production pins an artifact VERSION instead (the reference ships a
     dated tarball — sample_cron_job.sh:10); the probe exists so the

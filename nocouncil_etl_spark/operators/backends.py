@@ -45,7 +45,6 @@ CONF_PREFIX = "spark.nocouncil_etl_spark."
 EMBED_HASH = "hash"
 EMBED_ST = "sentence_transformers"
 ST_MODEL = "sentence-transformers/all-MiniLM-L6-v2"  # 384-d, vectorize.py:114
-ST_DIM = 384
 
 TRANSCRIBE_FAKE = "fake"
 TRANSCRIBE_WHISPER = "whisper"
@@ -130,13 +129,6 @@ def make_embed_udf(backend: str = EMBED_HASH):
     raise ValueError(
         f"unknown embed backend {backend!r}; expected {EMBED_HASH!r} or {EMBED_ST!r}"
     )
-
-
-def embed_dim(backend: str) -> int:
-    """Output dimensionality per backend (hash stub = 8, MiniLM = 384)."""
-    from nocouncil_etl_spark.operators.models import EMBED_DIM
-
-    return {EMBED_HASH: EMBED_DIM, EMBED_ST: ST_DIM}[backend]
 
 
 # --- transcription -----------------------------------------------------------

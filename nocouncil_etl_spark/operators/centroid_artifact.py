@@ -21,23 +21,31 @@ two renames a reader sees no artifact at all (it republishes or refuses).
 stored manifest whose fields equal every field of ``key``; anything else
 publishes. Callers re-read ``path`` after the swap, never the stage.
 
+**Freshness key.** ``corpus_fingerprint`` keys a corpus by its input
+files' ``FileSystem`` status plus a digest of its canonicalized plan — no
+Spark job — so a warm serve runs only its action, and an in-place rewrite
+that keeps the ids still republishes. Frames with no file lineage fall
+back to a one-aggregate key. Manifests written under the old aggregate key
+never match a file-keyed corpus: they republish once.
+
 The centroid artifact:
 
   {path}/kcentroids/    parquet (cid, cv array<long>) — the pinned matrix
   {path}/assignments/   parquet (id, cid) — serve_assignments only
-  {path}/manifest.json  cheap corpus fingerprint + training params
+  {path}/manifest.json  corpus fingerprint + training params
 
-``serve_centroids`` validates the manifest against a one-aggregate corpus
-fingerprint and loads the pinned matrix from parquet — ``kmeans_fit`` never
-runs on the warm path, so a dedup/ANN query over an unchanged corpus pays
-zero training. A changed corpus (or changed k/iters) invalidates the
-manifest and retrains, so the correctness gate can never serve stale
-centroids. Production pins an artifact VERSION instead of fingerprinting —
-the probe exists for the oracle-checked test surface.
+``serve_centroids`` validates the manifest against the corpus fingerprint
+and loads the pinned matrix from parquet — ``kmeans_fit`` never runs on
+the warm path, so a dedup/ANN query over an unchanged corpus pays zero
+training. A changed corpus (or changed k/iters) invalidates the manifest
+and retrains, so the correctness gate can never serve stale centroids.
+Production pins an artifact VERSION instead of fingerprinting — the probe
+exists for the oracle-checked test surface.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -48,6 +56,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.io import file_status, read_parquet
 from nocouncil_etl_spark.operators.kmeans import assign_l2, kmeans_fit
 
 
@@ -62,10 +71,41 @@ def scratch_path(sf_dir: str, name: str) -> str:
     return os.path.join(repo, ".scratch", f"{name}_{tag}")
 
 
-def corpus_fingerprint(points: DataFrame, id_col: str) -> dict:
-    """Cheap freshness probe: one single-column aggregate (count + id
-    sum/max). Cheap relative to training and sufficient for the test
-    surface's deterministic corpora."""
+def corpus_fingerprint(points: DataFrame, id_col: str) -> str | dict:
+    """Freshness key of a corpus frame, with no Spark job: a sha256 over
+    the frame's ``inputFiles()``, each with its ``FileSystem`` length and
+    mtime, and the text of its canonicalized analyzed plan (expression ids
+    normalized, so the digest is stable across JVMs and covers derived
+    frames: projections, filters, unions). An in-place rewrite that keeps
+    the ids changes the files' status, so it republishes.
+
+    A frame with no input files, or with a leaf that is not a file relation
+    (a ``LocalRelation`` or ``LogicalRDD`` holds data the plan text does not
+    show), takes ``_aggregate_fingerprint``. The plan text does not show a
+    Python UDF's closure either: a corpus derived through one is keyed by
+    the UDF's name."""
+    spark = points.sparkSession
+    files = sorted(points.inputFiles())
+    plan = points._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    if not files or any(
+        leaf.getClass().getSimpleName() != "LogicalRelation"
+        or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+    ):
+        return _aggregate_fingerprint(points, id_col)
+    # treeString(verbose, addSuffix, maxFields, printOperatorId,
+    # printOutputColumns): untruncated, unlike the default
+    text = plan.canonicalized().treeString(False, False, 2**31 - 1, False, False)
+    h = hashlib.sha256(text.encode())
+    for f in files:
+        h.update(repr((f, file_status(spark, f))).encode())
+    return h.hexdigest()
+
+
+def _aggregate_fingerprint(points: DataFrame, id_col: str) -> dict:
+    """Fallback key for frames without a file lineage: one single-column
+    aggregate (count + id sum/max), one Spark job."""
     row = points.select(
         F.count("*").alias("n"),
         F.sum(F.col(id_col).cast("long")).alias("s"),
@@ -137,7 +177,7 @@ def read_centroids(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarr
     """Load the pinned centroid matrix (k rows — driver-trivial by the
     MAX_CENTROIDS contract that guarded training), sorted by cid."""
     rows = sorted(
-        spark.read.parquet(f"{path}/kcentroids").collect(), key=lambda r: r["cid"]
+        read_parquet(spark, f"{path}/kcentroids").collect(), key=lambda r: r["cid"]
     )
     ids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cm = np.array([r["cv"] for r in rows], dtype=np.int64)
@@ -201,7 +241,7 @@ def serve_assignments(
     alongside the pinned centroids: assignments against pinned centroids
     over an unchanged corpus are themselves immutable — exactly the
     property that lets the kmeans_index artifact pin each vector's cell —
-    so the warm path is ONE fingerprint aggregate over ``raw`` plus an
+    so the warm path is the job-free fingerprint of ``raw`` plus an
     assignments parquet read: no quantization pass, no corpus-wide
     assignment kernel, no training.
 
@@ -227,4 +267,4 @@ def serve_assignments(
         return {**key, "assignments": True}
 
     serve(path, {**key, "assignments": True}, write)
-    return spark.read.parquet(f"{path}/assignments")
+    return read_parquet(spark, f"{path}/assignments")

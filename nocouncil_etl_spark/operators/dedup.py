@@ -26,8 +26,6 @@ stage is quadratic in corpus size.
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,20 +45,6 @@ def shingles(ws: Column, n: int) -> Column:
     return F.when(F.size(ws) >= n, F.transform(idx, mk)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def minhash(sh: Column, seed: int, width: int = 12) -> Column:
-    """Min over md5('<seed>|'+shingle) prefixes — one signature component.
-
-    md5-hex min is order-free and engine-portable; 12 hex chars ≈ 48 bits,
-    collision-safe for corpus sizes in scope.
-
-    NOTE: higher-order functions are interpreted (not codegen'd) in Spark;
-    this per-row form is for composition inside other array expressions. The
-    hot path is ``minhash_signatures`` below (explode → codegen'd md5 →
-    partial-agg min), ~10× faster and the shape that scales."""
-    hashed = F.transform(sh, lambda s: F.substring(F.md5(F.concat(F.lit(f"{seed}|"), s)), 1, width))
-    return F.array_min(hashed)
 
 
 def minhash_signatures(
@@ -99,45 +83,6 @@ def make_shingle_udf(n: int):
         return texts.map(f)
 
     return udf
-
-
-def make_minhash_udf(shingle_n: int, n_hashes: int, width: int = 12):
-    """Arrow-batched minhash signature: text → [mh0..mh{k-1}] in one pass.
-    hashlib md5 hex == Spark/DuckDB md5 — same values as the SQL kernel."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def udf(texts: pd.Series) -> pd.Series:
-        def f(t: str):
-            ws = (t or "").split(" ")
-            sh = (
-                [" ".join(ws[i : i + shingle_n]) for i in range(len(ws) - shingle_n + 1)]
-                if len(ws) >= shingle_n
-                else []
-            )
-            return [
-                min(
-                    (
-                        hashlib.md5(f"{seed}|{s}".encode()).hexdigest()[:width]
-                        for s in sh
-                    ),
-                    default=None,
-                )
-                for seed in range(n_hashes)
-            ]
-
-        return texts.map(f)
-
-    return udf
-
-
-def band_keys(sh: Column, n_bands: int, rows_per_band: int) -> Column:
-    """LSH band keys as an array expression (slow interpreted-HOF form; the
-    pipeline uses band_keys_from_signature over minhash_signatures)."""
-    bands = []
-    for b in range(n_bands):
-        comps = [minhash(sh, b * rows_per_band + r) for r in range(rows_per_band)]
-        bands.append(F.concat_ws("#", F.lit(str(b)), *comps))
-    return F.array(*bands)
 
 
 def band_keys_from_signature(n_bands: int, rows_per_band: int) -> Column:
@@ -205,37 +150,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.min(id_col).alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame, id_col: str, shingle_col: str, n_bands: int, rows_per_band: int
-) -> DataFrame:
-    """E5 candidate generation: minhash signature table → explode band keys →
-    self-join on the key.
-
-    Returns distinct (id_a < id_b) pairs with their shingle sets. The join is
-    an equi-join on the band key — linear in corpus size, never a cross join.
-    Shuffle hygiene: only (id, band) rows cross the candidate shuffle; the
-    heavy shingle arrays are joined back onto the small deduped pair set."""
-    sig = minhash_signatures(df, id_col, shingle_col, n_bands * rows_per_band)
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(band_keys_from_signature(n_bands, rows_per_band)).alias("band"),
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), "band")
-    b = banded.select(F.col(id_col).alias("id_b"), "band")
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh = df.select(F.col(id_col), F.col(shingle_col))
-    return (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), F.col(shingle_col).alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col(shingle_col).alias("sh_b")), "id_b")
-        .select("id_a", "id_b", "sh_a", "sh_b")
     )
 
 

@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.io import read_parquet
 from nocouncil_etl_spark.operators.centroid_artifact import (
     corpus_fingerprint,
     publish,
@@ -111,7 +112,7 @@ def read_kmeans_index(
 ) -> tuple[DataFrame, np.ndarray, np.ndarray]:
     """(stored index frame, cent_ids, k×dim centroid matrix) straight from
     the artifact."""
-    return (spark.read.parquet(f"{path}/index"), *read_centroids(spark, path))
+    return (read_parquet(spark, f"{path}/index"), *read_centroids(spark, path))
 
 
 def serve_kmeans_index(
@@ -158,7 +159,7 @@ def upsert_kmeans_index(
 
 def search_kmeans_index(
     queries: DataFrame,
-    path: str,
+    index: str | tuple[DataFrame, np.ndarray, np.ndarray],
     nprobe: int,
     topk: int,
     id_col: str = "vec_id",
@@ -166,7 +167,10 @@ def search_kmeans_index(
 ) -> DataFrame:
     """Top-k against the pinned artifact: quantize the query side only,
     integer-L2 rank the stored centroids, probe top-nprobe cells, cosine
-    rank inside probed cells. Emits (q_id, c_id, sim, rk).
+    rank inside probed cells. Emits (q_id, c_id, sim, rk). ``index`` is the
+    artifact path, or the (stored, cent_ids, centroids) triple that
+    serve_kmeans_index / read_kmeans_index returned — passing it on reads
+    the centroid matrix once per serve.
 
     In-cell scoring is similarity.blocked_topk keyed by the stored ``cid``:
     the (query, probed-cell) rows — nq·nprobe of them — are collected once
@@ -175,8 +179,11 @@ def search_kmeans_index(
     primitive's distributed equi-join fallback, which never collects."""
     from nocouncil_etl_spark.operators.similarity import blocked_topk
 
-    spark = queries.sparkSession
-    stored, ids, cm = read_kmeans_index(spark, path)
+    stored, ids, cm = (
+        read_kmeans_index(queries.sparkSession, index)
+        if isinstance(index, str)
+        else index
+    )
     qq = quantize_vectors(queries, vec_col, "xq").select(id_col, "xq")
     probes = assign_l2_topn(qq, ids, cm, nprobe, id_col=id_col).select(
         F.col(id_col).alias("q_id"), F.col("cid").alias("key")

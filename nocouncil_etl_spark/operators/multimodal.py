@@ -48,14 +48,6 @@ def to_media_column(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), content.alias("content"), meta.alias("media_meta"))
 
 
-def decode_real(content: bytes) -> dict:
-    """Production decode path — requires codecs not present in this image."""
-    raise NotImplementedError(
-        "media codecs (PIL/ffmpeg/librosa) are not available in this environment; "
-        "use decode_fake for tests"
-    )
-
-
 def decode_fake(content: bytes) -> dict:
     """Deterministic stand-in: metadata derived purely from the bytes, so the
     DuckDB oracle can recompute it from the source text."""

@@ -120,15 +120,6 @@ _MULTI_MAT = np.array(
 )
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def lsh_multi_signature_udf(vecs: pd.Series) -> pd.Series:
-    """All L table signatures per vector in ONE matmul; each key is
-    't#bits' so different tables can never collide in the bucket join."""
-    mat = np.vstack(vecs.to_numpy()).astype(np.float64)  # (N, D)
-    signs = (mat @ _MULTI_MAT.T) >= 0  # (N, L·P)
-    return pd.Series([multi_bucket_keys(row) for row in signs])
-
-
 def attach_signature(df: DataFrame, vec_col: str, multi: bool = False) -> DataFrame:
     """Append the LSH bucket column(s) via ONE mapInPandas pass.
 

@@ -25,22 +25,6 @@ def upsert_vectors(
     return merge_state(index, incoming, key=id_col, order_col=version_col)
 
 
-def write_index(df: DataFrame, path: str, buckets: int = 0) -> None:
-    """Persist the index table. With ``buckets`` > 0 the table is bucketed by
-    id so later joins/upserts co-locate without a shuffle (the engine's
-    stand-in for collection sharding)."""
-    if buckets:
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, "id")
-            .option("path", path)
-            .saveAsTable(f"vector_index_{abs(hash(path)) % 10**8}")
-        )
-    else:
-        df.write.mode("overwrite").parquet(path)
-
-
 def add_embeddings(df: DataFrame, text_col: str, embed_udf) -> DataFrame:
     """E1+K4 glue: attach embeddings via the (pluggable) embedding UDF."""
     return df.withColumn("embedding", embed_udf(F.col(text_col)))

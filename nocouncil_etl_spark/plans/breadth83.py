@@ -52,13 +52,6 @@ MCI_Z_MILLI = 1960  # 95% normal approx for the order-stat bounds
 # --------------------------------------------------------------------------
 
 
-def _pca_proj(vec: str, weights: list[str]) -> str:
-    return " + ".join(
-        f"({w}) * CAST({vec}[{i + 1}] AS DOUBLE)"
-        for i, w in enumerate(weights)
-    )
-
-
 @query(
     "vec_pca_explained_share",
     oracle=f"""

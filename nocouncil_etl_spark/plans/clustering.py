@@ -285,9 +285,9 @@ def vec_knn_index_kmeans_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _embeddings(spark, sf_dir)
     path = scratch_path(sf_dir, "vec_kidx") + "_serve"
-    serve_kmeans_index(e, KC, KC_ITERS, path)
+    served = serve_kmeans_index(e, KC, KC_ITERS, path)
     return search_kmeans_index(
-        e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK
+        e.filter(F.col("vec_id") % QUERY_MOD == 0), served, NPROBE, TOPK
     )
 
 
@@ -379,9 +379,9 @@ def vec_knn_index_kmeans_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _embeddings(spark, sf_dir)
     path = scratch_path(sf_dir, "vec_kidx") + "_auto"
-    serve_kmeans_index(e, None, KC_ITERS, path)
+    served = serve_kmeans_index(e, None, KC_ITERS, path)
     return search_kmeans_index(
-        e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK
+        e.filter(F.col("vec_id") % QUERY_MOD == 0), served, NPROBE, TOPK
     )
 
 

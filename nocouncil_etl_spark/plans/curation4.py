@@ -276,8 +276,8 @@ def dedup_semantic_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a manifest-validated published artifact
     (operators/centroid_artifact.serve_centroids — the ann_index.py
     publish/validate/read pattern applied to TRAINED centroids). First call
-    over a corpus version trains + pins; every later call validates a
-    one-aggregate fingerprint and loads the k-row centroid parquet —
+    over a corpus version trains + pins; every later call validates the
+    job-free corpus fingerprint and loads the k-row centroid parquet —
     kmeans_fit never runs warm. At 100 TB the clustering is a nightly
     batch job and every dedup pass serves from it (the reference ships its
     built index the same way, sample_cron_job.sh:10). Results are
@@ -288,7 +288,7 @@ def dedup_semantic_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORPUS-SIDE ASSIGNMENTS too (immutable against pinned centroids over
     an unchanged corpus — the kmeans_index index-parquet property), so the
     warm path skips the per-call quantization pass AND the corpus-wide
-    assignment kernel: one fingerprint aggregate + an assignments parquet
+    assignment kernel: one corpus fingerprint + an assignments parquet
     read + the in-cluster pair scan. The fingerprint moves to the raw
     ``aug`` frame — identical ids row-for-row with the quantized frame it
     fingerprinted before, so manifest hits/misses are unchanged."""

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nocouncil_etl_spark.functions.numeric import rsum
-from nocouncil_etl_spark.io import normalize_events_ts
+from nocouncil_etl_spark.io import normalize_events_ts, read_parquet
 from nocouncil_etl_spark.session import tune
 
 
@@ -28,14 +28,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cron re-scan). maxFilesPerTrigger would bound micro-batches in a live
     deployment; availableNow drains everything for tests.
 
-    readStream needs a declared schema; we take it from a batch read of the
-    same file so the stream sees exactly what `io.load` sees (the generator
-    has shipped both TIMESTAMP(NANOS)-as-long and µs-TIMESTAMP files across
-    rounds), then funnel ts through the shared `normalize_events_ts`
+    readStream needs a declared schema; we take it from `io.read_parquet` of
+    the same file (a cached inference, no job when warm) so the stream sees
+    exactly what `io.load` sees (the generator has shipped both
+    TIMESTAMP(NANOS)-as-long and µs-TIMESTAMP files across rounds), then
+    funnel ts through the shared `normalize_events_ts`
     chokepoint — the batch/stream twins must agree with each other and with
     the DuckDB oracle on the same bytes."""
     tune(spark)
-    physical = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    physical = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # the file source requires a directory; glob-filter down to the one table
     raw = (
         spark.readStream.schema(physical)

@@ -17,10 +17,19 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+
+# DuckDB's default memory limit is 80% of RAM: over the full catalog sweep
+# the oracle side alone reached 7.5 GB RSS next to the 6 GB Spark driver on
+# a 15 GB host and was OOM-killed. A fixed limit plus a spill directory
+# keeps the sweep inside the host; over-limit operators spill instead.
+# sample_kcenter_coreset's oracle needs 3-4 GB of DuckDB's accounted memory
+# (its RSS stays under 400 MB) and fails below that.
+DUCKDB_MEMORY_LIMIT = "5GB"
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -81,7 +90,10 @@ def main() -> int:
         missing = only - set(qs)
         assert not missing, f"unknown queries: {missing}"
         qs = {k: v for k, v in qs.items() if k in only}
-    con = duckdb.connect()
+    spill = tempfile.TemporaryDirectory(prefix="oracle_duckdb_spill_")
+    con = duckdb.connect(
+        config={"memory_limit": DUCKDB_MEMORY_LIMIT, "temp_directory": spill.name}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -113,6 +125,8 @@ def main() -> int:
         # caller by contract) so session memory stays flat across the
         # whole catalog
         spark.catalog.clearCache()
+    con.close()
+    spill.cleanup()
 
     if summary_path:
         n_oracle = sum(1 for r in record.values() if r["mode"] == "oracle")

@@ -51,7 +51,7 @@ _P = "nocouncil_etl_spark"
 # single-scalar-normalizer contract. Cap 8 catches any drift to
 # data-sized frames.
 _SCALAR = (
-    f"{_P}/operators/centroid_artifact.py:corpus_fingerprint",
+    f"{_P}/operators/centroid_artifact.py:_aggregate_fingerprint",
     f"{_P}/operators/graph.py:hits_fixed_point",
     f"{_P}/operators/treereduce.py:tree_reduce",
     f"{_P}/operators/quantiles.py:_domain_shift",
