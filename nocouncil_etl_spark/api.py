@@ -573,7 +573,7 @@ class Engine:
                 quantize_vectors,
             )
 
-            vq = quantize_vectors(v, "v", "xq").select("vec_id", "xq").persist()
+            vq = quantize_vectors(v, "v", "xq").persist()
             try:
                 if artifact_path is not None:
                     from nocouncil_etl_spark.operators.centroid_artifact import (
@@ -583,10 +583,9 @@ class Engine:
                     cent_ids, cm = serve_centroids(vq, k, iters, artifact_path)
                 else:
                     cent_ids, cm = kmeans_fit(vq, k, iters)
-                best = assign_l2(vq, cent_ids, cm).withColumnRenamed(
-                    "cid", "cent_id"
+                clustered = assign_l2(vq, cent_ids, cm, carry="v").select(
+                    F.col("cid").alias("cent_id"), "vec_id", "v"
                 )
-                clustered = v.join(best, "vec_id").select("cent_id", "vec_id", "v")
                 return cluster_pair_scan(clustered, threshold)
             finally:
                 vq.unpersist()

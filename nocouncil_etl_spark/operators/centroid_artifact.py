@@ -30,17 +30,22 @@ never match a file-keyed corpus: they republish once.
 
 The centroid artifact:
 
-  {path}/kcentroids/    parquet (cid, cv array<long>) — the pinned matrix
+  {path}/centroids.npy  int64 k×(1+dim): cid, then the pinned centroid
   {path}/assignments/   parquet (id, cid) — serve_assignments only
-  {path}/manifest.json  corpus fingerprint + training params
+  {path}/manifest.json  corpus fingerprint + training params + layout
+
+The k-row matrix (MAX_CENTROIDS-guarded) is ``np.save``d by the driver —
+no Spark job either way; like ``publish``'s renames, this needs a local
+filesystem. Centroid-bearing manifests carry ``LAYOUT``, so an artifact in
+the earlier ``kcentroids/`` parquet layout republishes once.
 
 ``serve_centroids`` validates the manifest against the corpus fingerprint
-and loads the pinned matrix from parquet — ``kmeans_fit`` never runs on
-the warm path, so a dedup/ANN query over an unchanged corpus pays zero
-training. A changed corpus (or changed k/iters) invalidates the manifest
-and retrains, so the correctness gate can never serve stale centroids.
-Production pins an artifact VERSION instead of fingerprinting — the probe
-exists for the oracle-checked test surface.
+and loads the pinned matrix — ``kmeans_fit`` never runs on the warm path,
+so a dedup/ANN query over an unchanged corpus pays zero training. A
+changed corpus (or changed k/iters) invalidates the manifest and retrains,
+so the correctness gate can never serve stale centroids. Production pins
+an artifact VERSION instead of fingerprinting — the probe exists for the
+oracle-checked test surface.
 """
 
 from __future__ import annotations
@@ -53,11 +58,14 @@ import uuid
 from collections.abc import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import file_status, read_parquet
 from nocouncil_etl_spark.operators.kmeans import assign_l2, kmeans_fit
+
+CENTROIDS = "centroids.npy"
+LAYOUT = {"layout": CENTROIDS}  # manifest field: where the centroids live
 
 
 def scratch_path(sf_dir: str, name: str) -> str:
@@ -162,26 +170,17 @@ def serve(path: str, key: dict, write: Callable[[str], dict]) -> None:
         publish(path, write)
 
 
-def write_centroids(
-    spark: SparkSession, cent_ids: np.ndarray, cm: np.ndarray, path: str
-) -> None:
-    """The one centroid-matrix writer: ``{path}/kcentroids`` as
-    (cid long, cv array<long>)."""
-    spark.createDataFrame(
-        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(cent_ids)],
-        "cid long, cv array<long>",
-    ).write.parquet(f"{path}/kcentroids")
+def write_centroids(cent_ids: np.ndarray, cm: np.ndarray, path: str) -> None:
+    """The one centroid-matrix writer: ``{path}/centroids.npy``, int64
+    k×(1+dim) with the cid in column 0."""
+    np.save(os.path.join(path, CENTROIDS), np.column_stack([cent_ids, cm]))
 
 
-def read_centroids(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
-    """Load the pinned centroid matrix (k rows — driver-trivial by the
-    MAX_CENTROIDS contract that guarded training), sorted by cid."""
-    rows = sorted(
-        read_parquet(spark, f"{path}/kcentroids").collect(), key=lambda r: r["cid"]
-    )
-    ids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cm = np.array([r["cv"] for r in rows], dtype=np.int64)
-    return ids, cm
+def read_centroids(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """Load the pinned (cent_ids, k×dim matrix) — k rows, driver-trivial
+    by the MAX_CENTROIDS contract that guarded training; no Spark job."""
+    m = np.load(os.path.join(path, CENTROIDS), allow_pickle=False)
+    return m[:, 0].copy(), m[:, 1:].copy()
 
 
 def _trainer(
@@ -189,7 +188,7 @@ def _trainer(
 ):
     def write(stage: str) -> dict:
         cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col, q_col=q_col)
-        write_centroids(points.sparkSession, cent_ids, cm, stage)
+        write_centroids(cent_ids, cm, stage)
         return payload
 
     return write
@@ -207,9 +206,9 @@ def publish_centroids(
     """Train fixed-k integer Lloyd's k-means on ``points`` (quantized
     vectors) and pin the result. Returns (cent_ids, k×dim int64 matrix)."""
     fp = fingerprint if fingerprint is not None else corpus_fingerprint(points, id_col)
-    payload = {"fp": fp, "k": k, "iters": iters}
+    payload = {"fp": fp, "k": k, "iters": iters, **LAYOUT}
     publish(path, _trainer(points, k, iters, id_col, q_col, payload))
-    return read_centroids(points.sparkSession, path)
+    return read_centroids(path)
 
 
 def serve_centroids(
@@ -221,12 +220,12 @@ def serve_centroids(
     q_col: str = "xq",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Publish-if-absent serving: on a manifest hit (fingerprint + params),
-    load the pinned matrix (k-row parquet read, NO training); on a miss,
+    load the pinned matrix (k-row ``np.load``, NO training); on a miss,
     train and publish. The warm path is the 100 TB path — training cost is
     paid once per corpus version."""
-    key = {"fp": corpus_fingerprint(points, id_col), "k": k, "iters": iters}
+    key = {"fp": corpus_fingerprint(points, id_col), "k": k, "iters": iters, **LAYOUT}
     serve(path, key, _trainer(points, k, iters, id_col, q_col, key))
-    return read_centroids(points.sparkSession, path)
+    return read_centroids(path)
 
 
 def serve_assignments(
@@ -252,15 +251,15 @@ def serve_assignments(
     parquet; when its fingerprint and params still validate, the republish
     reuses its pinned centroids (assignment only, no retraining)."""
     spark = raw.sparkSession
-    key = {"fp": corpus_fingerprint(raw, id_col), "k": k, "iters": iters}
+    key = {"fp": corpus_fingerprint(raw, id_col), "k": k, "iters": iters, **LAYOUT}
 
     def write(stage: str) -> dict:
         points = to_quantized(raw)
         if _matches(path, key):
-            cent_ids, cm = read_centroids(spark, path)
+            cent_ids, cm = read_centroids(path)
         else:
             cent_ids, cm = kmeans_fit(points, k, iters, id_col=id_col)
-        write_centroids(spark, cent_ids, cm, stage)
+        write_centroids(cent_ids, cm, stage)
         assign_l2(points, cent_ids, cm, id_col=id_col).write.parquet(
             f"{stage}/assignments"
         )

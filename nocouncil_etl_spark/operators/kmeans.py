@@ -93,11 +93,13 @@ def assign_l2(
     id_col: str = "vec_id",
     q_col: str = "xq",
     with_dist: bool = False,
-    passthrough_vec: bool = False,
+    carry: str | None = None,
 ) -> DataFrame:
     """Integer nearest-centroid assignment: one int64 matmul per Arrow batch
     (dist = ‖x‖² − 2x·c + ‖c‖², exact), argmin tie-broken on centroid id
-    ASC via lexsort — no floats anywhere, so no rounding-parity hazard."""
+    ASC via lexsort — no floats anywhere, so no rounding-parity hazard.
+    ``carry`` names a column of ``points`` (the raw vector, say) passed
+    through the batch beside its cell, so callers need no join back."""
     if len(cent_ids) > MAX_CENTROIDS:
         _guard_k(len(cent_ids))
     c2 = np.einsum("ij,ij->i", cm, cm)
@@ -105,8 +107,10 @@ def assign_l2(
     cols = f"{id_col} long, cid long"
     if with_dist:
         cols += ", dist long"
-    if passthrough_vec:
-        cols += f", {q_col} array<long>"
+    in_cols = [id_col, q_col]
+    if carry is not None:
+        cols += f", {carry} {points.schema[carry].dataType.simpleString()}"
+        in_cols.append(carry)
 
     def assign(batches):
         for pdf in batches:
@@ -120,11 +124,11 @@ def assign_l2(
             out = {id_col: pdf[id_col], "cid": cent_ids[best]}
             if with_dist:
                 out["dist"] = dist[np.arange(len(vm)), best]
-            if passthrough_vec:
-                out[q_col] = pdf[q_col]
+            if carry is not None:
+                out[carry] = pdf[carry]
             yield pd.DataFrame(out)
 
-    return points.select(id_col, q_col).mapInPandas(assign, schema=cols)
+    return points.select(*in_cols).mapInPandas(assign, schema=cols)
 
 
 def assign_l2_topn(
@@ -164,29 +168,6 @@ def assign_l2_topn(
     return points.select(id_col, q_col).mapInPandas(
         probe, schema=f"{id_col} long, cid long, crk int"
     )
-
-
-def update_centroids(
-    assigned: DataFrame,
-    cent_ids: np.ndarray,
-    cm: np.ndarray,
-    q_col: str = "xq",
-) -> np.ndarray:
-    """One Lloyd's update: per-(cluster, dim) floor-division means via
-    posexplode + map-side-combined agg; only k·dim rows reach the driver.
-    Clusters that lost all points keep their previous centroid."""
-    sums = (
-        assigned.select("cid", F.posexplode(q_col).alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("cid", "pos", F.expr("s div n").alias("m"))
-        .collect()
-    )
-    new_cm = cm.copy()
-    idx = {int(c): i for i, c in enumerate(cent_ids)}
-    for r in sums:
-        new_cm[idx[r["cid"]], r["pos"]] = r["m"]
-    return new_cm
 
 
 def _assign_stats(
@@ -256,15 +237,25 @@ def kmeans_fit(
     cent_ids, cm = seed_centroids(points, k, id_col=id_col, q_col=q_col)
     for _ in range(iters):
         partial = _assign_stats(points, cent_ids, cm, q_col=q_col)
-        sums = (
-            partial.groupBy("cid", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .select("cid", "pos", F.expr("s div n").alias("m"))
-            .collect()
-        )
-        new_cm = cm.copy()
-        idx = {int(c): i for i, c in enumerate(cent_ids)}
-        for r in sums:
-            new_cm[idx[r["cid"]], r["pos"]] = r["m"]
-        cm = new_cm
+        cm = _lloyd_update(partial, cent_ids, cm)
     return cent_ids, cm
+
+
+def _lloyd_update(
+    partial: DataFrame, cent_ids: np.ndarray, cm: np.ndarray
+) -> np.ndarray:
+    """One Lloyd's update from ``_assign_stats`` partials: per-(cluster,
+    dim) floor-division means of the summed partials; only k·dim rows
+    reach the driver. Clusters that drew no points keep their previous
+    centroid."""
+    sums = (
+        partial.groupBy("cid", "pos")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+        .select("cid", "pos", F.expr("s div n").alias("m"))
+        .collect()
+    )
+    new_cm = cm.copy()
+    idx = {int(c): i for i, c in enumerate(cent_ids)}
+    for r in sums:
+        new_cm[idx[r["cid"]], r["pos"]] = r["m"]
+    return new_cm

@@ -9,10 +9,11 @@ commit protocol — the reference's build-nightly/serve-always split
 it):
 
   {path}/index/         parquet (vec_id, v array<double>, cid) — each vector
-                        with its PINNED coarse cell
-  {path}/kcentroids/    parquet (cid, cv array<long>) — the quantized
-                        centroid matrix (k rows)
-  {path}/manifest.json  corpus fingerprint + {k, iters, auto}
+                        with its PINNED coarse cell; build and upsert both
+                        write exactly these columns (``_write_index``)
+  {path}/centroids.npy  the quantized centroid matrix (k rows), written and
+                        read by the driver (centroid_artifact.write_centroids)
+  {path}/manifest.json  corpus fingerprint + {k, iters, auto, layout}
 
 Because cells are pinned after training, incremental upserts assign the
 INCOMING batch against the stored centroids (one Arrow pass over the batch
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import read_parquet
 from nocouncil_etl_spark.operators.centroid_artifact import (
+    LAYOUT,
     corpus_fingerprint,
     publish,
     read_centroids,
@@ -70,6 +72,17 @@ def auto_nlist(n: int) -> int:
     return int(min(MAX_CENTROIDS, 2 ** round(math.log2(math.sqrt(n)))))
 
 
+def _write_index(
+    eq: DataFrame, cent_ids, cm, path: str, id_col: str, vec_col: str, mode: str
+) -> None:
+    """The one index-row writer, for build and upsert alike: one Arrow pass
+    over ``eq`` (id_col, vec_col, xq) assigns each vector its cell and
+    carries the raw vector beside it — (id_col, vec_col, cid), no join."""
+    assign_l2(eq, cent_ids, cm, id_col=id_col, carry=vec_col).select(
+        id_col, vec_col, "cid"
+    ).write.mode(mode).parquet(f"{path}/index")
+
+
 def _builder(
     e: DataFrame, k: int | None, iters: int, id_col: str, vec_col: str, fp: dict
 ):
@@ -79,16 +92,15 @@ def _builder(
     resolved k and the auto flag so serving can validate."""
 
     def write(stage: str) -> dict:
-        eq = quantize_vectors(e, vec_col, "xq").select(id_col, "xq").persist()
+        eq = quantize_vectors(e, vec_col, "xq").select(id_col, vec_col, "xq").persist()
         try:
             kk = auto_nlist(eq.count()) if k is None else k
             cent_ids, cm = kmeans_fit(eq, kk, iters, id_col=id_col)
-            cells = assign_l2(eq, cent_ids, cm, id_col=id_col)
-            e.join(cells, id_col).write.parquet(f"{stage}/index")
-            write_centroids(e.sparkSession, cent_ids, cm, stage)
+            _write_index(eq, cent_ids, cm, stage, id_col, vec_col, "error")
+            write_centroids(cent_ids, cm, stage)
         finally:
             eq.unpersist()
-        return {"fp": fp, "k": kk, "iters": iters, "auto": k is None}
+        return {"fp": fp, "k": kk, "iters": iters, "auto": k is None, **LAYOUT}
 
     return write
 
@@ -112,7 +124,7 @@ def read_kmeans_index(
 ) -> tuple[DataFrame, np.ndarray, np.ndarray]:
     """(stored index frame, cent_ids, k×dim centroid matrix) straight from
     the artifact."""
-    return (read_parquet(spark, f"{path}/index"), *read_centroids(spark, path))
+    return (read_parquet(spark, f"{path}/index"), *read_centroids(path))
 
 
 def serve_kmeans_index(
@@ -130,7 +142,8 @@ def serve_kmeans_index(
     same corpus count, hence the same auto_nlist, so a warm serve never
     recounts, never retrains."""
     fp = corpus_fingerprint(e, id_col)
-    key = {"fp": fp, "iters": iters, **({"auto": True} if k is None else {"k": k})}
+    size = {"auto": True} if k is None else {"k": k}
+    key = {"fp": fp, "iters": iters, **size, **LAYOUT}
     serve(path, key, _builder(e, k, iters, id_col, vec_col, fp))
     return read_kmeans_index(e.sparkSession, path)
 
@@ -148,13 +161,9 @@ def upsert_kmeans_index(
     Note: append-only by design (the epoch-idempotent merge discipline
     lives in the caller's foreachBatch, see streaming tests); keep-latest
     dedup by id composes on read if ids can repeat across batches."""
-    spark = incoming.sparkSession
-    _, ids, cm = read_kmeans_index(spark, path)
-    inq = quantize_vectors(incoming, vec_col, "xq").select(id_col, "xq")
-    cells = assign_l2(inq, ids, cm, id_col=id_col)
-    incoming.join(cells, id_col).select(id_col, vec_col, "cid").write.mode(
-        "append"
-    ).parquet(f"{path}/index")
+    ids, cm = read_centroids(path)
+    inq = quantize_vectors(incoming, vec_col, "xq")
+    _write_index(inq, ids, cm, path, id_col, vec_col, "append")
 
 
 def search_kmeans_index(

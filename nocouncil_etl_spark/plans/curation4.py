@@ -234,13 +234,21 @@ def dedup_semantic_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims use Spark's HALF_UP decimal rounding (similarity._round6_like_spark).
     The oracle replays the full k-means recurrence as unrolled CTEs
     (plans/clustering.kmeans_cte) and then the same in-cluster pair join."""
-    from nocouncil_etl_spark.operators.kmeans import kmeans_fit, quantize_vectors
+    from nocouncil_etl_spark.operators.kmeans import (
+        assign_l2,
+        kmeans_fit,
+        quantize_vectors,
+    )
+    from nocouncil_etl_spark.operators.semantic import cluster_pair_scan
 
-    aug = _sem_aug(spark, sf_dir)
-    augq = quantize_vectors(aug, "v", "xq").select("vec_id", "xq").persist()
+    augq = quantize_vectors(_sem_aug(spark, sf_dir), "v", "xq").persist()
     try:
         cent_ids, cm = kmeans_fit(augq, SEM_K, SEM_ITERS)
-        return _sem_pairs(aug, augq, cent_ids, cm)
+        # the assignment pass carries each raw vector beside its cluster
+        clustered = assign_l2(augq, cent_ids, cm, carry="v").select(
+            F.col("cid").alias("cent_id"), "vec_id", "v"
+        )
+        return cluster_pair_scan(clustered, SEM_THRESHOLD)
     finally:
         augq.unpersist()
 
@@ -258,17 +266,6 @@ def _sem_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.unionByName(perturbed)
 
 
-def _sem_pairs(aug: DataFrame, augq: DataFrame, cent_ids, cm) -> DataFrame:
-    """Assignment + in-cluster pair scan given a centroid matrix (trained
-    inline or loaded from the pinned artifact — same kernels either way)."""
-    from nocouncil_etl_spark.operators.kmeans import assign_l2
-    from nocouncil_etl_spark.operators.semantic import cluster_pair_scan
-
-    best = assign_l2(augq, cent_ids, cm).withColumnRenamed("cid", "cent_id")
-    clustered = aug.join(best, "vec_id").select("cent_id", "vec_id", "v")
-    return cluster_pair_scan(clustered, SEM_THRESHOLD)
-
-
 @query("dedup_semantic_serve", oracle=_sem_oracle())
 def dedup_semantic_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVING twin of dedup_semantic_centroid (the round-5 verdict's only
@@ -277,7 +274,7 @@ def dedup_semantic_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/centroid_artifact.serve_centroids — the ann_index.py
     publish/validate/read pattern applied to TRAINED centroids). First call
     over a corpus version trains + pins; every later call validates the
-    job-free corpus fingerprint and loads the k-row centroid parquet —
+    job-free corpus fingerprint and loads the k-row centroid matrix —
     kmeans_fit never runs warm. At 100 TB the clustering is a nightly
     batch job and every dedup pass serves from it (the reference ships its
     built index the same way, sample_cron_job.sh:10). Results are

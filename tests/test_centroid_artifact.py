@@ -110,7 +110,7 @@ def test_serve_assignments_matches_inline_assign(vecs, tmp_path):
     got = ca.serve_assignments(
         vecs, 4, 2, path, to_quantized=lambda d: _eq(d)
     )
-    ids, cm = ca.read_centroids(vecs.sparkSession, path)
+    ids, cm = ca.read_centroids(path)
     want = assign_l2(_eq(vecs), ids, cm)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -145,7 +145,7 @@ def test_serve_assignments_rejects_centroid_only_artifact(
     the pinned centroids instead of retraining."""
     path = str(tmp_path / "old")
     ca.serve_centroids(_eq(vecs), 4, 2, path)  # old-format manifest
-    pinned_ids, pinned_cm = ca.read_centroids(vecs.sparkSession, path)
+    pinned_ids, pinned_cm = ca.read_centroids(path)
 
     def boom(*a, **k):  # pragma: no cover
         raise AssertionError("kmeans_fit ran on an assignments-only miss")
@@ -156,7 +156,7 @@ def test_serve_assignments_rejects_centroid_only_artifact(
     )
     assert got.count() == 120
     assert ca.read_manifest(path)["assignments"] is True
-    ids, cm = ca.read_centroids(vecs.sparkSession, path)
+    ids, cm = ca.read_centroids(path)
     assert (ids == pinned_ids).all() and (cm == pinned_cm).all()
 
 
@@ -271,15 +271,91 @@ def test_kidx_upsert_matches_pinned_batch_rebuild(spark, vecs, tmp_path):
     full_path = str(tmp_path / "full")
     cells = assign_l2(_eq(vecs), ids, cm)
     vecs.join(cells, "vec_id").write.mode("overwrite").parquet(f"{full_path}/index")
-    spark.createDataFrame(
-        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(ids)],
-        "cid long, cv array<long>",
-    ).write.mode("overwrite").parquet(f"{full_path}/kcentroids")
+    ca.write_centroids(ids, cm, full_path)
     want = ki.search_kmeans_index(queries, full_path, nprobe=2, topk=3)
 
     sel = ["q_id", "c_id", "sim", "rk"]
     assert got.select(sel).exceptAll(want.select(sel)).count() == 0
     assert want.select(sel).exceptAll(got.select(sel)).count() == 0
+
+
+def test_kidx_build_and_upsert_write_one_index_layout(spark, vecs, tmp_path):
+    """Build and upsert write the same (vec_id, v, cid) index rows whatever
+    else the corpus carries: every part file has one schema, and search
+    equals a one-shot index over A∪B with the same pinned centroids."""
+    import pyarrow.parquet as pq
+
+    tagged = vecs.withColumn("tag", F.concat(F.lit("t"), F.col("vec_id")))
+    path = str(tmp_path / "tagged")
+    ki.publish_kmeans_index(tagged.filter(F.col("vec_id") < 80), 4, 2, path)
+    ki.upsert_kmeans_index(tagged.filter(F.col("vec_id") >= 80), path)
+
+    parts = [
+        os.path.join(path, "index", f)
+        for f in os.listdir(os.path.join(path, "index"))
+        if f.endswith(".parquet")
+    ]
+    assert {tuple(pq.read_schema(f).names) for f in parts} == {("vec_id", "v", "cid")}
+
+    from nocouncil_etl_spark.operators.kmeans import assign_l2
+
+    _, ids, cm = ki.read_kmeans_index(spark, path)
+    full_path = str(tmp_path / "oneshot")
+    cells = assign_l2(_eq(vecs), ids, cm)
+    vecs.join(cells, "vec_id").write.parquet(f"{full_path}/index")
+    ca.write_centroids(ids, cm, full_path)
+    queries = vecs.filter(F.col("vec_id") % 30 == 0)
+    got = ki.search_kmeans_index(queries, path, nprobe=2, topk=3)
+    want = ki.search_kmeans_index(queries, full_path, nprobe=2, topk=3)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _to_parent_layout(spark, path):
+    """Rewrite a centroid-bearing artifact into the earlier layout: the
+    matrix as a ``kcentroids/`` parquet, no ``centroids.npy``, and a
+    manifest without the ``layout`` field."""
+    ids, cm = ca.read_centroids(path)
+    os.remove(os.path.join(path, ca.CENTROIDS))
+    spark.createDataFrame(
+        [(int(c), [int(x) for x in cm[i]]) for i, c in enumerate(ids)],
+        "cid long, cv array<long>",
+    ).write.parquet(f"{path}/kcentroids")
+    mf = ca.read_manifest(path)
+    del mf["layout"]
+    ca.write_manifest(path, mf)
+
+
+_OLD_FORMAT_KINDS = {
+    # kind -> serve the artifact and return comparable rows
+    "centroids": lambda d, path: [
+        a.tolist() for a in ca.serve_centroids(_eq(d), 4, 2, path)
+    ],
+    "kmeans_index": lambda d, path: sorted(
+        ki.serve_kmeans_index(d, 4, 2, path)[0].collect()
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_OLD_FORMAT_KINDS))
+def test_parent_layout_artifact_republishes_once(
+    spark, vecs, tmp_path, monkeypatch, kind
+):
+    """An artifact with a ``kcentroids/`` parquet and no ``centroids.npy``
+    never matches the layout-keyed manifest: the first serve republishes
+    (instead of failing in np.load), the second hits, and the rows equal
+    a fresh publish."""
+    serve_fn = _OLD_FORMAT_KINDS[kind]
+    path = str(tmp_path / "art")
+    serve_fn(vecs, path)
+    _to_parent_layout(spark, path)
+    publishes = []
+    real = ca.publish
+    monkeypatch.setattr(ca, "publish", lambda p, w: publishes.append(p) or real(p, w))
+    first = serve_fn(vecs, path)
+    second = serve_fn(vecs, path)
+    assert len(publishes) == 1
+    assert ca.read_manifest(path)["layout"] == ca.CENTROIDS
+    assert first == second == serve_fn(vecs, str(tmp_path / "fresh"))
 
 
 def test_kidx_streaming_upsert_parity(spark, vecs, tmp_path):

@@ -13,11 +13,12 @@ from pyspark.sql import functions as F
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.operators.kmeans import (
     MAX_CENTROIDS,
+    _assign_stats,
+    _lloyd_update,
     assign_l2,
     kmeans_fit,
     quantize_vectors,
     seed_centroids,
-    update_centroids,
 )
 
 
@@ -79,7 +80,7 @@ def test_assign_nearest_centroid_guard(spark, sf_dir):
         assign_nearest_centroid(e, cent)
 
 
-def test_update_centroids_empty_cluster_carryover(spark):
+def test_lloyd_update_empty_cluster_carryover(spark):
     """A cluster that lost every point keeps its previous centroid —
     the same rule the oracle's UNION ALL carryover branch encodes."""
     pts = spark.createDataFrame(
@@ -88,8 +89,7 @@ def test_update_centroids_empty_cluster_carryover(spark):
     )
     cent_ids = np.array([1, 2], dtype=np.int64)
     cm = np.array([[11, 11], [500, 500]], dtype=np.int64)  # 2 attracts nothing
-    assigned = assign_l2(pts, cent_ids, cm, passthrough_vec=True)
-    new_cm = update_centroids(assigned, cent_ids, cm)
+    new_cm = _lloyd_update(_assign_stats(pts, cent_ids, cm), cent_ids, cm)
     assert new_cm[0].tolist() == [11, 11]  # (10+12+11)//3, (10+10+13)//3
     assert new_cm[1].tolist() == [500, 500]  # carried forward
 

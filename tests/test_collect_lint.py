@@ -101,13 +101,9 @@ _SCALAR = (
 
 WHITELIST: dict[str, tuple[int, str]] = {
     **{site: (8, "single-scalar/bounded-stat fetch, SF-independent") for site in _SCALAR},
-    f"{_P}/operators/centroid_artifact.py:read_centroids": (
-        4096, "k-row pinned centroid matrix, k <= MAX_CENTROIDS"),
     f"{_P}/operators/kmeans.py:seed_centroids": (
         4096, "k seed rows, k <= MAX_CENTROIDS"),
-    f"{_P}/operators/kmeans.py:update_centroids": (
-        262_144, "k*dim Lloyd's-update rows, k <= MAX_CENTROIDS, dim fixed"),
-    f"{_P}/operators/kmeans.py:kmeans_fit": (
+    f"{_P}/operators/kmeans.py:_lloyd_update": (
         262_144,
         "k*dim Lloyd's-update rows (fused _assign_stats partials reduce to "
         "the same k*dim means), k <= MAX_CENTROIDS, dim fixed"),

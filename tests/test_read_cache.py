@@ -250,11 +250,19 @@ def test_old_format_manifest_republishes_once(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize(
     ("name", "max_jobs"),
-    [("vec_knn_index_kmeans_serve", 3), ("dedup_semantic_serve", 1)],
+    [
+        ("vec_knn_index_kmeans_serve", 2),
+        ("dedup_semantic_serve", 1),
+        ("vec_knn_index_kmeans_build", 6),
+        ("vec_knn_index_kmeans", 9),
+    ],
 )
 def test_warm_serve_construction_jobs(spark, sf_dir, name, max_jobs):
     """Warm construction runs only data jobs: no schema inference, no
-    fingerprint aggregate, one centroid-matrix read."""
+    fingerprint aggregate, no Spark job to write or read the centroid
+    matrix. The two rebuilding k-means queries run only their training
+    jobs plus one narrow index write (and, for the searching one, the
+    index read-back's inference and its query-side collects)."""
     REG[name].fn(spark, sf_dir).collect()  # cold: publish if absent
     _, n = _jobs(spark, lambda: REG[name].fn(spark, sf_dir))
     assert n <= max_jobs
