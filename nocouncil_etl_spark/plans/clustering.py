@@ -235,15 +235,14 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vec_knn_index_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF ANN: a fixed-k ({KC}-cell) integer k-means coarse
     quantizer is TRAINED on the corpus, pinned into the index artifact
-    (index parquet carries each vector's cell; a centroids.npy sidecar
-    carries the quantized centroid matrix), and served from storage —
-    queries rank the pinned cells by exact integer L2 and probe the top
-    {NPROBE}, then cosine-rank inside probed cells only. This is the
-    real-IVF upgrade of vec_knn_ivf's hash-derived cells: cell boundaries
-    ADAPT to the data (the reference's HNSW adapts the same way,
-    vectorize.py:119-123) while staying pinned after training, so
-    incremental upserts assign against the stored centroids and never
-    invalidate existing cells.
+    (index parquet carries each vector's cell; a centroids.npy sidecar holds
+    the quantized centroid matrix), and served from storage — queries rank
+    the pinned cells by exact integer L2 and probe the top {NPROBE}, then
+    cosine-rank inside probed cells only. This is the real-IVF upgrade of
+    vec_knn_ivf's hash-derived cells: cell boundaries ADAPT to the data
+    (the reference's HNSW adapts the same way, vectorize.py:119-123) while
+    staying pinned after training, so incremental upserts assign against
+    the stored centroids and never invalidate existing cells.
 
     Scale shape: training is O(n·k·d) per iteration with k fixed; the
     probe is the same Arrow kernel on the (tiny) query side; candidates

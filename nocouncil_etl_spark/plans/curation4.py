@@ -244,7 +244,6 @@ def dedup_semantic_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     augq = quantize_vectors(_sem_aug(spark, sf_dir), "v", "xq").persist()
     try:
         cent_ids, cm = kmeans_fit(augq, SEM_K, SEM_ITERS)
-        # the assignment pass carries each raw vector beside its cluster
         clustered = assign_l2(augq, cent_ids, cm, carry="v").select(
             F.col("cid").alias("cent_id"), "vec_id", "v"
         )
