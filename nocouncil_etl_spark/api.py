@@ -886,61 +886,20 @@ class Engine:
         b: float = 0.75,
     ) -> DataFrame:
         """Okapi BM25 top-k for ``terms`` over any document frame — the
-        text_bm25_search kernel generalized (DECIMAL-quantized per-term
-        parts so combine order cannot flip a ranking; test_api pins
-        row-identity against the oracle-checked catalog twin)."""
-        from pyspark.sql import functions as F
+        text_bm25_search kernel itself (retrieval_plans.bm25_per_doc /
+        bm25_parts: DECIMAL-quantized per-term parts so combine order
+        cannot flip a ranking; test_api2 pins row-identity against the
+        oracle-checked catalog twin). Nothing is pinned: the caller owns
+        caching. Repeated terms count once."""
+        from nocouncil_etl_spark.plans.retrieval_plans import (
+            _bm25_top,
+            bm25_parts,
+            bm25_per_doc,
+        )
 
-        tok = df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(
-                F.expr(
-                    f"filter(split(lower({text_col}), '[^a-z0-9]+'), t -> t != '')"
-                )
-            ).alias("term"),
-        )
-        dl = tok.groupBy("_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
-        meta = dl.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("dl").cast("long").alias("total_len"),
-        )
-        tf = (
-            tok.filter(F.col("term").isin(*terms))
-            .groupBy("_id", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        )
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-        j = tf.join(F.broadcast(dfreq), "term").join(dl, "_id").crossJoin(
-            F.broadcast(meta)
-        )
-        idf = F.log(
-            1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        norm = F.col("tf") + k1 * (
-            1.0
-            - b
-            + b * F.col("dl") * F.col("n_docs") / F.col("total_len").cast("double")
-        )
-        part = F.round(idf * (F.col("tf") * (k1 + 1.0)) / norm, 6).cast(
-            "decimal(18,6)"
-        )
-        out = (
-            j.select("_id", part.alias("part"))
-            .groupBy("_id")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
-                F.sum("part").alias("_dec"),
-            )
-        )
-        return (
-            out.orderBy(F.desc("_dec"), "_id")
-            .limit(k)
-            .select(
-                F.col("_id").alias(id_col),
-                "n_hit_terms",
-                F.col("_dec").cast("double").alias("bm25"),
-            )
-        )
+        terms = tuple(dict.fromkeys(terms))
+        per_doc = bm25_per_doc(df, id_col, text_col, terms)
+        return _bm25_top(bm25_parts(per_doc, terms, k1, b), k)
 
     def auc(self, df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         """Tie-corrected ROC AUC (Mann-Whitney) for any (score, 0/1 label)

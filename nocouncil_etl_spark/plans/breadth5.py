@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.plans.text_corpus_plans import _TOK_SPARK, _TOK_SQL
+from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
 
 EMA_LAGS = 16      # truncated EMA horizon (weight 2^-(j+1), j = 0..15)

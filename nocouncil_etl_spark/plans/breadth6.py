@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out, load
+from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
 
 FP = 1000  # per-mille fixed point
@@ -35,12 +36,6 @@ BETA_N = 100  # trend smoothing ×1000
 FORECAST_H = 4
 
 BPE_TOP = 20
-
-_TOK_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
-_TOK_SQL = (
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
-    " t -> length(t) > 0)"
-)
 
 
 # --------------------------------------------------------------------------

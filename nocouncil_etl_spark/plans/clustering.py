@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.operators.centroid_artifact import scratch_path
+from nocouncil_etl_spark.operators.centroid_artifact import (
+    read_centroids,
+    scratch_path,
+)
 from nocouncil_etl_spark.operators.kmeans import (
     OFFSET,
     QUANT,
@@ -231,6 +234,15 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rebuilt_index(spark: SparkSession, path: str) -> DataFrame:
+    """The index rows a call just rebuilt at ``path``, read with their known
+    schema: fresh files miss io.read_parquet's schema cache, so a plain read
+    would run one schema-inference job per call."""
+    return spark.read.schema("vec_id long, v array<double>, cid long").parquet(
+        f"{path}/index"
+    )
+
+
 @query("vec_knn_index_kmeans", oracle=_KIDX_ORACLE)
 def vec_knn_index_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF ANN: a fixed-k ({KC}-cell) integer k-means coarse
@@ -260,8 +272,9 @@ def vec_knn_index_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embeddings(spark, sf_dir)
     path = scratch_path(sf_dir, "vec_kidx")
     publish_kmeans_index(e, KC, KC_ITERS, path)
+    index = (_rebuilt_index(spark, path), *read_centroids(path))
     return search_kmeans_index(
-        e.filter(F.col("vec_id") % QUERY_MOD == 0), path, NPROBE, TOPK
+        e.filter(F.col("vec_id") % QUERY_MOD == 0), index, NPROBE, TOPK
     )
 
 
@@ -318,8 +331,7 @@ def vec_knn_index_kmeans_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_path(sf_dir, "vec_kidx") + "_build"
     publish_kmeans_index(e, KC, KC_ITERS, path)
     return (
-        spark.read.schema("vec_id long, v array<double>, cid long")
-        .parquet(f"{path}/index")
+        _rebuilt_index(spark, path)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
     )

@@ -28,11 +28,11 @@ from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.operators.fusion import mmr_greedy, rrf_fuse
 from nocouncil_etl_spark.registry import query
 from nocouncil_etl_spark.plans.retrieval_plans import (
-    _TOK_SPARK,
     _TOK_SQL,
     B,
     K1,
     QUERY_TERMS,
+    _bm25_parts,
 )
 
 _QT = ", ".join(f"'{t}'" for t in QUERY_TERMS)
@@ -43,24 +43,29 @@ FUSE_TOP = 20
 EVAL_K = 10
 
 
-def _dense_scored(e: DataFrame, n: int) -> DataFrame:
-    """(doc_id, c) dense cosine scores against the fixed query vector
-    (vec_id 0), pruned per Arrow batch to the batch top-``n``: the
-    candidate stage of similarity.blocked_topk (one numpy matmul per batch,
-    1e-6 epsilon guard, HALF_UP rounding, zero-norm-null) with no rank
-    window and no self-filter. The caller's global orderBy/limit ranks the
-    surviving ≤ (n+1)·n_batches rows."""
+def _dense_scored(emb: DataFrame, n: int) -> DataFrame:
+    """(doc_id, c) dense cosine scores of the loaded embeddings ``emb``
+    against the fixed query vector (vec_id 0), pruned per Arrow batch to
+    the batch top-``n``: the candidate stage of similarity.blocked_topk
+    (one numpy matmul per batch, 1e-6 epsilon guard, HALF_UP rounding,
+    zero-norm-null) with no rank window and no self-filter. The caller's
+    global orderBy/limit ranks the surviving ≤ (n+1)·n_batches rows. The
+    query vector is read from ``emb`` itself, not from its fan-out, so the
+    vec_id filter reaches the scan and the read is one job with no
+    shuffle; only the corpus side is fanned out for the kernel."""
     from nocouncil_etl_spark.operators.similarity import (
         _blocked_candidates,
         _collect_queries,
     )
 
-    q = e.filter(F.col("vec_id") == 0).select(F.lit(0).alias("q_id"), "embedding")
+    q = emb.filter(F.col("vec_id") == 0).select(F.lit(0).alias("q_id"), "embedding")
     rows = _collect_queries(q.limit(1))
     if not rows:
-        return e.sparkSession.createDataFrame([], "doc_id long, c double")
+        return emb.sparkSession.createDataFrame([], "doc_id long, c double")
     return (
-        _blocked_candidates(rows, e, n, None, "q_id", "vec_id", "embedding", "embedding")
+        _blocked_candidates(
+            rows, fan_out(emb), n, None, "q_id", "vec_id", "embedding", "embedding"
+        )
         .toDF("q_id", "doc_id", "c")
         .drop("q_id")
     )
@@ -92,44 +97,6 @@ scored AS (
   FROM tf JOIN df ON tf.term = df.term JOIN dl ON tf.doc_id = dl.doc_id
 )
 """
-
-
-def _bm25_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, term, tf, part DECIMAL(18,6)) — Spark twin of the CTE.
-
-    r11 opt: same rewrite as text_bm25_search — dl/tf computed row-locally
-    (size/filter HOFs, no explode, no doc-keyed shuffles), the compact
-    per-doc frame pinned once for meta/df/scoring (guide §2.4)."""
-    from nocouncil_etl_spark.plans.retrieval_plans import _bm25_per_doc
-
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    # r12 (r11 verdict item 8): recoverable persist instead of the one-shot
-    # localCheckpoint pin — see text_bm25_search for the rationale
-    per_doc = _bm25_per_doc(docs).persist()
-    per_doc.count()
-    meta = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-    )
-    tf = (
-        per_doc.select("doc_id", "dl", F.explode("tfs").alias("x"))
-        .select("doc_id", "dl", "x.term", "x.tf")
-        .filter(F.col("tf") > 0)
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    j = tf.join(F.broadcast(df), "term").crossJoin(F.broadcast(meta))
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    norm = F.col("tf") + K1 * (
-        1.0
-        - B
-        + B * F.col("dl") * F.col("n_docs") / F.col("total_len").cast("double")
-    )
-    part = F.round(idf * (F.col("tf") * (K1 + 1.0)) / norm, 6).cast(
-        "decimal(18,6)"
-    )
-    return j.select("doc_id", "term", "tf", part.alias("part"))
 
 
 # --------------------------------------------------------------------------
@@ -183,11 +150,12 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each ranker ends in a TakeOrderedAndProject of {LIST_N}
     rows, so the fusion join touches ≤2·{LIST_N} rows regardless of corpus
-    size; the dense scan is one narrow pass against a 1-row broadcast query
-    vector (the serving path for a single query — batch serving is
-    vec_knn_from_index's banded join). At 100 TB only the two linear scans
-    grow; the fusion stays constant-size."""
-    e = fan_out(load(spark, sf_dir, "embeddings"))
+    size; the dense scan is one narrow Arrow pass against the one collected
+    query vector (the serving path for a single query — batch serving is
+    vec_knn_from_index's banded join), and the lexical side is one pinned
+    tokenize pass (_bm25_parts). At 100 TB only the two linear scans grow;
+    the fusion stays constant-size."""
+    emb = load(spark, sf_dir, "embeddings")
     parts = _bm25_parts(spark, sf_dir)
     lex = (
         parts.groupBy("doc_id")
@@ -202,7 +170,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dense = (
-        _dense_scored(e, LIST_N)
+        _dense_scored(emb, LIST_N)
         .orderBy(F.desc("c"), "doc_id")
         .limit(LIST_N)
         .select(
@@ -474,7 +442,7 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_mmr_rerank, eval_ndcg_at_k) through shared kernels
     (operators/fusion) — the composed DAG is the thing the judge can
     value-hash, not just its parts."""
-    e = fan_out(load(spark, sf_dir, "embeddings"))
+    emb = load(spark, sf_dir, "embeddings")
     parts = _bm25_parts(spark, sf_dir)
     lex = (
         parts.groupBy("doc_id")
@@ -494,9 +462,9 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from one broadcast join of the 20 fused ids back to the corpus, with
     # rel recomputed by the identical JVM expression on those 20 rows only
     # — the corpus-sized cache disappears entirely.
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     dense = (
-        _dense_scored(e, LIST_N)
+        _dense_scored(emb, LIST_N)
         .orderBy(F.desc("c"), "doc_id")
         .limit(LIST_N)
         .select(
@@ -510,7 +478,9 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"lex": lex, "dense": dense}, "doc_id", k0=RRF_K0, top=E2E_CAND
     )
     cand = (
-        e.join(F.broadcast(fused.select("doc_id", "rrf")), e.vec_id == F.col("doc_id"))
+        emb.join(
+            F.broadcast(fused.select("doc_id", "rrf")), emb.vec_id == F.col("doc_id")
+        )
         .crossJoin(F.broadcast(qv))
         .select(
             "doc_id",

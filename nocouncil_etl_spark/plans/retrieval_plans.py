@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
-_TOK_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
+# alnum-run tokens, lowercased, in order — the one tokenizer of the catalog
+# (array_remove is a codegen'd builtin; no lambda per token)
+_TOK_SPARK = "array_remove(split(lower(text), '[^a-z0-9]+'), '')"
 _TOK_SQL = (
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
     " t -> length(t) > 0)"
@@ -49,32 +51,93 @@ NB_VOCAB = 50  # vocabulary size (top document-frequency terms)
 _QT = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
 
-def _bm25_per_doc(docs: DataFrame) -> DataFrame:
-    """(doc_id, dl, tfs: array<struct<term,tf>>) — one row per non-empty
-    doc, computed ROW-LOCALLY: dl = size(tokens), tf(term) =
-    size(filter(tokens, = term)). Exactly the integers the explode +
-    groupBy shape produced (a doc with zero tokens had no dl row there,
-    so dl > 0 filters them identically), with zero shuffle. The token
-    array is aliased once in its own projection; CollapseProject keeps
-    multi-referenced non-trivial aliases, so tokenization runs once per
-    row, not once per consumer expression."""
-    toked = docs.select("doc_id", F.expr(_TOK_SPARK).alias("toks"))
-    tfs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("term"),
-                F.size(
-                    F.filter(F.col("toks"), lambda x: x == F.lit(t))
-                )
-                .cast("long")
-                .alias("tf"),
-            )
-            for t in QUERY_TERMS
-        ]
-    )
+def bm25_per_doc(
+    docs: DataFrame, id_col: str, text_col: str, terms: tuple[str, ...]
+) -> DataFrame:
+    """(id_col, dl, tfs: array<long>, one tf per term) — one row per doc,
+    computed ROW-LOCALLY with codegen'd builtins only: dl = size(tokens),
+    tf(term) = size(tokens) − size(array_remove(tokens, term)). No lambda,
+    no explode, no filter, so nothing here can be pushed below the
+    caller's fan_out: a zero-token doc keeps its row with dl = 0 and no
+    hits, and bm25_parts leaves it out of n_docs. Terms are values
+    (literals), never SQL text. The token array is aliased once in its own
+    projection; CollapseProject keeps multi-referenced non-trivial
+    aliases, so tokenization runs once per row."""
+    toked = docs.select(
+        F.col(id_col).alias("_id"), F.col(text_col).alias("text")
+    ).select("_id", F.expr(_TOK_SPARK).alias("toks"))
+    n = F.size("toks")
+    tfs = F.array(*[n - F.size(F.array_remove("toks", t)) for t in terms])
     return toked.select(
-        "doc_id", F.size("toks").cast("long").alias("dl"), tfs.alias("tfs")
-    ).filter(F.col("dl") > 0)
+        F.col("_id").alias(id_col),
+        n.cast("long").alias("dl"),
+        tfs.cast("array<long>").alias("tfs"),
+    )
+
+
+def bm25_parts(
+    per_doc: DataFrame, terms: tuple[str, ...], k1: float = K1, b: float = B
+) -> DataFrame:
+    """(id, term, tf, part DECIMAL(18,6)) — one row per (doc, hit term)
+    of a bm25_per_doc frame. The corpus statistics are ONE aggregate row —
+    n_docs (docs with dl > 0, the oracle's dl CTE), total_len and one df
+    per term — attached by a broadcast cross join, so no term-keyed join
+    or df groupBy is planned. posexplode_outer, not explode: plain explode
+    infers a size(tfs) > 0 filter that Spark pushes below the fan-out."""
+    id_col = per_doc.columns[0]
+    live = F.col("dl") > 0
+    stats = per_doc.agg(
+        F.count(F.when(live, 1)).alias("n_docs"),
+        F.sum(F.when(live, F.col("dl"))).alias("total_len"),
+        F.array(
+            *[F.count(F.when(F.col("tfs")[i] > 0, 1)) for i in range(len(terms))]
+        ).alias("dfs"),
+    )
+    hits = per_doc.select(
+        id_col, "dl", F.posexplode_outer("tfs").alias("i", "tf")
+    ).filter(F.col("tf") > 0)
+    df = F.col("dfs")[F.col("i")]
+    idf = F.log(1.0 + (F.col("n_docs") - df + 0.5) / (df + 0.5))
+    norm = F.col("tf") + k1 * (
+        1.0 - b + b * F.col("dl") * F.col("n_docs") / F.col("total_len").cast("double")
+    )
+    part = F.round(idf * (F.col("tf") * (k1 + 1.0)) / norm, 6).cast("decimal(18,6)")
+    return hits.crossJoin(F.broadcast(stats)).select(
+        id_col,
+        F.array(*[F.lit(t) for t in terms])[F.col("i")].alias("term"),
+        "tf",
+        part.alias("part"),
+    )
+
+
+def _bm25_top(parts: DataFrame, k: int) -> DataFrame:
+    """(id, n_hit_terms, bm25) — the top ``k`` docs of a bm25_parts frame
+    by (DECIMAL score desc, id): the per-doc sum runs on the quantized
+    parts, so combine order cannot flip a ranking."""
+    id_col = parts.columns[0]
+    out = parts.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
+        F.sum("part").alias("_dec"),
+    )
+    return (
+        out.orderBy(F.desc("_dec"), id_col)
+        .limit(k)
+        .select(id_col, "n_hit_terms", F.col("_dec").cast("double").alias("bm25"))
+    )
+
+
+def _bm25_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """bm25_parts for the catalog's fixed query over ``documents``. The
+    per-doc frame is pinned LAZILY (persist, no count): under AQE the
+    cached relation is one TableCacheQueryStage that the statistics branch
+    and the scoring branch both read, so the corpus is scanned and
+    tokenized once per run and no Spark job runs before the caller's
+    action. persist, not localCheckpoint: lineage is kept, so an executor
+    loss recomputes the tokenize pass. Caller-owned cache, cleared per
+    query by the harness."""
+    docs = fan_out(load(spark, sf_dir, "documents"))
+    per_doc = bm25_per_doc(docs, "doc_id", "text", QUERY_TERMS).persist()
+    return bm25_parts(per_doc, QUERY_TERMS)
 
 
 @query(
@@ -119,58 +182,13 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties are impossible to flip by combine order; final order (score desc,
     doc_id) is total.
 
-    Scale shape (r11 opt): tokenization is ONE narrow pass with NO explode
-    and NO doc-keyed shuffle — dl is size(tokens) and each query term's tf
-    is size(filter(tokens, = term)), all computed row-locally (guide §2.4:
-    remove shuffles outright; the old shape exploded the full token stream
-    twice and shuffled it by doc_id for dl and by (doc_id, term) for tf).
-    The compact per-doc frame (doc_id, dl, ≤|Q| tf structs — no text) is
-    pinned once and feeds meta, df and the scoring join, so the corpus is
-    tokenized exactly once per run instead of once per consumer. df is |Q|
-    rows (broadcast); TakeOrderedAndProject caps the result."""
-    docs = fan_out(load(spark, sf_dir, "documents"))
-    # r12 (r11 verdict item 8): one-shot pin → recoverable persist (lineage
-    # kept, so an executor loss recomputes the tokenize pass instead of
-    # killing the job; localCheckpoint stays reserved for iterative graph
-    # state). Materialized once so meta/df/scoring can't race the cache
-    # fill; caller-owned cache, cleared per query by the harness.
-    per_doc = _bm25_per_doc(docs).persist()
-    per_doc.count()
-    meta = per_doc.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_len"),
-    )
-    tf = (
-        per_doc.select("doc_id", "dl", F.explode("tfs").alias("x"))
-        .select("doc_id", "dl", "x.term", "x.tf")
-        .filter(F.col("tf") > 0)
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    j = tf.join(F.broadcast(df), "term").crossJoin(F.broadcast(meta))
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    norm = F.col("tf") + K1 * (
-        1.0
-        - B
-        + B
-        * F.col("dl")
-        * F.col("n_docs")
-        / F.col("total_len").cast("double")
-    )
-    part = F.round(idf * (F.col("tf") * (K1 + 1.0)) / norm, 6).cast(
-        "decimal(18,6)"
-    )
-    scored = j.select("doc_id", part.alias("part"))
-    out = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hit_terms"),
-        F.sum("part").alias("bm25_dec"),
-    )
-    return (
-        out.orderBy(F.desc("bm25_dec"), "doc_id")
-        .limit(BM25_TOP)
-        .select("doc_id", "n_hit_terms", F.col("bm25_dec").cast("double").alias("bm25"))
-    )
+    Scale shape: tokenization is ONE narrow, fully codegen'd pass with no
+    explode and no doc-keyed shuffle (bm25_per_doc); the compact per-doc
+    frame (doc_id, dl, |Q| tfs — no text) is pinned lazily and feeds both
+    the one-row corpus statistics and the scoring rows, so the corpus is
+    tokenized exactly once per run (_bm25_parts). The statistics row is
+    broadcast; TakeOrderedAndProject caps the result."""
+    return _bm25_top(_bm25_parts(spark, sf_dir), BM25_TOP)
 
 
 # --------------------------------------------------------------------------

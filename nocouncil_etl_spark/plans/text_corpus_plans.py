@@ -1,7 +1,7 @@
 """Corpus-preparation queries (north-star training-data ops, batch 4):
 overlapping chunking for embedding/RAG prep, per-source token-budget
 sampling, global vocabulary, and TF-IDF term extraction. All pure DataFrame
-expressions — tokenization stays in codegen (split/filter/transform), the
+expressions — tokenization stays in codegen (split/array_remove/transform), the
 only shuffles are the keyed aggregations the semantics require.
 """
 
@@ -11,18 +11,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out, load
+from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
 
 CHUNK = 64       # tokens per chunk
 OVERLAP = 16     # tokens shared with the previous chunk
 STRIDE = CHUNK - OVERLAP
-
-# alnum-run tokens, lowercased — the same BPE-ish stream as text_token_count
-_TOK_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
-_TOK_SQL = (
-    "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),"
-    " t -> length(t) > 0)"
-)
 
 
 @query(

@@ -3,10 +3,13 @@
 from __future__ import annotations
 
 import math
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
+from nocouncil_etl_spark.plancheck import _children
 from nocouncil_etl_spark.plans.retrieval_plans import B, BM25_TOP, K1, QUERY_TERMS
 from nocouncil_etl_spark.registry import load_all
 
@@ -75,3 +78,102 @@ def test_naive_bayes_beats_majority_baseline(spark, sf_dir):
     assert acc > majority, f"acc {acc} vs majority {majority}"
     # predictions only come from observed classes
     assert {r.predicted for r in conf} <= set(by_actual)
+
+
+# --------------------------------------------------------------------------
+# BM25 kernel: executed-plan shape and zero-token documents
+# --------------------------------------------------------------------------
+
+BM25_QUERIES = [
+    "text_bm25_search",
+    "retrieval_rrf_fusion",
+    "eval_ndcg_at_k",
+    "eval_retrieval_pr_at_k",
+    "pipeline_retrieval_e2e",
+]
+
+
+def _head(node) -> str:
+    return node.toString().splitlines()[0]
+
+
+def _nodes(spark, plan):
+    """Each node of an executed plan once, deduplicated by JVM identity
+    (a cached subtree is reached from every scan of it), descending into
+    AQE stages, cached plans and reused exchanges."""
+    ident = spark._jvm.java.lang.System.identityHashCode
+    seen, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        if ident(node) in seen:
+            continue
+        seen.add(ident(node))
+        yield node
+        stack.extend(_children(node))
+
+
+@pytest.mark.parametrize("name", BM25_QUERIES)
+def test_bm25_plan_tokenizes_once_after_fan_out(spark, sf_dir, name):
+    """Executed plan of each BM25 query: the tokenizer never runs below the
+    round-robin fan-out (nothing pushed into the scan's tasks), the
+    documents table is scanned once (the statistics and scoring branches
+    share the pinned per-doc relation), and no broadcast join is keyed on
+    the term."""
+    df = REG[name].fn(spark, sf_dir)
+    try:
+        df.collect()
+        scans = 0
+        for node in _nodes(spark, df._jdf.queryExecution().executedPlan()):
+            head = _head(node)
+            if "RoundRobinPartitioning" in head:
+                below = [_head(n) for n in _nodes(spark, node)]
+                assert not any("split(lower(" in h for h in below), head
+            if node.nodeName().startswith("Scan parquet") and "documents" in head:
+                scans += 1
+            if node.nodeName().startswith("BroadcastHashJoin"):
+                assert not re.search(r"\bterm#", head), head
+        assert scans == 1
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_bm25_zero_token_docs_leave_no_trace(spark, tmp_path):
+    """A punctuation-only, an empty and a NULL-text document have no
+    tokens: they are not counted in n_docs or total_len (the oracle's dl
+    CTE has no row for them), so adding them changes no score, and the
+    ranking equals DuckDB's on the same table."""
+    import duckdb
+
+    rows = [
+        (1, "Spark query spark"),
+        (2, "window stream, vector!"),
+        (3, "Spark streaming: window query vector vector"),
+        (4, "nothing relevant here at all"),
+        (5, "spark spark spark window"),
+        (6, "stream vector query"),
+    ]
+    blank = [(7, "...!!! ??? --- ;"), (8, ""), (9, None)]
+
+    def run(data, sub):
+        d = tmp_path / sub
+        d.mkdir()
+        path = str(d / "documents.parquet")
+        spark.createDataFrame(data, "doc_id long, text string").write.parquet(path)
+        try:
+            got = REG["text_bm25_search"].fn(spark, str(d)).collect()
+        finally:
+            spark.catalog.clearCache()
+        with duckdb.connect() as con:
+            con.execute(
+                "CREATE VIEW documents AS"
+                f" SELECT * FROM read_parquet('{path}/*.parquet')"
+            )
+            want = con.execute(REG["text_bm25_search"].oracle).fetchall()
+        return [tuple(r) for r in got], want
+
+    got, want = run(rows + blank, "with_blank")
+    base, _ = run(rows, "without_blank")
+    assert [r[0] for r in got] == [r[0] for r in want]
+    for g, w in zip(got, want):
+        assert g[1] == w[1] and abs(g[2] - w[2]) < 1e-9
+    assert got == base
