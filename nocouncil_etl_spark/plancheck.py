@@ -19,6 +19,8 @@ from __future__ import annotations
 import re
 from collections import deque
 
+from pyspark import SparkContext
+
 #: physical nodes that bound their output by construction
 LIMIT_NODES = {"TakeOrderedAndProject", "GlobalLimit", "CollectLimit", "LocalLimit"}
 
@@ -58,17 +60,27 @@ def _children(n):
     return out
 
 
-def walk_plan(n, seen=None):
-    """Depth-first over the executed plan, descending into AQE stages,
-    cached subtrees, and reused exchanges."""
-    if seen is None:
-        seen = set()
-    if id(n) in seen:
-        return
-    seen.add(id(n))
-    yield n
-    for c in _children(n):
-        yield from walk_plan(c, seen)
+def walk_plan(root, descend=None):
+    """Breadth-first over the executed plan from ``root``, descending into
+    AQE stages, cached subtrees, and reused exchanges. Each JVM node is
+    yielded once: nodes are told apart by JVM identity, not by the Python
+    ``id()`` of their short-lived Py4J proxies (a freed proxy's id is
+    reused), so a node reached along two paths, such as a cached subtree
+    under every scan of it, is one node. ``descend(node)`` returning False
+    yields that node without walking below it."""
+    seen = SparkContext._jvm.java.util.IdentityHashMap()
+    q = deque([root])
+    while q:
+        n = q.popleft()
+        if seen.put(n, True):  # the previous value: None on a first visit
+            continue
+        yield n
+        if descend is None or descend(n):
+            q.extend(_children(n))
+
+
+def _base(n) -> str:
+    return n.nodeName().split(" (")[0].strip()
 
 
 def _metric(n, key="numOutputRows"):
@@ -88,14 +100,10 @@ def window_input_rows(inp) -> tuple[str, int | None]:
     limit node bounds the input on the way down (rows None, bounded by
     construction); node == 'unknown' means no metric was reachable.
     """
-    q = deque([inp])
-    seen: set[int] = set()
-    while q:
-        n = q.popleft()
-        if id(n) in seen:
-            continue
-        seen.add(id(n))
-        base = n.nodeName().split(" (")[0]
+    # a non-passthrough node without the metric ends its branch:
+    # descending further would measure a different row domain
+    for n in walk_plan(inp, descend=lambda n: _base(n) in _PASSTHROUGH):
+        base = _base(n)
         if base in LIMIT_NODES:
             return "limit", None
         r = _metric(n)
@@ -111,10 +119,6 @@ def window_input_rows(inp) -> tuple[str, int | None]:
             rw = _metric(n, "shuffleRecordsWritten")
             if rw is not None:
                 return base, rw
-        if base in _PASSTHROUGH:
-            q.extend(_children(n))
-        # a non-passthrough node without the metric ends this branch:
-        # descending further would measure a different row domain
     return "unknown", None
 
 
@@ -214,35 +218,39 @@ def unfanned_generates(df) -> list[tuple[str, str]]:
     compressed file locally, a straggler per oversized file at 100 TB; fix
     is io.fan_out ahead of the explode). Returns (generate, scan) string
     pairs; cached subtrees and AQE stages are descended."""
-    from collections import deque as _dq
-
     bad: list[tuple[str, str]] = []
     for node in walk_plan(df._jdf.queryExecution().executedPlan()):
-        if node.nodeName().split(" (")[0] != "Generate":
+        if _base(node) != "Generate":
             continue
         head = node.toString().splitlines()[0]
         # format: Generate <gen>[, [requiredChildOutput]], <outer>, [output]
         m = re.match(r"Generate (.*?)(?:, \[[^\]]*\])?, (?:false|true), \[", head)
         if m and _bounded_generator(m.group(1)):
             continue
-        q = _dq(_children(node))
-        seen: set[int] = set()
-        while q:
-            n = q.popleft()
-            if id(n) in seen:
-                continue
-            seen.add(id(n))
-            base = n.nodeName().split(" (")[0].strip()
-            if base in _FANNED_NODES or base in LIMIT_NODES or base in _BOUNDED_LEAVES:
-                continue  # this branch is fanned/bounded — stop descending
-            if base == "Scan ExistingRDD":  # driver-local rows, bounded
-                continue
-            if base.startswith("Scan") or base in ("FileSourceScan", "BatchScan"):
+        below = walk_plan(node, descend=lambda n: not _ends_narrow_path(_base(n)))
+        next(below)  # the Generate itself
+        for n in below:
+            base = _base(n)
+            # Scan ExistingRDD is driver-local rows, bounded
+            if _is_scan(base) and base != "Scan ExistingRDD":
                 sdesc = n.toString().splitlines()[0][:200]
-                bad.append((node.toString().splitlines()[0][:120], sdesc))
-                continue
-            q.extend(_children(n))
+                bad.append((head[:120], sdesc))
     return bad
+
+
+def _is_scan(base: str) -> bool:
+    return base.startswith("Scan") or base in ("FileSourceScan", "BatchScan")
+
+
+def _ends_narrow_path(base: str) -> bool:
+    """A branch below a Generate stops at a fanned or bounded node, or at
+    the scan it reads."""
+    return (
+        base in _FANNED_NODES
+        or base in LIMIT_NODES
+        or base in _BOUNDED_LEAVES
+        or _is_scan(base)
+    )
 
 
 def plan_has_global_window(df) -> bool:

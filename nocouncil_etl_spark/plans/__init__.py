@@ -1,156 +1,8 @@
-"""Query catalog — importing this package registers every named query.
+"""Query catalog — one module per band of the SURVEY.md §2 operator inventory.
 
-Each module covers a band of the SURVEY.md §2 operator inventory.
+Importing this package registers nothing. Each module registers its own
+queries with ``@query("name", ...)`` when it is imported, and
+``registry.load_all()`` indexes those lines from the sources here and imports
+a module on the first lookup of one of its names. A new module needs no
+listing anywhere: dropping it in this directory puts it in the catalog.
 """
-
-from nocouncil_etl_spark.plans import (  # noqa: F401
-    aggregates,
-    analytics4,
-    analytics5,
-    analytics6,
-    breadth2,
-    breadth3,
-    breadth4,
-    breadth5,
-    breadth6,
-    breadth7,
-    breadth8,
-    breadth9,
-    breadth10,
-    breadth11,
-    breadth12,
-    breadth13,
-    breadth14,
-    breadth15,
-    breadth16,
-    breadth17,
-    breadth18,
-    breadth19,
-    breadth20,
-    breadth21,
-    breadth22,
-    breadth23,
-    breadth24,
-    breadth25,
-    breadth26,
-    breadth27,
-    breadth28,
-    breadth29,
-    breadth30,
-    breadth31,
-    breadth32,
-    breadth33,
-    breadth34,
-    breadth35,
-    breadth36,
-    breadth37,
-    breadth38,
-    breadth39,
-    breadth40,
-    breadth41,
-    breadth42,
-    breadth43,
-    breadth44,
-    breadth45,
-    breadth46,
-    breadth47,
-    breadth48,
-    breadth49,
-    breadth50,
-    breadth51,
-    breadth52,
-    breadth53,
-    breadth54,
-    breadth55,
-    breadth56,
-    breadth57,
-    breadth58,
-    breadth59,
-    breadth60,
-    breadth61,
-    breadth62,
-    breadth63,
-    breadth64,
-    breadth65,
-    breadth66,
-    breadth67,
-    breadth68,
-    breadth69,
-    breadth70,
-    breadth71,
-    breadth72,
-    breadth73,
-    breadth74,
-    breadth75,
-    breadth76,
-    breadth77,
-    breadth78,
-    breadth79,
-    breadth80,
-    breadth81,
-    breadth82,
-    breadth83,
-    chunk_summarize_plans,
-    clustering,
-    curation,
-    curation2,
-    curation3,
-    curation4,
-    curation5,
-    curation6,
-    curation7,
-    curation8,
-    dedup_plans,
-    dpo_pipeline,
-    evalstats,
-    extract_plans,
-    featurestore_plans,
-    flagship,
-    geo_plans,
-    graph2,
-    graph3,
-    graph_plans,
-    joins,
-    misc_fns,
-    mlcurve2,
-    mlcurve_plans,
-    mlprep2,
-    mlprep3,
-    mlprep4,
-    mlprep5,
-    mlprep_plans,
-    model_plans,
-    multimodal2,
-    normalization_plans,
-    pca_plans,
-    pipeline_plans,
-    pq_plans,
-    privacy_plans,
-    range_time_plans,
-    relational,
-    experiment_plans,
-    retrieval2,
-    robust_plans,
-    retrieval_plans,
-    scalar_functions,
-    sketches3,
-    sketches4,
-    source_plans,
-    stats2,
-    stats3,
-    stats4,
-    streaming_plans,
-    text_corpus_plans,
-    text_plans,
-    timeseries2,
-    timeseries3,
-    tpch_final,
-    tpch_like,
-    tpch_more,
-    tpch_more2,
-    udaf_plans,
-    vectors2,
-    vectors_plans,
-    window_more,
-    windows,
-)

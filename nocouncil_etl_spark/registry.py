@@ -5,6 +5,12 @@ a Spark callable ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible)
 an equivalent ANSI-SQL oracle string for DuckDB. ``__spark_entry__.py`` is a
 thin view over this registry.
 
+A plans module registers its queries when it is imported. ``load_all()`` does
+not import them: it indexes every ``@query("name"`` line of the plans sources
+and returns a read-only mapping that imports the one module owning a name on
+its first lookup. Listing, counting and membership read the index alone, so a
+process that serves a few queries compiles only the modules that define them.
+
 Design rule (SURVEY.md §5.2): every aggregate/computed column is aliased the
 same on both sides, doubles are rounded identically on both sides, and
 timestamps cross the boundary as epoch microseconds — so the driver's
@@ -13,10 +19,18 @@ order-insensitive value hash is stable.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import importlib
+import os
+import re
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+PLANS = "nocouncil_etl_spark.plans"
+_PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
+_QUERY_LINE = re.compile(r'^@query\(\s*"(\w+)"', re.M)
 
 
 @dataclass(frozen=True)
@@ -42,8 +56,43 @@ def query(name: str, oracle: str | None = None) -> Callable:
     return deco
 
 
-def load_all() -> dict[str, Query]:
-    """Import every plans module so its @query decorators run; idempotent."""
-    import nocouncil_etl_spark.plans  # noqa: F401  (imports populate REGISTRY)
+def index_plans() -> dict[str, str]:
+    """Query name → the plans module whose source registers it."""
+    index: dict[str, str] = {}
+    for fname in sorted(os.listdir(_PLANS_DIR)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(_PLANS_DIR, fname), encoding="utf-8") as fh:
+            for name in _QUERY_LINE.findall(fh.read()):
+                if name in index:
+                    raise ValueError(f"duplicate query name: {name}")
+                index[name] = fname[:-3]
+    return index
 
-    return REGISTRY
+
+class Catalog(Mapping):
+    """Read-only view of every query; a lookup imports the owning module."""
+
+    def __init__(self, index: dict[str, str]):
+        self._index = index
+
+    def __getitem__(self, name: str) -> Query:
+        module = self._index[name]
+        if name not in REGISTRY:
+            importlib.import_module(f"{PLANS}.{module}")
+        return REGISTRY[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._index
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._index)
+
+    def __len__(self) -> int:
+        return len(self._index)
+
+
+@functools.cache
+def load_all() -> Catalog:
+    """The query catalog, indexed from the plans sources on the first call."""
+    return Catalog(index_plans())

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.plancheck import _children
+from nocouncil_etl_spark.plancheck import walk_plan
 from nocouncil_etl_spark.plans.retrieval_plans import B, BM25_TOP, K1, QUERY_TERMS
 from nocouncil_etl_spark.registry import load_all
 
@@ -97,21 +97,6 @@ def _head(node) -> str:
     return node.toString().splitlines()[0]
 
 
-def _nodes(spark, plan):
-    """Each node of an executed plan once, deduplicated by JVM identity
-    (a cached subtree is reached from every scan of it), descending into
-    AQE stages, cached plans and reused exchanges."""
-    ident = spark._jvm.java.lang.System.identityHashCode
-    seen, stack = set(), [plan]
-    while stack:
-        node = stack.pop()
-        if ident(node) in seen:
-            continue
-        seen.add(ident(node))
-        yield node
-        stack.extend(_children(node))
-
-
 @pytest.mark.parametrize("name", BM25_QUERIES)
 def test_bm25_plan_tokenizes_once_after_fan_out(spark, sf_dir, name):
     """Executed plan of each BM25 query: the tokenizer never runs below the
@@ -123,10 +108,10 @@ def test_bm25_plan_tokenizes_once_after_fan_out(spark, sf_dir, name):
     try:
         df.collect()
         scans = 0
-        for node in _nodes(spark, df._jdf.queryExecution().executedPlan()):
+        for node in walk_plan(df._jdf.queryExecution().executedPlan()):
             head = _head(node)
             if "RoundRobinPartitioning" in head:
-                below = [_head(n) for n in _nodes(spark, node)]
+                below = [_head(n) for n in walk_plan(node)]
                 assert not any("split(lower(" in h for h in below), head
             if node.nodeName().startswith("Scan parquet") and "documents" in head:
                 scans += 1
