@@ -14,6 +14,11 @@ facade exposes those capabilities as one object over any DataFrame:
     eng.embed(docs, "text")
     eng.search(index, query_vec_df, k=10, strategy="lsh")
     eng.run("pricing_summary", "/data/sf0.1")   # anything in the catalog
+
+The rule for verbs: a verb with an oracle-checked catalog twin calls the
+kernel that the twin's query calls (``eng.auc`` → ``evalstats.roc_auc``,
+the body of ``eval_roc_auc``). The verb adds only its signature, its
+docstring and column names, so it cannot drift from the checked query.
 """
 
 from __future__ import annotations
@@ -91,8 +96,10 @@ class Engine:
         form). One scan, map-side-combined."""
         from pyspark.sql import functions as F
 
+        from nocouncil_etl_spark.functions.numeric import hash60
+
         key = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+        h = hash60(key)
         row = (
             df.select(h.alias("h"))
             .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x"))
@@ -170,23 +177,14 @@ class Engine:
         key columns and range-partition + sort the rows by the interleaved
         key, so every output file is locally bounded in BOTH dimensions —
         parquet min/max stats then prune scans on either predicate (the
-        OPTIMIZE ZORDER layout; kernel oracle-checked as fn_morton_zorder,
-        bounding-box shrinkage measured in tests/test_layout5.py)."""
-        from pyspark.sql import functions as F
+        OPTIMIZE ZORDER layout; the key is fn_morton_zorder's
+        analytics5.morton_key, bounding-box shrinkage measured in
+        tests/test_layout5.py)."""
+        from nocouncil_etl_spark.plans.analytics5 import morton_key
 
-        masks = [(8, 16711935), (4, 252645135), (2, 858993459), (1, 1431655765)]
-
-        def spread(c):
-            e = F.col(c).cast("long")
-            for sh, m in masks:
-                e = (e.bitwiseOR(F.shiftleft(e, sh))).bitwiseAND(F.lit(m))
-            return e
-
-        keyed = df.withColumn(
-            "_z", spread(x_col).bitwiseOR(F.shiftleft(spread(y_col), 1))
-        )
         (
-            keyed.repartitionByRange(n_files, "_z")
+            df.withColumn("_z", morton_key(x_col, y_col))
+            .repartitionByRange(n_files, "_z")
             .sortWithinPartitions("_z")
             .drop("_z")
             .write.mode("overwrite")
@@ -385,19 +383,12 @@ class Engine:
 
     # --- curation (training-data ops) ---------------------------------------
 
-    @staticmethod
-    def _hash_bucket(id_col):
-        from pyspark.sql import functions as F
-
-        return (
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-            .cast("long") % 100
-        )
-
     def sample(self, df: DataFrame, id_col: str, pct: int) -> DataFrame:
         """Deterministic ~pct% sample by id-hash bucket — reproducible across
         runs and task retries (df.sample() is not)."""
-        return df.filter(self._hash_bucket(id_col) < pct)
+        from nocouncil_etl_spark.functions.numeric import pct_bucket
+
+        return df.filter(pct_bucket(id_col) < pct)
 
     def split(
         self, df: DataFrame, id_col: str, train_pct: int = 80, val_pct: int = 10
@@ -406,7 +397,9 @@ class Engine:
         is a property of the row, stable under backfills and late data."""
         from pyspark.sql import functions as F
 
-        b = self._hash_bucket(id_col)
+        from nocouncil_etl_spark.functions.numeric import pct_bucket
+
+        b = pct_bucket(id_col)
         return df.withColumn(
             "split",
             F.when(b < train_pct, F.lit("train"))
@@ -551,44 +544,33 @@ class Engine:
 
         Pass ``k`` to TRAIN a fixed-k integer k-means (operators/kmeans.py)
         on the corpus — the scale-correct mode: assignment is O(n·k) with a
-        constant-size closure at any corpus size. Add ``artifact_path`` to
-        publish-once/serve-many the trained centroids
-        (operators/centroid_artifact — dedup_semantic_serve's kernel:
-        warm calls load the pinned matrix and never retrain). Passing
-        ``centroids`` uses that frame as-is; otherwise the legacy
+        constant-size closure at any corpus size; it is
+        dedup_semantic_centroid's kernel (semantic.trained_near_duplicates).
+        Add ``artifact_path`` to publish-once/serve-many the trained
+        centroids (operators/centroid_artifact — dedup_semantic_serve's
+        kernel: warm calls load the pinned matrix and never retrain).
+        Passing ``centroids`` uses that frame as-is; otherwise the legacy
         1/cent_mod id sample is used (whose k grows with the corpus — fine
         for small frames, guarded by MAX_CENTROIDS beyond that)."""
         from pyspark.sql import functions as F
 
         from nocouncil_etl_spark.operators.semantic import (
-            cluster_pair_scan,
             semantic_near_duplicates,
+            trained_near_duplicates,
         )
 
         v = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
         if k is not None:
-            from nocouncil_etl_spark.operators.kmeans import (
-                assign_l2,
-                kmeans_fit,
-                quantize_vectors,
+            if artifact_path is None:
+                return trained_near_duplicates(v, k, iters, threshold)
+            from nocouncil_etl_spark.operators.centroid_artifact import (
+                serve_centroids,
             )
 
-            vq = quantize_vectors(v, "v", "xq").persist()
-            try:
-                if artifact_path is not None:
-                    from nocouncil_etl_spark.operators.centroid_artifact import (
-                        serve_centroids,
-                    )
-
-                    cent_ids, cm = serve_centroids(vq, k, iters, artifact_path)
-                else:
-                    cent_ids, cm = kmeans_fit(vq, k, iters)
-                clustered = assign_l2(vq, cent_ids, cm, carry="v").select(
-                    F.col("cid").alias("cent_id"), "vec_id", "v"
-                )
-                return cluster_pair_scan(clustered, threshold)
-            finally:
-                vq.unpersist()
+            return trained_near_duplicates(
+                v, k, iters, threshold,
+                fit=lambda vq, k, iters: serve_centroids(vq, k, iters, artifact_path),
+            )
         cent = (
             centroids.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
             if centroids is not None
@@ -636,25 +618,11 @@ class Engine:
     ) -> DataFrame:
         """First-order Markov transition matrix over any keyed event
         stream → (from_state, to_state, n, p); p row-normalizes per
-        from_state (the session_transitions plan, generalized)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
+        from_state (session_transitions' kernel, breadth5.markov_transitions)."""
+        from nocouncil_etl_spark.plans.breadth5 import markov_transitions
 
         order = [ts_col] + ([order_col] if order_col else [])
-        w = Window.partitionBy(key_col).orderBy(*order)
-        t = df.select(
-            F.col(state_col).alias("to_state"),
-            F.lag(state_col).over(w).alias("from_state"),
-        ).filter(F.col("from_state").isNotNull())
-        m = t.groupBy("from_state", "to_state").agg(F.count(F.lit(1)).alias("n"))
-        row_total = F.sum("n").over(Window.partitionBy("from_state"))
-        return m.select(
-            "from_state",
-            "to_state",
-            "n",
-            F.round(F.col("n").cast("double") / row_total.cast("double"), 6)
-            .alias("p"),
-        )
+        return markov_transitions(df, key_col, order, state_col)
 
     def ema(
         self,
@@ -666,27 +634,13 @@ class Engine:
         order_col: str | None = None,
     ) -> DataFrame:
         """Fixed-point EMA (α = 1/2) truncated at ``lags`` observations —
-        the deterministic form of the recursive smoother (the
-        ts_ema_fixedpoint kernel, generalized). Rows without a full
-        history are skipped."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
+        the deterministic form of the recursive smoother (ts_ema_fixedpoint's
+        kernel, breadth5.ema_fixedpoint): ``df`` plus ``ema``. Rows without
+        a full history are skipped."""
+        from nocouncil_etl_spark.plans.breadth5 import ema_fixedpoint
 
         order = [ts_col] + ([order_col] if order_col else [])
-        w = Window.partitionBy(key_col).orderBy(*order)
-        v4 = F.round(F.col(value_col) * 10000, 0).cast("long")
-        base = df.withColumn("_v4", v4)
-        s = None
-        for j in range(lags):
-            term = F.lag("_v4", j).over(w) * F.lit(1 << (lags - 1 - j))
-            s = term if s is None else s + term
-        den = float((1 << lags) * 10000)
-        return (
-            base.withColumn("ema", F.round(s.cast("double") / F.lit(den), 6))
-            .withColumn("_full", F.lag("_v4", lags - 1).over(w).isNotNull())
-            .filter("_full")
-            .drop("_v4", "_full")
-        )
+        return ema_fixedpoint(df, key_col, order, value_col, lags)
 
     def pagerank(
         self,
@@ -817,35 +771,11 @@ class Engine:
         """Staged funnel over arbitrary (name, predicate-Column) steps: a
         key survives step k only with an event matching step k's predicate
         STRICTLY AFTER its first qualifying step-(k-1) event. Returns one
-        row per step: (stage, stage_no, n_keys). Generalizes the
-        funnel_conversion plan."""
-        from pyspark.sql import functions as F
+        row per step: (stage, stage_no, n_keys) — funnel_conversion's
+        kernel (analytics4.funnel_stages)."""
+        from nocouncil_etl_spark.plans.analytics4 import funnel_stages
 
-        counts = []
-        anchor = None  # (DataFrame[key, t], ) of survivors so far
-        for no, (name, pred) in enumerate(steps, start=1):
-            stage_events = df.filter(pred)
-            if anchor is None:
-                surv = stage_events.groupBy(key_col).agg(F.min(ts_col).alias("_t"))
-            else:
-                surv = (
-                    stage_events.join(anchor, key_col)
-                    .filter(F.col(ts_col) > F.col("_t"))
-                    .groupBy(key_col)
-                    .agg(F.min(ts_col).alias("_t"))
-                )
-            anchor = surv
-            counts.append(
-                surv.agg(F.count("*").alias("n_keys")).select(
-                    F.lit(name).alias("stage"),
-                    F.lit(no).alias("stage_no"),
-                    "n_keys",
-                )
-            )
-        out = counts[0]
-        for c in counts[1:]:
-            out = out.unionByName(c)
-        return out
+        return funnel_stages(df, key_col, ts_col, steps)
 
     def gapfill(
         self,
@@ -904,89 +834,22 @@ class Engine:
     def auc(self, df: DataFrame, score_col: str, label_col: str) -> DataFrame:
         """Tie-corrected ROC AUC (Mann-Whitney) for any (score, 0/1 label)
         frame — integer U statistic over the per-distinct-score histogram,
-        one row out (eval_roc_auc's kernel generalized)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
+        one row out (eval_roc_auc's kernel, evalstats.roc_auc)."""
+        from nocouncil_etl_spark.plans.evalstats import roc_auc
 
-        hist = df.groupBy(F.col(score_col).alias("_s")).agg(
-            F.sum(label_col).cast("long").alias("pos_s"),
-            F.sum(F.lit(1) - F.col(label_col)).cast("long").alias("neg_s"),
-        )
-        w = Window.orderBy("_s").rowsBetween(Window.unboundedPreceding, -1)
-        cum = hist.withColumn(
-            "neg_below", F.coalesce(F.sum("neg_s").over(w), F.lit(0))
-        )
-        u2 = F.sum(F.col("pos_s") * (2 * F.col("neg_below") + F.col("neg_s")))
-        return cum.agg(
-            F.sum("pos_s").cast("long").alias("n_pos"),
-            F.sum("neg_s").cast("long").alias("n_neg"),
-            u2.cast("long").alias("u2"),
-            F.round(
-                u2.cast("double") / (2.0 * F.sum("pos_s") * F.sum("neg_s")), 6
-            ).alias("auc"),
-        )
+        return roc_auc(df, score_col, label_col)
 
     def bootstrap_ci(
         self, df: DataFrame, id_col: str, value_col: str, replicas: int = 32
     ) -> DataFrame:
         """Deterministic Poisson-bootstrap CI for the mean of ``value_col``
-        (cents-exact; hash-seeded weights keyed by ``id_col`` — the
-        agg_bootstrap_ci kernel generalized). Returns one row with the
-        full-sample mean and the 2nd/(B−1)th order-statistic interval."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
+        (cents-exact; hash-seeded weights keyed by ``id_col`` —
+        agg_bootstrap_ci's kernel, stats2.bootstrap_ci). Returns one row
+        with the full-sample mean and the 2nd/(B−1)th order-statistic
+        interval."""
+        from nocouncil_etl_spark.plans.stats2 import bootstrap_ci
 
-        from nocouncil_etl_spark.plans.stats2 import HASH_SPACE, POIS_CDF, _hv
-
-        reps = df.select(
-            F.col(id_col).alias("_id"),
-            F.round(F.col(value_col) * 100).cast("long").alias("_v"),
-            F.explode(F.array(*[F.lit(x) for x in range(replicas)])).alias("_b"),
-        )
-        u = (
-            _hv(
-                F.concat_ws(
-                    "#", F.col("_id").cast("string"), F.col("_b").cast("string")
-                )
-            )
-            / F.lit(HASH_SPACE)
-        )
-        wcol = F.when(u < POIS_CDF[0], 0)
-        for i in range(1, len(POIS_CDF)):
-            wcol = wcol.when(u < POIS_CDF[i], i)
-        wcol = wcol.otherwise(len(POIS_CDF))
-        means = (
-            reps.select("_b", "_v", wcol.alias("_w"))
-            .groupBy("_b")
-            .agg(
-                F.sum(F.col("_w") * F.col("_v")).cast("long").alias("num"),
-                F.sum("_w").cast("long").alias("den"),
-            )
-        )
-        mean_b = F.col("num") / F.col("den").cast("double") / 100.0
-        ranked = means.select(
-            mean_b.alias("mean_b"),
-            F.row_number().over(Window.orderBy(mean_b, "_b")).alias("rn"),
-        )
-        base = df.agg(
-            (
-                F.sum(F.round(F.col(value_col) * 100).cast("long"))
-                / F.count(F.lit(1)).cast("double")
-                / 100.0
-            ).alias("mean_full")
-        )
-        from pyspark.sql import functions as F2
-
-        return ranked.crossJoin(F2.broadcast(base)).agg(
-            F2.lit(replicas).cast("long").alias("n_replicas"),
-            F2.round(F2.first("mean_full"), 6).alias("mean_full"),
-            F2.round(F2.max(F2.when(F2.col("rn") == 2, F2.col("mean_b"))), 6).alias(
-                "ci_lo"
-            ),
-            F2.round(
-                F2.max(F2.when(F2.col("rn") == replicas - 1, F2.col("mean_b"))), 6
-            ).alias("ci_hi"),
-        )
+        return bootstrap_ci(df, id_col, value_col, replicas)
 
     def association_rules(
         self,
@@ -997,56 +860,12 @@ class Engine:
         top: int = 50,
     ) -> DataFrame:
         """Co-occurrence association rules (support/confidence/lift) over
-        (basket, item) rows — market_basket_lift generalized. Quadratic
-        only inside a basket; top rules by lift under a total order."""
-        from pyspark.sql import functions as F
+        (basket, item) rows — market_basket_lift's kernel
+        (analytics6.association_rules). Quadratic only inside a basket;
+        top rules by lift under a total order."""
+        from nocouncil_etl_spark.plans.analytics6 import association_rules
 
-        basket = df.select(
-            F.col(basket_col).alias("_bk"), F.col(item_col).alias("_it")
-        ).distinct()
-        n_baskets = basket.select("_bk").distinct().count()
-        item = basket.groupBy("_it").agg(F.count("*").cast("long").alias("cnt"))
-        a, b = basket.alias("a"), basket.alias("b")
-        pair = (
-            a.join(
-                b,
-                (F.col("a._bk") == F.col("b._bk"))
-                & (F.col("a._it") < F.col("b._it")),
-            )
-            .groupBy(
-                F.col("a._it").alias("item_a"), F.col("b._it").alias("item_b")
-            )
-            .agg(F.count("*").cast("long").alias("pair_cnt"))
-            .filter(F.col("pair_cnt") >= min_support)
-        )
-        ia = item.select(F.col("_it").alias("item_a"), F.col("cnt").alias("cnt_a"))
-        ib = item.select(F.col("_it").alias("item_b"), F.col("cnt").alias("cnt_b"))
-        out = (
-            pair.join(F.broadcast(ia), "item_a")
-            .join(F.broadcast(ib), "item_b")
-            .select(
-                "item_a",
-                "item_b",
-                "pair_cnt",
-                "cnt_a",
-                "cnt_b",
-                F.round(
-                    F.col("pair_cnt").cast("double") / F.lit(n_baskets), 6
-                ).alias("support"),
-                F.round(F.col("pair_cnt").cast("double") / F.col("cnt_a"), 6).alias(
-                    "confidence"
-                ),
-                F.round(
-                    F.col("pair_cnt").cast("double")
-                    * F.lit(n_baskets)
-                    / (F.col("cnt_a").cast("double") * F.col("cnt_b")),
-                    6,
-                ).alias("lift"),
-            )
-        )
-        return out.orderBy(
-            F.desc("lift"), F.desc("pair_cnt"), "item_a", "item_b"
-        ).limit(top)
+        return association_rules(df, basket_col, item_col, min_support, top)
 
     def radius_join(
         self,
@@ -1058,46 +877,12 @@ class Engine:
     ) -> DataFrame:
         """All id pairs within ``radius`` (integer coordinates, integer
         squared euclidean) via the 3×3 grid-cell equi-join —
-        geo_radius_join generalized to any point frame. Exact: recall-
-        lossless by construction (test proves equality with brute force)."""
-        from pyspark.sql import functions as F
+        geo_radius_join's kernel (geo_plans.radius_pairs) over any point
+        frame. Exact: recall-lossless by construction (test proves
+        equality with brute force)."""
+        from nocouncil_etl_spark.plans.geo_plans import radius_pairs
 
-        pts = df.select(
-            F.col(id_col).alias("_id"),
-            F.col(x_col).cast("long").alias("_x"),
-            F.col(y_col).cast("long").alias("_y"),
-        )
-        cell = lambda c: F.expr(f"{c} div {radius}")  # noqa: E731
-        home = pts.select(
-            F.col("_id").alias("id_b"),
-            F.col("_x").alias("xb"),
-            F.col("_y").alias("yb"),
-            cell("_x").alias("cx"),
-            cell("_y").alias("cy"),
-        )
-        offs = F.array(*[F.lit(d) for d in (-1, 0, 1)])
-        probe = (
-            pts.withColumn("dx", F.explode(offs))
-            .withColumn("dy", F.explode(offs))
-            .select(
-                F.col("_id").alias("id_a"),
-                F.col("_x").alias("xa"),
-                F.col("_y").alias("ya"),
-                (cell("_x") + F.col("dx")).alias("cx"),
-                (cell("_y") + F.col("dy")).alias("cy"),
-            )
-        )
-        d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
-            F.col("ya") - F.col("yb")
-        ) * (F.col("ya") - F.col("yb"))
-        return (
-            probe.join(home, ["cx", "cy"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", d2.alias("d2"))
-            .filter(F.col("d2") <= radius * radius)
-            .distinct()
-            .select("id_a", "id_b", F.col("d2").cast("long").alias("d2"))
-        )
+        return radius_pairs(df, id_col, x_col, y_col, radius)
 
     # --- fusion / diversification / release gates ---------------------------
 
@@ -1127,34 +912,11 @@ class Engine:
     ) -> DataFrame:
         """Maximal-Marginal-Relevance diversified top-k: rank ``vectors``
         by cosine to the 1-row ``query`` frame (column ``qv``), keep the
-        top ``cand_n``, then greedily select ``k`` via
-        operators/fusion.mmr_greedy — the same kernel search_mmr_rerank
-        runs under its oracle (test_api3 pins row-identity)."""
-        from pyspark.sql import functions as F
+        top ``cand_n``, then greedily select ``k`` — search_mmr_rerank's
+        kernel (operators/fusion.mmr_rerank)."""
+        from nocouncil_etl_spark.operators.fusion import mmr_rerank
 
-        from nocouncil_etl_spark.functions.vectors import cosine
-        from nocouncil_etl_spark.operators.fusion import mmr_greedy
-
-        cand = (
-            vectors.crossJoin(F.broadcast(query))
-            .select(
-                F.col(id_col),
-                F.col(vec_col).alias("_v"),
-                F.round(cosine(vec_col, "qv"), 6).alias("rel"),
-            )
-            .orderBy(F.desc("rel"), id_col)
-            .limit(cand_n)
-        )
-        a = cand.select(F.col(id_col).alias("ia"), F.col("_v").alias("va"))
-        b = cand.select(F.col(id_col).alias("ib"), F.col("_v").alias("vb"))
-        sims = (
-            a.crossJoin(b)
-            .filter(F.col("ia") != F.col("ib"))
-            .select("ia", "ib", F.round(cosine("va", "vb"), 6).alias("s"))
-        )
-        return mmr_greedy(
-            cand.select(id_col, "rel"), sims, k, lam, id_col=id_col
-        )
+        return mmr_rerank(vectors, query, id_col, vec_col, cand_n, k, lam)
 
     def k_anonymize(
         self, df: DataFrame, qi_cols: list[str], k: int = 10
@@ -1235,55 +997,11 @@ class Engine:
         """CUPED variance-reduction readout for any (unit, pre, post)
         frame of integer metrics: θ, var(post), adjusted variance, and the
         reduction ratio ρ² — exact BIGINT cross-moments, one shuffle
-        (eval_cuped_adjustment's kernel generalized; test_api3 pins the
-        catalog construction)."""
-        from pyspark.sql import functions as F
+        (eval_cuped_adjustment's kernel, experiment_plans.cuped_stats, with
+        variances left in the input's units)."""
+        from nocouncil_etl_spark.plans.experiment_plans import cuped_stats
 
-        mom = df.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(pre_col).cast("long").alias("sx"),
-            F.sum(post_col).cast("long").alias("sy"),
-            F.sum(F.col(pre_col) * F.col(pre_col)).cast("long").alias("sxx"),
-            F.sum(F.col(post_col) * F.col(post_col))
-            .cast("long")
-            .alias("syy"),
-            F.sum(F.col(pre_col) * F.col(post_col))
-            .cast("long")
-            .alias("sxy"),
-        )
-        n = F.col("n")
-        cxx = (
-            F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx") / n
-        )
-        cyy = (
-            F.col("syy").cast("double")
-            - F.col("sy").cast("double") * F.col("sy") / n
-        )
-        cxy = (
-            F.col("sxy").cast("double")
-            - F.col("sx").cast("double") * F.col("sy") / n
-        )
-        s = mom.select(
-            n.alias("n_units"),
-            (cxy / cxx).alias("theta"),
-            (cyy / (n - 1)).alias("var_y"),
-            (cxx / (n - 1)).alias("var_x"),
-            (cxy / (n - 1)).alias("cov_xy"),
-        )
-        var_adj = (
-            F.col("var_y")
-            - F.col("cov_xy") * F.col("cov_xy") / F.col("var_x")
-        )
-        return s.select(
-            "n_units",
-            F.round("theta", 6).alias("theta"),
-            F.round(F.col("var_y"), 6).alias("var_post"),
-            F.round(var_adj, 6).alias("var_adjusted"),
-            F.round(1.0 - var_adj / F.col("var_y"), 6).alias(
-                "variance_reduction"
-            ),
-        )
+        return cuped_stats(df, pre_col, post_col).withColumnRenamed("n", "n_units")
 
     # --- pipelines ----------------------------------------------------------
 

@@ -64,6 +64,27 @@ def rstddev(col, digits: int = 4) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Portable md5 hashes: the same integer on both engines (DuckDB spells them
+# CAST(('0x' || substring(md5(x), 1, n)) AS BIGINT)).
+# ---------------------------------------------------------------------------
+
+
+def hash60(col) -> Column:
+    """60-bit uniform hash of a string column: the first 15 hex chars of
+    its md5 as a non-negative BIGINT."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def pct_bucket(col) -> Column:
+    """Deterministic 0..99 bucket of a column (cast to string): the first
+    8 hex chars of its md5, mod 100 — the sample/split membership key."""
+    return (
+        F.conv(F.substring(F.md5(_col(col).cast("string")), 1, 8), 16, 10)
+        .cast("long") % 100
+    )
+
+
+# ---------------------------------------------------------------------------
 # Split-sum money kernel (flagship hot path).
 #
 # The decimal kernel above is exact but expensive to PLAN: Catalyst's decimal

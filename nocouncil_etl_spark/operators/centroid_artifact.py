@@ -123,10 +123,23 @@ def _aggregate_fingerprint(points: DataFrame, id_col: str) -> dict:
 
 
 def write_manifest(path: str, payload: dict) -> None:
-    """Write ``manifest.json`` into a directory — publish's stage, so the
-    rename swap, not this write, makes the manifest visible."""
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
+    """Write ``manifest.json`` into a directory atomically (temp file +
+    ``os.replace``): a reader sees the old manifest or the new one, never
+    a torn file. In publish's stage the rename swap is what makes it
+    visible; in a live artifact (``invalidate``) this replace is."""
+    tmp = os.path.join(path, f".manifest-{uuid.uuid4().hex[:12]}.tmp")
+    with open(tmp, "w") as fh:
         json.dump(payload, fh, sort_keys=True)
+    os.replace(tmp, os.path.join(path, "manifest.json"))
+
+
+def invalidate(path: str) -> None:
+    """Make the next ``serve`` of a live artifact republish: rewrite its
+    manifest with ``fp`` = None, which no ``corpus_fingerprint`` equals.
+    Call it BEFORE writing into the artifact in place, so neither the
+    finished write nor a crash part-way through leaves a manifest that
+    blesses rows its fingerprint does not describe."""
+    write_manifest(path, {**(read_manifest(path) or {}), "fp": None})
 
 
 def read_manifest(path: str) -> dict | None:

@@ -1,5 +1,5 @@
 """Rank-fusion and greedy diversified-selection kernels, shared by the
-catalog plans (retrieval2.search_mmr_rerank / retrieval_rrf_fusion live
+catalog plans (mlprep_plans.search_mmr_rerank / retrieval_rrf_fusion live
 under oracles) and the Engine facade verbs — one implementation, so the
 facade cannot drift from the oracle-checked arithmetic (the contract the
 gapfill advice item established: extract, don't re-implement).
@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from nocouncil_etl_spark.functions.vectors import cosine
 
 
 def rrf_fuse(
@@ -111,3 +113,45 @@ def mmr_greedy(
         )
         sel = sel.unionByName(pick)
     return sel
+
+
+def mmr_rerank(
+    vectors: DataFrame,
+    query: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cand_n: int,
+    k: int,
+    lam: float,
+) -> DataFrame:
+    """MMR over dense candidates: rank ``vectors`` by 6dp cosine to the
+    1-row ``query`` frame (column ``qv``), keep the top ``cand_n`` (rel
+    desc, id asc), score every ordered candidate pair (candidate_sims),
+    then ``mmr_greedy``. Returns (id_col, pick_rank, rel)."""
+    cand = (
+        vectors.crossJoin(F.broadcast(query))
+        .select(
+            F.col(id_col),
+            F.col(vec_col).alias("_v"),
+            F.round(cosine(vec_col, "qv"), 6).alias("rel"),
+        )
+        .orderBy(F.desc("rel"), id_col)
+        .limit(cand_n)
+    )
+    sims = candidate_sims(cand, id_col, "_v")
+    return mmr_greedy(cand.select(id_col, "rel"), sims, k, lam, id_col=id_col)
+
+
+def candidate_sims(cand: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """mmr_greedy's ``sims`` input: (ia, ib, s) with s the 6dp cosine of
+    every ordered pair of distinct candidates. ``cand`` is a bounded list
+    whose bound the limit hides from size estimation, so the second side
+    is broadcast explicitly — otherwise the planner picks a
+    CartesianProduct with one task per partition pair."""
+    a = cand.select(F.col(id_col).alias("ia"), F.col(vec_col).alias("va"))
+    b = cand.select(F.col(id_col).alias("ib"), F.col(vec_col).alias("vb"))
+    return (
+        a.crossJoin(F.broadcast(b))
+        .filter(F.col("ia") != F.col("ib"))
+        .select("ia", "ib", F.round(cosine("va", "vb"), 6).alias("s"))
+    )

@@ -37,6 +37,7 @@ from nocouncil_etl_spark.io import read_parquet
 from nocouncil_etl_spark.operators.centroid_artifact import (
     LAYOUT,
     corpus_fingerprint,
+    invalidate,
     publish,
     read_centroids,
     serve,
@@ -158,10 +159,16 @@ def upsert_kmeans_index(
     STORED centroids (cells are pinned — existing rows never move) and
     append to the index parquet. The expensive step touches the batch
     alone; at 100 TB this is one narrow Arrow pass over the delta.
+    The manifest is invalidated first: its fingerprint described the
+    corpus before the append, so a later ``serve_kmeans_index`` of any
+    corpus rebuilds instead of serving the appended rows (a crash
+    mid-append leaves the same invalid manifest). Reads by path
+    (``search_kmeans_index``) see the grown index.
     Note: append-only by design (the epoch-idempotent merge discipline
     lives in the caller's foreachBatch, see streaming tests); keep-latest
     dedup by id composes on read if ids can repeat across batches."""
     ids, cm = read_centroids(path)
+    invalidate(path)
     inq = quantize_vectors(incoming, vec_col, "xq")
     _write_index(inq, ids, cm, path, id_col, vec_col, "append")
 

@@ -24,6 +24,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.operators.kmeans import (
+    assign_l2,
+    kmeans_fit,
+    quantize_vectors,
+)
 from nocouncil_etl_spark.operators.similarity import _round6_like_spark
 
 # Element budget for one tile of an in-cluster score matrix: pair kernels
@@ -187,3 +192,27 @@ def semantic_near_duplicates(
     return cluster_pair_scan(
         clustered, threshold, id_col=id_col, vec_col=vec_col
     )
+
+
+def trained_near_duplicates(
+    vectors: DataFrame,
+    k: int,
+    iters: int,
+    threshold: float,
+    fit=kmeans_fit,
+) -> DataFrame:
+    """SemDeDup with TRAINED centroids over (vec_id, v): quantize, fit a
+    fixed-k integer k-means (``fit(quantized, k, iters)`` → (cent_ids,
+    matrix); kmeans_fit by default, or a manifest-served matrix), assign
+    each vector its cell carrying v along (assign_l2), then
+    cluster_pair_scan. The quantized frame is pinned for the fit and
+    released before returning."""
+    vq = quantize_vectors(vectors, "v", "xq").persist()
+    try:
+        cent_ids, cm = fit(vq, k, iters)
+        clustered = assign_l2(vq, cent_ids, cm, carry="v").select(
+            F.col("cid").alias("cent_id"), "vec_id", "v"
+        )
+        return cluster_pair_scan(clustered, threshold)
+    finally:
+        vq.unpersist()

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.operators.dedup import make_shingle_udf
 from nocouncil_etl_spark.plans.dedup_plans import _sql_shingles
@@ -46,12 +47,6 @@ TOPK = 10
 HASH_SPACE = float(1 << 60)
 
 _HV_SQL = "('0x' || substr(md5({col}), 1, 15))::BIGINT"
-
-
-def _hv(col) -> F.Column:
-    """60-bit uniform hash (15 hex chars of md5) — fits a signed long, and
-    `conv(...)↔('0x'||…)::BIGINT` is the established portable idiom."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -94,7 +89,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", F.explode(make_shingle_udf(GRAM_N)("text")).alias("gram"))
         .distinct()
     )
-    d = g.select("source", _hv(F.col("gram")).alias("hv")).distinct()
+    d = g.select("source", hash60(F.col("gram")).alias("hv")).distinct()
     w = Window.partitionBy("source")
     r = d.select(
         "source",
@@ -148,7 +143,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority) pairs."""
     docs = load(spark, sf_dir, "documents")
     pri = (
-        _hv(F.col("doc_id").cast("string")).cast("double") / F.lit(HASH_SPACE)
+        hash60(F.col("doc_id").cast("string")).cast("double") / F.lit(HASH_SPACE)
     ) / F.col("n_chars")
     w = Window.partitionBy("source").orderBy("pri", "doc_id")
     return (
@@ -295,36 +290,37 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks monotonically down the funnel; stage counts are single-row
     aggregates unioned at the end."""
     ev = load(spark, sf_dir, "events")
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t0"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t0"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
+    steps = [(t, F.col("event_type") == t) for t in ("view", "click", "purchase")]
+    return funnel_stages(ev, "user_id", "ts", steps).withColumnRenamed(
+        "n_keys", "n_users"
     )
 
-    def stage(df: DataFrame, name: str, no: int) -> DataFrame:
-        return df.agg(F.count("*").alias("n_users")).select(
-            F.lit(name).alias("stage"), F.lit(no).alias("stage_no"), "n_users"
+
+def funnel_stages(
+    df: DataFrame, key_col: str, ts_col: str, steps: list
+) -> DataFrame:
+    """The staged-funnel kernel over (name, predicate-Column) steps: a key
+    survives step k only with a step-k event STRICTLY AFTER its first
+    qualifying step-(k−1) event. One row per step: (stage, stage_no,
+    n_keys)."""
+    counts = []
+    anchor = None  # survivors so far: (key_col, _t = first qualifying ts)
+    for no, (name, pred) in enumerate(steps, start=1):
+        stage_events = df.filter(pred)
+        if anchor is not None:
+            stage_events = stage_events.join(anchor, key_col).filter(
+                F.col(ts_col) > F.col("_t")
+            )
+        anchor = stage_events.groupBy(key_col).agg(F.min(ts_col).alias("_t"))
+        counts.append(
+            anchor.agg(F.count("*").alias("n_keys")).select(
+                F.lit(name).alias("stage"), F.lit(no).alias("stage_no"), "n_keys"
+            )
         )
-
-    return (
-        stage(v, "view", 1)
-        .unionByName(stage(c, "click", 2))
-        .unionByName(stage(p, "purchase", 3))
-    )
+    out = counts[0]
+    for c in counts[1:]:
+        out = out.unionByName(c)
+    return out
 
 
 # --------------------------------------------------------------------------

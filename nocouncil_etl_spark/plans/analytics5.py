@@ -15,9 +15,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query
@@ -321,22 +322,24 @@ def fn_morton_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id",
         F.floor(F.round("value", 2)).cast("long").alias("vbucket"),
     )
-    masks = [
-        (8, 16711935), (4, 252645135), (2, 858993459), (1, 1431655765)
-    ]
+    morton = morton_key("user_id", "vbucket").alias("morton")
+    return ev.select("event_id", "user_id", "vbucket", morton)
+
+
+_MORTON_MASKS = ((8, 16711935), (4, 252645135), (2, 858993459), (1, 1431655765))
+
+
+def morton_key(x_col: str, y_col: str) -> Column:
+    """Morton (Z-order) key of two 16-bit integer columns: x's bits on the
+    even positions, y's on the odd (the _spread_sql mask cascade)."""
 
     def spread(c):
         e = F.col(c).cast("long")
-        for sh, m in masks:
+        for sh, m in _MORTON_MASKS:
             e = (e.bitwiseOR(F.shiftleft(e, sh))).bitwiseAND(F.lit(m))
         return e
 
-    return ev.select(
-        "event_id", "user_id", "vbucket",
-        spread("user_id").bitwiseOR(
-            F.shiftleft(spread("vbucket"), 1)
-        ).alias("morton"),
-    )
+    return spread(x_col).bitwiseOR(F.shiftleft(spread(y_col), 1))
 
 
 # --------------------------------------------------------------------------
@@ -499,15 +502,7 @@ def sketch_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     js = F.explode(F.array(*[F.lit(j) for j in range(CMS_D)])).alias("j")
 
     def bucket(j_col, term_col):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(j_col.cast("string"), F.lit(":"), term_col)),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = hash60(F.concat(j_col.cast("string"), F.lit(":"), term_col))
         return h % CMS_W
 
     fan = cnt.select("term", "n", js)
@@ -605,19 +600,9 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = F.explode(F.array(*[F.lit(i) for i in range(BLOOM_K)])).alias("i")
 
     def bit(i_col, x_col):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        i_col.cast("string"), F.lit("#"), x_col.cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = hash60(F.concat(
+            i_col.cast("string"), F.lit("#"), x_col.cast("string")
+        ))
         return h % (BLOOM_WORDS * BLOOM_BITS_PER)
 
     mbits = members.select(hashes, "user_id").select(

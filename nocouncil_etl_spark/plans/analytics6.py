@@ -95,24 +95,37 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence relevance (filter.py) lifted to the transactional
     setting."""
     li = load(spark, sf_dir, "lineitem")
+    rules = association_rules(
+        li, "l_orderkey", "l_partkey", MIN_PAIR_SUPPORT, TOP_RULES
+    )
+    return rules.withColumnsRenamed({"item_a": "part_a", "item_b": "part_b"})
+
+
+def association_rules(
+    df: DataFrame, basket_col: str, item_col: str, min_support: int, top: int
+) -> DataFrame:
+    """The association-rule kernel over (basket, item) rows → the top
+    ``top`` (item_a, item_b, pair_cnt, cnt_a, cnt_b, support, confidence,
+    lift) by (lift desc, pair_cnt desc, item_a, item_b), pairs with
+    pair_cnt ≥ ``min_support``. Shape: market_basket_lift's docstring."""
     basket = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
+        df.groupBy(basket_col)
+        .agg(F.array_sort(F.collect_set(item_col)).alias("items"))
         .localCheckpoint(eager=True)
     )
-    n_orders = basket.count()
-    item = basket.select(
-        F.explode("items").alias("l_partkey")
-    ).groupBy("l_partkey").agg(F.count("*").cast("long").alias("item_cnt"))
+    n_baskets = basket.count()
+    item = basket.select(F.explode("items").alias("_it")).groupBy("_it").agg(
+        F.count("*").cast("long").alias("cnt")
+    )
     # all a<b pairs of the sorted basket, generated in-row: for item i,
     # pair it with every later item j>i — identical candidate multiset to
-    # the l_orderkey self-join with part_a < part_b.
+    # the basket self-join with item_a < item_b.
     # Bound assumption (r11 advice): this materializes ~C(|basket|,2)
     # structs in ONE row, so the rewrite requires bounded baskets — TPC-H
     # orders carry ≤7 lineitems and real carts are bounded the same way
     # (≤21 pair structs/row; HOF interpretation cost negligible, benched
     # −0.37 s vs the self-join). A corpus with unbounded hot baskets must
-    # cap/chunk the per-order item array first (the rec_item_cosine cap
+    # cap/chunk the per-basket item array first (the rec_item_cosine cap
     # pattern, breadth30.item_cosine_topk) before reusing this shape.
     pair_structs = F.flatten(
         F.transform(
@@ -121,33 +134,29 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice(
                     "items", i + F.lit(2), F.size("items") - i - F.lit(1)
                 ),
-                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
+                lambda y: F.struct(x.alias("item_a"), y.alias("item_b")),
             ),
         )
     )
     pair = (
         basket.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
-        .groupBy("part_a", "part_b")
+        .select("p.item_a", "p.item_b")
+        .groupBy("item_a", "item_b")
         .agg(F.count("*").cast("long").alias("pair_cnt"))
-        .filter(F.col("pair_cnt") >= MIN_PAIR_SUPPORT)
+        .filter(F.col("pair_cnt") >= min_support)
     )
-    ia = item.select(
-        F.col("l_partkey").alias("part_a"), F.col("item_cnt").alias("cnt_a")
-    )
-    ib = item.select(
-        F.col("l_partkey").alias("part_b"), F.col("item_cnt").alias("cnt_b")
-    )
+    ia = item.select(F.col("_it").alias("item_a"), F.col("cnt").alias("cnt_a"))
+    ib = item.select(F.col("_it").alias("item_b"), F.col("cnt").alias("cnt_b"))
     out = (
-        pair.join(F.broadcast(ia), "part_a")
-        .join(F.broadcast(ib), "part_b")
+        pair.join(F.broadcast(ia), "item_a")
+        .join(F.broadcast(ib), "item_b")
         .select(
-            "part_a",
-            "part_b",
+            "item_a",
+            "item_b",
             "pair_cnt",
             "cnt_a",
             "cnt_b",
-            F.round(F.col("pair_cnt").cast("double") / F.lit(n_orders), 6).alias(
+            F.round(F.col("pair_cnt").cast("double") / F.lit(n_baskets), 6).alias(
                 "support"
             ),
             F.round(F.col("pair_cnt").cast("double") / F.col("cnt_a"), 6).alias(
@@ -155,15 +164,15 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.round(
                 F.col("pair_cnt").cast("double")
-                * F.lit(n_orders)
+                * F.lit(n_baskets)
                 / (F.col("cnt_a").cast("double") * F.col("cnt_b")),
                 6,
             ).alias("lift"),
         )
     )
     return out.orderBy(
-        F.desc("lift"), F.desc("pair_cnt"), "part_a", "part_b"
-    ).limit(TOP_RULES)
+        F.desc("lift"), F.desc("pair_cnt"), "item_a", "item_b"
+    ).limit(top)
 
 
 # --------------------------------------------------------------------------

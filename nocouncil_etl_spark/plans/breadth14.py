@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query
@@ -91,20 +92,10 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = nodes.select(F.col("node").alias("start"), F.col("node").alias("cur"))
     for t in range(1, WALK_LEN + 1):
         pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|", F.lit("walk"), F.col("cur").cast("string"),
-                            F.lit(str(t)),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hash60(F.concat_ws(
+                "|", F.lit("walk"), F.col("cur").cast("string"),
+                F.lit(str(t)),
+            ))
             % F.col("d")
         )
         step = (

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
@@ -46,11 +47,7 @@ def _pt_sql(salt: str, id_expr: str, rng: int) -> str:
 
 def _pt(salt: str, col) -> F.Column:
     return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(F.lit(salt), col.cast("string")))
     )
 
 

@@ -24,6 +24,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -211,19 +212,9 @@ def eval_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
 
     def rater(r: int) -> F.Column:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"rate{r}#"), F.col("event_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = hash60(F.concat(
+            F.lit(f"rate{r}#"), F.col("event_id").cast("string")
+        ))
         base = (
             F.when(F.col("event_type").isin("purchase", "signup"), 0)
             .when(F.col("event_type") == "error", 1)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 from nocouncil_etl_spark.streaming.windows import read_events_stream, run_to_memory
@@ -155,13 +156,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: a narrow per-row expression — one scan."""
     docs = load(spark, sf_dir, "documents")
     c = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pass#"), F.col("doc_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(F.lit("pass#"), F.col("doc_id").cast("string")))
         % (PASS_N + 1)
     )
     probs = docs.select("doc_id", c.alias("c"))
@@ -228,13 +223,7 @@ def fn_ip_cidr_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: narrow per-row integer expressions — one scan."""
     ev = load(spark, sf_dir, "events")
     ip = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ip#"), F.col("event_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(F.lit("ip#"), F.col("event_id").cast("string")))
         % 4294967296
     )
     ips = ev.select("event_id", ip.alias("ip"))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -122,13 +123,7 @@ def stat_beta_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     only."""
     ev = load(spark, sf_dir, "events")
     arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("arm#"), F.col("user_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(F.lit("arm#"), F.col("user_id").cast("string")))
         % 2
         == 0,
         "A",
@@ -248,13 +243,7 @@ def eval_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hival = F.when(F.col("user_id") % HIVAL_MOD == 0, 1).otherwise(0)
     h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("tr#"), F.col("user_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(F.lit("tr#"), F.col("user_id").cast("string")))
         % 10
     )
     treat = F.when(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
@@ -45,15 +46,7 @@ _BLOOM_BIT_SQL = (
 
 
 def _bloom_bit(i_col, x_col):
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(i_col.cast("string"), F.lit("#"), x_col.cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.concat(i_col.cast("string"), F.lit("#"), x_col.cast("string")))
     return h % (BLOOM_WORDS * BLOOM_BITS_PER)
 
 

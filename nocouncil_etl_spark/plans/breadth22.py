@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
@@ -216,13 +217,7 @@ def contamination_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = F.explode(F.array(*[F.lit(i) for i in range(DECON_K)])).alias("i")
 
     def bit(i_col, g_col):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(i_col.cast("string"), F.lit("|"), g_col)), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = hash60(F.concat(i_col.cast("string"), F.lit("|"), g_col))
         return h % (DECON_WORDS * DECON_BITS_PER)
 
     bloom = (

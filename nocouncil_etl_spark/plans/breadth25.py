@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query
@@ -124,8 +125,7 @@ def graph_hyperball_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = edges.select("src", "dst").localCheckpoint(eager=False)
     hv = nodes.select(
         "node",
-        F.conv(F.substring(F.md5(F.col("node").cast("string")), 1, 15), 16, 10)
-        .cast("long")
+        hash60(F.col("node").cast("string"))
         .alias("h"),
     )
     reg = hv.select(

@@ -28,6 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.operators.quantiles import cumulate, ranged_rank_cumsum
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
@@ -289,22 +290,12 @@ def graph_influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, edges, n = _graph(spark, sf_dir)
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ic#"),
-                        F.col("src").cast("string"),
-                        F.lit("#"),
-                        F.col("dst").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat(
+            F.lit("ic#"),
+            F.col("src").cast("string"),
+            F.lit("#"),
+            F.col("dst").cast("string"),
+        ))
         % 100
         < IC_PROB_PCT
     )
@@ -553,22 +544,12 @@ def curation_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             F.sequence(F.lit(1), F.size("w")),
             lambda i: F.when(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("mask#"),
-                                F.col("doc_id").cast("string"),
-                                F.lit("#"),
-                                i.cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                hash60(F.concat(
+                    F.lit("mask#"),
+                    F.col("doc_id").cast("string"),
+                    F.lit("#"),
+                    i.cast("string"),
+                ))
                 % 100
                 < MASK_PCT,
                 F.lit(MASK_TOKEN),

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.plans.breadth15 import _pt, _pt_sql
 from nocouncil_etl_spark.plans.breadth28 import (
@@ -191,22 +192,12 @@ def graph_temporal_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src",
             "dst",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("tt#"),
-                                F.col("src").cast("string"),
-                                F.lit("#"),
-                                F.col("dst").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                hash60(F.concat(
+                    F.lit("tt#"),
+                    F.col("src").cast("string"),
+                    F.lit("#"),
+                    F.col("dst").cast("string"),
+                ))
                 % 30
             ).alias("t"),
         )

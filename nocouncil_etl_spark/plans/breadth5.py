@@ -149,29 +149,38 @@ def ts_ema_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user_id shuffle; 16 lag() reads share one window
     sort — linear, no self-join."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 10000, 0).cast("long").alias("v4"),
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
+    return ema_fixedpoint(ev, "user_id", ["ts", "event_id"], "value").select(
+        "event_id", "user_id", "ema"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+
+
+def ema_fixedpoint(
+    df: DataFrame,
+    key_col: str,
+    order_cols: list[str],
+    value_col: str,
+    lags: int = EMA_LAGS,
+) -> DataFrame:
+    """The truncated fixed-point EMA kernel: ``df`` plus ``ema`` =
+    round(Σ_j lag(v4, j)·2^(lags−1−j) / (2^lags·10^4), 6) per ``key_col``
+    series in ``order_cols`` order, v4 = value on the 1e-4 integer grid;
+    rows without ``lags`` observations of history are dropped."""
+    w = Window.partitionBy(key_col).orderBy(*order_cols)
+    base = df.withColumn("_v4", F.round(F.col(value_col) * 10000, 0).cast("long"))
     s = None
-    for j in range(EMA_LAGS):
-        term = F.lag("v4", j).over(w) * F.lit(1 << (EMA_LAGS - 1 - j))
+    for j in range(lags):
+        term = F.lag("_v4", j).over(w) * F.lit(1 << (lags - 1 - j))
         s = term if s is None else s + term
-    full = F.lag("v4", EMA_LAGS - 1).over(w).isNotNull()
     return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.round(s.cast("double") / F.lit(float(EMA_DEN * 10000)), 6).alias(
-                "ema"
-            ),
-            full.alias("_full"),
+        base.withColumns(
+            {
+                "ema": F.round(s.cast("double") / F.lit(float((1 << lags) * 10000)), 6),
+                "_full": F.lag("_v4", lags - 1).over(w).isNotNull(),
+            }
         )
         .filter("_full")
-        .drop("_full")
+        .drop("_v4", "_full")
     )
 
 
@@ -207,17 +216,30 @@ def session_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user_id shuffle for the lag, one hash agg to the
     tiny (from, to) matrix, one window over that matrix."""
     ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev")
-    ).filter(F.col("prev").isNotNull())
-    m = t.groupBy(
-        F.col("prev").alias("from_type"), F.col("event_type").alias("to_type")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    row_total = F.sum("n").over(Window.partitionBy("from_type"))
+    return markov_transitions(ev, "user_id", ["ts", "event_id"], "event_type").select(
+        F.col("from_state").alias("from_type"),
+        F.col("to_state").alias("to_type"),
+        "n",
+        "p",
+    )
+
+
+def markov_transitions(
+    df: DataFrame, key_col: str, order_cols: list[str], state_col: str
+) -> DataFrame:
+    """The transition-matrix kernel: consecutive ``state_col`` pairs per
+    ``key_col`` in ``order_cols`` order → (from_state, to_state, n, p),
+    p = n / row total of from_state, rounded 6dp."""
+    w = Window.partitionBy(key_col).orderBy(*order_cols)
+    t = df.select(
+        F.col(state_col).alias("to_state"),
+        F.lag(state_col).over(w).alias("from_state"),
+    ).filter(F.col("from_state").isNotNull())
+    m = t.groupBy("from_state", "to_state").agg(F.count(F.lit(1)).alias("n"))
+    row_total = F.sum("n").over(Window.partitionBy("from_state"))
     return m.select(
-        "from_type",
-        "to_type",
+        "from_state",
+        "to_state",
         "n",
         F.round(F.col("n").cast("double") / row_total.cast("double"), 6).alias("p"),
     )

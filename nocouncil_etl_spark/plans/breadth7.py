@@ -20,9 +20,10 @@ table profiling.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.operators.quantiles import ranged_rank_cumsum, with_below
 from nocouncil_etl_spark.registry import query
@@ -30,10 +31,6 @@ from nocouncil_etl_spark.registry import query
 HASH_SPACE = float(1 << 60)
 HT_M = 8  # per-stratum sample size; small enough that even sf0.001's
           # ~12-doc sources keep a (m+1)-th priority for the threshold
-
-
-def _hv(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -271,7 +268,7 @@ def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_chars",
         (
-            (_hv(F.col("doc_id").cast("string")) / F.lit(HASH_SPACE))
+            (hash60(F.col("doc_id").cast("string")) / F.lit(HASH_SPACE))
             / F.col("n_chars")
         ).alias("q"),
     )

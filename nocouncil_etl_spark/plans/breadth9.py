@@ -19,9 +19,10 @@ multi-touch attribution.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -177,10 +178,6 @@ def join_record_linkage_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _hv(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 @query(
     "eval_calibration_bins",
     oracle=f"""
@@ -218,7 +215,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     global; nothing row-sized survives the shuffle."""
     ev = load(spark, sf_dir, "events")
     y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    u = _hv(F.concat(F.lit("cal#"), F.col("event_id").cast("string"))) / F.lit(
+    u = hash60(F.concat(F.lit("cal#"), F.col("event_id").cast("string"))) / F.lit(
         HASH_SPACE
     )
     scored = ev.select(

@@ -14,9 +14,10 @@ the (small) benchmark gram set.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import pct_bucket
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
@@ -25,14 +26,6 @@ RATE_EVEN, RATE_ODD = 50, 20   # stratified per-source keep-rates
 TRAIN_PCT, VAL_PCT = 80, 10    # split: <80 train, <90 val, else test
 PACK_BUDGET = 512        # tokens per packed sequence
 CONTAM_N = 3             # n-gram width for contamination
-
-
-def _bucket(col: Column) -> Column:
-    """Deterministic 0-99 bucket from md5 — the portable hash idiom
-    (conv(substr(md5)) ↔ ('0x'||…)::BIGINT)."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long") % 100
-    )
 
 
 _BUCKET_SQL = "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100)"
@@ -51,7 +44,7 @@ def sample_hash_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     across runs/retries (df.sample() is not — it reseeds per task attempt),
     and a pure pushdown-friendly narrow filter at any scale."""
     docs = load(spark, sf_dir, "documents")
-    return docs.filter(_bucket(F.col("doc_id")) < SAMPLE_PCT).select(
+    return docs.filter(pct_bucket("doc_id") < SAMPLE_PCT).select(
         "doc_id", "source", "n_chars"
     )
 
@@ -76,7 +69,7 @@ def sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit(RATE_EVEN)
     ).otherwise(F.lit(RATE_ODD))
     return (
-        docs.filter(_bucket(F.col("doc_id")) < rate)
+        docs.filter(pct_bucket("doc_id") < rate)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
@@ -99,7 +92,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     split by id-hash — membership is a property of the row, so re-runs,
     backfills, and late-arriving data land in the same split forever."""
     docs = load(spark, sf_dir, "documents")
-    b = _bucket(F.col("doc_id"))
+    b = pct_bucket("doc_id")
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
         .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))

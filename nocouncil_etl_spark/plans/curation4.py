@@ -234,22 +234,11 @@ def dedup_semantic_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims use Spark's HALF_UP decimal rounding (similarity._round6_like_spark).
     The oracle replays the full k-means recurrence as unrolled CTEs
     (plans/clustering.kmeans_cte) and then the same in-cluster pair join."""
-    from nocouncil_etl_spark.operators.kmeans import (
-        assign_l2,
-        kmeans_fit,
-        quantize_vectors,
-    )
-    from nocouncil_etl_spark.operators.semantic import cluster_pair_scan
+    from nocouncil_etl_spark.operators.semantic import trained_near_duplicates
 
-    augq = quantize_vectors(_sem_aug(spark, sf_dir), "v", "xq").persist()
-    try:
-        cent_ids, cm = kmeans_fit(augq, SEM_K, SEM_ITERS)
-        clustered = assign_l2(augq, cent_ids, cm, carry="v").select(
-            F.col("cid").alias("cent_id"), "vec_id", "v"
-        )
-        return cluster_pair_scan(clustered, SEM_THRESHOLD)
-    finally:
-        augq.unpersist()
+    return trained_near_duplicates(
+        _sem_aug(spark, sf_dir), SEM_K, SEM_ITERS, SEM_THRESHOLD
+    )
 
 
 def _sem_aug(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.functions.numeric import DEC
+from nocouncil_etl_spark.functions.numeric import DEC, hash60, pct_bucket
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.plans.curation4 import _changes
 from nocouncil_etl_spark.registry import query
@@ -306,10 +306,7 @@ def pipeline_sft_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = g.groupBy(F.md5("text").alias("k")).agg(
         F.min("doc_id").alias("doc_id"), F.min("text").alias("text")
     )
-    b = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 100
-    )
+    b = pct_bucket("doc_id")
     split = (
         F.when(b < 80, F.lit("train"))
         .when(b < 90, F.lit("val"))
@@ -327,7 +324,7 @@ def pipeline_sft_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         completion, F.lit("<|end|>"),
     )
     r = d.select(split.alias("split"), rendered.alias("rendered"))
-    h = F.conv(F.substring(F.md5("rendered"), 1, 15), 16, 10).cast("long")
+    h = hash60("rendered")
     return r.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_examples"),
         F.sum(F.length("rendered")).cast("long").alias("total_chars"),

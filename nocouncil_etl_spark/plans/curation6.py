@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.functions.text import quality_score
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
@@ -179,15 +180,7 @@ def dp_count_laplace(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count("*").cast("long").alias("true_count"))
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", "event_type", F.col("day").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat_ws("|", "event_type", F.col("day").cast("string")))
         / F.lit(HASH_SPACE)
         - 0.5
     )

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import pct_bucket
 from nocouncil_etl_spark.functions.text import quality_score
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
@@ -162,9 +163,7 @@ def pipeline_dpo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("chosen_id") != F.col("rejected_id"))
         .withColumn("prompt_key", F.concat_ws("/", "source", "lang"))
     )
-    bucket = (
-        F.conv(F.substring(F.md5("prompt_key"), 1, 8), 16, 10).cast("long") % 100
-    )
+    bucket = pct_bucket("prompt_key")
     first_words = lambda c: F.array_join(  # noqa: E731
         F.slice(F.split(c, " "), 1, RENDER_W), " "
     )

@@ -23,7 +23,7 @@ forms of the same judgment calls, re-expressed as distributed aggregates.
 
 Scale shape: every query is a constant-width aggregate — group counts
 shuffle one row per (class, class) or (score-distinct) key, never per
-event; the only O(distinct-scores) stage (AUC's cumulative window) is a
+event; the only O(distinct-scores) stage (AUC's prefix sum) is a
 single-column sort of the score histogram, not the raw rows.
 """
 
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.text import STOPWORDS, predict_lang
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.operators.quantiles import cumulate
+from nocouncil_etl_spark.operators.quantiles import ranged_rank_cumsum
 from nocouncil_etl_spark.registry import query
 
 # positive class for the binary tasks: did this event convert?
@@ -83,14 +83,15 @@ def eval_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-corrected ROC AUC as the Mann-Whitney U statistic: positives are
     '{POS_TYPE}' events, score = value + planted boost. Exactness contract:
     collapse rows to a per-distinct-score histogram (pos_s, neg_s), take the
-    cumulative negative count below each score with a ROWS window, and
-    accumulate U2 = Σ pos_s · (2·neg_below + neg_s) — ties contribute half a
-    pair each, kept integral by the ×2 scaling. Everything is BIGINT until
+    cumulative negative count below each score, and accumulate
+    U2 = Σ pos_s · (2·neg_below + neg_s) — ties contribute half a pair
+    each, kept integral by the ×2 scaling. Everything is BIGINT until
     the single final division, so combine order cannot move the hash.
 
-    Scale shape (r7): one hash-agg to the score histogram (distinct-score
-    rows on the shuffle, not events), Fenwick prefix sums over it (no
-    window), one 1-row reduce. Reference parity: scoring gates in filter.py graded statistically.
+    Scale shape: one hash-agg to the score histogram (distinct-score
+    rows on the shuffle, not events), the range-partitioned two-phase
+    prefix sum over it (no global window), one 1-row reduce. Reference
+    parity: scoring gates in filter.py graded statistically.
     """
     ev = load(spark, sf_dir, "events")
     scored = ev.select(
@@ -101,36 +102,30 @@ def eval_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score"),
         F.when(F.col("event_type") == POS_TYPE, 1).otherwise(0).alias("label"),
     )
-    hist = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("pos_s"),
-        F.sum(F.lit(1) - F.col("label")).cast("long").alias("neg_s"),
+    return roc_auc(scored, "score", "label")
+
+
+def roc_auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
+    """The tie-corrected AUC kernel over any (score, 0/1 label) frame →
+    one row (n_pos, n_neg, u2, auc). The cumulative negatives below each
+    distinct score come from ranged_rank_cumsum over the histogram (a
+    distributed sort of distinct scores, any orderable score type — no
+    integer mapping of the score needed); u2 is BIGINT until the one
+    final division."""
+    hist = df.groupBy(F.col(score_col).alias("_s")).agg(
+        F.sum(label_col).cast("long").alias("pos_s"),
+        F.sum(F.lit(1) - F.col(label_col)).cast("long").alias("neg_s"),
     )
-    # r7: cumulative negatives via Fenwick prefix sums over the integer
-    # centi-score domain (scores are 2-decimal by construction, so the
-    # mapping is exact and order-isomorphic) — no global window
-    cum = (
-        cumulate(
-            hist.withColumn(
-                "s100", F.round(F.col("score") * 100).cast("long")
-            ),
-            "s100",
-            ("neg_s",),
-        )
-        .withColumn("neg_below", (F.col("cum_neg_s") - F.col("neg_s")).cast("long"))
-    )
+    cum = ranged_rank_cumsum(hist, "_s", "_s", ("neg_s",))
+    neg_below = F.col("cum_neg_s") - F.col("neg_s")
+    u2 = F.sum(F.col("pos_s") * (2 * neg_below + F.col("neg_s")))
     return cum.agg(
         F.sum("pos_s").cast("long").alias("n_pos"),
         F.sum("neg_s").cast("long").alias("n_neg"),
-        F.sum(F.col("pos_s") * (2 * F.col("neg_below") + F.col("neg_s")))
-        .cast("long")
-        .alias("u2"),
-        F.round(
-            F.sum(
-                F.col("pos_s") * (2 * F.col("neg_below") + F.col("neg_s"))
-            ).cast("double")
-            / (2.0 * F.sum("pos_s") * F.sum("neg_s")),
-            6,
-        ).alias("auc"),
+        u2.cast("long").alias("u2"),
+        F.round(u2.cast("double") / (2.0 * F.sum("pos_s") * F.sum("neg_s")), 6).alias(
+            "auc"
+        ),
     )
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -87,11 +88,7 @@ def eval_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     base = ev.select(
         (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
+            hash60(F.col("user_id").cast("string"))
             % 2
         ).alias("treated"),
         F.when(
@@ -213,13 +210,25 @@ def eval_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("post"),
     )
-    mom = per_user.agg(
+    return cuped_stats(per_user, "pre", "post", var_div=10000.0).withColumnRenamed(
+        "n", "n_users"
+    )
+
+
+def cuped_stats(
+    df: DataFrame, pre_col: str, post_col: str, var_div: float = 1.0
+) -> DataFrame:
+    """The CUPED kernel: exact BIGINT cross-moments of (pre, post) in one
+    1-row agg, then (n, theta, var_post, var_adjusted, variance_reduction)
+    as scalar doubles rounded 6dp; the two variances are divided by
+    ``var_div`` first (10⁴ turns cents² into currency²)."""
+    mom = df.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("pre").cast("long").alias("sx"),
-        F.sum("post").cast("long").alias("sy"),
-        F.sum(F.col("pre") * F.col("pre")).cast("long").alias("sxx"),
-        F.sum(F.col("post") * F.col("post")).cast("long").alias("syy"),
-        F.sum(F.col("pre") * F.col("post")).cast("long").alias("sxy"),
+        F.sum(pre_col).cast("long").alias("sx"),
+        F.sum(post_col).cast("long").alias("sy"),
+        F.sum(F.col(pre_col) * F.col(pre_col)).cast("long").alias("sxx"),
+        F.sum(F.col(post_col) * F.col(post_col)).cast("long").alias("syy"),
+        F.sum(F.col(pre_col) * F.col(post_col)).cast("long").alias("sxy"),
     )
     n = F.col("n")
     cxx = F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col("sx") / n
@@ -234,10 +243,10 @@ def eval_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     var_adj = F.col("var_y") - F.col("cov_xy") * F.col("cov_xy") / F.col("var_x")
     return s.select(
-        F.col("n").alias("n_users"),
+        "n",
         F.round("theta", 6).alias("theta"),
-        F.round(F.col("var_y") / 10000.0, 6).alias("var_post"),
-        F.round(var_adj / 10000.0, 6).alias("var_adjusted"),
+        F.round(F.col("var_y") / var_div, 6).alias("var_post"),
+        F.round(var_adj / var_div, 6).alias("var_adjusted"),
         F.round(1.0 - var_adj / F.col("var_y"), 6).alias(
             "variance_reduction"
         ),

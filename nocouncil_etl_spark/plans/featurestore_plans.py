@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.operators.pit import point_in_time_join
 from nocouncil_etl_spark.registry import query
@@ -61,9 +62,7 @@ obs AS (
 def _features_spark(spark: SparkSession, sf_dir: str):
     c = load(spark, sf_dir, "customer")
     versions = spark.range(0, N_VERSIONS).select(F.col("id").alias("v"))
-    h = lambda s: F.conv(F.substring(F.md5(F.expr(s)), 1, 15), 16, 10).cast(  # noqa: E731
-        "long"
-    )
+    h = lambda s: hash60(F.expr(s))
     feats = c.crossJoin(F.broadcast(versions)).select(
         F.col("c_custkey").alias("custkey"),
         F.col("v").alias("version"),

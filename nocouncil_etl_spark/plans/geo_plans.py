@@ -21,9 +21,10 @@ neighbor's home cell — no double fan-out, no all-pairs). Join volume is
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -31,10 +32,6 @@ HASH_SPACE = 1 << 60
 LAT_RANGE = 400  # synthetic city extent in millidegrees (dense enough for pairs at every sf)
 LON_RANGE = 600
 RADIUS_MDEG = 50  # pair radius in millidegrees (~5.5 km N-S)
-
-
-def _hv(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 @query(
@@ -87,52 +84,57 @@ def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = users.select(
         "user_id",
         (
-            _hv(F.concat(F.lit("lat#"), F.col("user_id").cast("string")))
+            hash60(F.concat(F.lit("lat#"), F.col("user_id").cast("string")))
             % LAT_RANGE
         ).alias("y"),
         (
-            _hv(F.concat(F.lit("lon#"), F.col("user_id").cast("string")))
+            hash60(F.concat(F.lit("lon#"), F.col("user_id").cast("string")))
             % LON_RANGE
         ).alias("x"),
     )
-    cell = lambda c: F.expr(f"{c} div {RADIUS_MDEG}")  # noqa: E731
-    home = pts.select(
-        F.col("user_id").alias("id_b"),
-        F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        cell("x").alias("cx"),
-        cell("y").alias("cy"),
+    return radius_pairs(pts, "user_id", "x", "y", RADIUS_MDEG)
+
+
+def radius_pairs(
+    pts: DataFrame, id_col: str, x_col: str, y_col: str, radius: int
+) -> DataFrame:
+    """The grid-cell radius join over a points frame → every (id_a, id_b,
+    d2) with id_a < id_b and integer squared distance d2 ≤ radius²; the
+    probe side explodes its 3×3 cell neighborhood, the home side keeps
+    its own cell (module docstring)."""
+    p = pts.select(
+        F.col(id_col).alias("_id"),
+        F.col(x_col).cast("long").alias("_x"),
+        F.col(y_col).cast("long").alias("_y"),
+    )
+    cell = lambda c: F.expr(f"{c} div {radius}")  # noqa: E731
+    home = p.select(
+        F.col("_id").alias("id_b"),
+        F.col("_x").alias("xb"),
+        F.col("_y").alias("yb"),
+        cell("_x").alias("cx"),
+        cell("_y").alias("cy"),
     )
     offs = F.array(*[F.lit(d) for d in (-1, 0, 1)])
     probe = (
-        pts.select(
-            F.col("user_id").alias("id_a"),
-            F.col("x").alias("xa"),
-            F.col("y").alias("ya"),
-            cell("x").alias("cx0"),
-            cell("y").alias("cy0"),
-        )
-        .withColumn("dx", F.explode(offs))
+        p.withColumn("dx", F.explode(offs))
         .withColumn("dy", F.explode(offs))
         .select(
-            "id_a",
-            "xa",
-            "ya",
-            (F.col("cx0") + F.col("dx")).alias("cx"),
-            (F.col("cy0") + F.col("dy")).alias("cy"),
+            F.col("_id").alias("id_a"),
+            F.col("_x").alias("xa"),
+            F.col("_y").alias("ya"),
+            (cell("_x") + F.col("dx")).alias("cx"),
+            (cell("_y") + F.col("dy")).alias("cy"),
         )
     )
     d2 = (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb")) + (
         F.col("ya") - F.col("yb")
     ) * (F.col("ya") - F.col("yb"))
     return (
-        probe.join(
-            home,
-            ["cx", "cy"],
-        )
+        probe.join(home, ["cx", "cy"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", d2.alias("d2"))
-        .filter(F.col("d2") <= RADIUS_MDEG * RADIUS_MDEG)
+        .filter(F.col("d2") <= radius * radius)
         .distinct()
         .select("id_a", "id_b", F.col("d2").cast("long").alias("d2"))
     )

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.functions.numeric import ravg, ravg_sql, rsum
+from nocouncil_etl_spark.functions.numeric import hash60, ravg, ravg_sql, rsum
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.registry import query
 
@@ -177,7 +177,7 @@ def fn_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 rows out."""
 
     def cks(name: str, df: DataFrame, key_expr) -> DataFrame:
-        h = F.conv(F.substring(F.md5(key_expr), 1, 15), 16, 10).cast("long")
+        h = hash60(key_expr)
         return df.select(h.alias("h")).agg(
             F.lit(name).alias("tbl"),
             F.count(F.lit(1)).alias("n_rows"),

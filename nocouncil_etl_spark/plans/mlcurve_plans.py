@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.operators.kmeans import quantize_vectors
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.clustering import quantize_sql
@@ -99,9 +100,7 @@ def ml_learning_curve_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     eq = quantize_vectors(e, "v", "xq").select("vec_id", "label", "xq")
     eq.persist()
     h = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        hash60(F.col("vec_id").cast("string"))
         % 100
     )
     out = None

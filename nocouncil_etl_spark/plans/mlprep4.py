@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.operators.calibration import isotonic_fit
 from nocouncil_etl_spark.plans.experiment_plans import SPLIT_DAY
@@ -93,11 +94,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-small-frame argument as the TPC-H dimension joins)."""
     ev = load(spark, sf_dir, "events")
     y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("iso#"), F.col("event_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long") / F.lit(HASH_SPACE)
+    u = hash60(F.concat(F.lit("iso#"), F.col("event_id").cast("string")))
+    u = u / F.lit(HASH_SPACE)
     p = F.round((2.0 * u + y) / 3.0, 6)
     binned = ev.select(
         F.least(F.lit(ISO_BINS - 1), F.floor(p * ISO_BINS)).cast("long").alias("bin"),
@@ -205,22 +203,12 @@ def stat_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = per.groupBy("g").agg(F.abs(F.sum("d")).cast("long").alias("t_obs"))
     reps = spark.range(0, FDR_PERMS).select(F.col("id").alias("b"))
     flip_sign = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("g"),
-                        F.col("user_id").cast("string"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat_ws(
+            "|",
+            F.col("g"),
+            F.col("user_id").cast("string"),
+            F.col("b").cast("string"),
+        ))
         % 2
         == 0,
         F.col("d"),

@@ -21,12 +21,12 @@ curated corpus and a trained model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.functions.vectors import cosine
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.operators.fusion import mmr_greedy
+from nocouncil_etl_spark.operators.fusion import mmr_rerank
 from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
 
@@ -95,26 +95,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-bounded DataFrame ops, never a corpus pass."""
     e = load(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cand = (
-        e.crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.col("embedding").alias("v"),
-            F.round(cosine("embedding", "qv"), 6).alias("rel"),
-        )
-        .orderBy(F.desc("rel"), "vec_id")
-        .limit(CAND_N)
-    )
-    a = cand.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = cand.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    sims = (
-        # r11 opt: ≤CAND_N rows per side (limit-bounded) — broadcast so
-        # the planner never falls back to a 32×32-task CartesianProduct
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("ia") != F.col("ib"))
-        .select("ia", "ib", F.round(cosine("va", "vb"), 6).alias("s"))
-    )
-    return mmr_greedy(cand, sims, MMR_K, LAM, id_col="vec_id")
+    return mmr_rerank(e, qv, "vec_id", "embedding", CAND_N, MMR_K, LAM)
 
 
 # ---- feature hashing ------------------------------------------------------
@@ -153,12 +134,8 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorizers are the default for streaming/100 TB featurization."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     tok = docs.select("doc_id", F.explode(F.expr(_TOK_SPARK)).alias("term"))
-    h = F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
-    hs = F.conv(
-        F.substring(F.md5(F.concat(F.lit("sgn|"), F.col("term"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("term"))
+    hs = hash60(F.concat(F.lit("sgn|"), F.col("term")))
     hashed = tok.select(
         "doc_id",
         (h % FH_DIM).alias("bucket"),
@@ -217,11 +194,7 @@ def ml_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (the naive implementation runs {N_FOLDS} passes)."""
     o = load(spark, sf_dir, "orders")
     fold = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.col("o_orderkey").cast("string"))
         % N_FOLDS
     )
     base = o.select(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.vectors import cosine
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.operators.fusion import mmr_greedy, rrf_fuse
+from nocouncil_etl_spark.operators.fusion import candidate_sims, mmr_greedy, rrf_fuse
 from nocouncil_etl_spark.registry import query
 from nocouncil_etl_spark.plans.retrieval_plans import (
     _TOK_SQL,
@@ -489,19 +489,12 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine("embedding", "qv"), 6).alias("rel"),
         )
     )
-    a = cand.select(F.col("doc_id").alias("ia"), F.col("v").alias("va"))
-    b = cand.select(F.col("doc_id").alias("ib"), F.col("v").alias("vb"))
-    sims = (
-        # r11 opt: both sides are ≤E2E_CAND rows by construction, but the
-        # limit hides that from size estimation, so the planner chose a
-        # CartesianProduct — 32×32 = 1024 near-empty tasks per run. The
-        # explicit broadcast pins BroadcastNestedLoopJoin (guide §3.1).
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("ia") != F.col("ib"))
-        .select("ia", "ib", F.round(cosine("va", "vb"), 6).alias("s"))
-    )
     sel = mmr_greedy(
-        cand.select("doc_id", "rel"), sims, E2E_K, E2E_LAM, id_col="doc_id"
+        cand.select("doc_id", "rel"),
+        candidate_sims(cand, "doc_id", "v"),
+        E2E_K,
+        E2E_LAM,
+        id_col="doc_id",
     )
     sel = sel.join(cand.select("doc_id", "rrf"), "doc_id")
     judged = (

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.operators.dedup import make_shingle_udf
 from nocouncil_etl_spark.plans.analytics4 import (
@@ -24,7 +25,6 @@ from nocouncil_etl_spark.plans.analytics4 import (
     HASH_SPACE,
     KMV_K,
     _HV_SQL,
-    _hv,
 )
 from nocouncil_etl_spark.plans.dedup_plans import _sql_shingles
 from nocouncil_etl_spark.registry import query
@@ -104,7 +104,7 @@ def sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gram"
         ),
     )
-    d = g.select("source", _hv(F.col("gram")).alias("hv")).distinct()
+    d = g.select("source", hash60(F.col("gram")).alias("hv")).distinct()
     d = d.persist()
     w = Window.partitionBy("source").orderBy("hv")
     # bottom-K once; the K-th order statistic is the sketch's max, present

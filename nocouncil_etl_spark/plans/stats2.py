@@ -21,9 +21,10 @@ deterministic bootstrap intervals, and sequential path mining.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import fan_out, load
 from nocouncil_etl_spark.registry import query
 
@@ -39,11 +40,6 @@ POIS_CDF = (0.367879, 0.735759, 0.919699, 0.981012, 0.99634, 0.999406)
 
 PATH_LEN = 3
 PATH_TOP = 15
-
-
-def _hv(col: Column) -> Column:
-    """60-bit uniform hash (15 hex chars of md5) — the established idiom."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -113,7 +109,7 @@ def sketch_hll_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket cardinality matches exactly."""
     ev = load(spark, sf_dir, "events")
     h = ev.select(
-        "event_type", _hv(F.col("user_id").cast("string")).alias("hv")
+        "event_type", hash60(F.col("user_id").cast("string")).alias("hv")
     ).distinct()
     w = F.expr(f"hv div {HLL_M}")  # integer division — hv exceeds 2^53
     reg = (
@@ -318,50 +314,53 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     data. At 100 TB you'd trade fan-out for {BOOT_B} weight columns in ONE
     pass — same arithmetic, fewer shuffled bytes."""
     ev = fan_out(load(spark, sf_dir, "events"))
-    reps = ev.select(
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        F.explode(F.array(*[F.lit(b) for b in range(BOOT_B)])).alias("b"),
+    return bootstrap_ci(ev, "event_id", "value", BOOT_B)
+
+
+def bootstrap_ci(
+    df: DataFrame, id_col: str, value_col: str, replicas: int
+) -> DataFrame:
+    """The Poisson-bootstrap CI kernel for the mean of ``value_col``
+    (cents-exact; weights by inverse CDF on hash60(id#replica)) → one row
+    (n_replicas, mean_full, ci_lo, ci_hi): the 2nd and (B−1)th order
+    statistics of the replica means."""
+    reps = df.select(
+        F.col(id_col).alias("_id"),
+        F.round(F.col(value_col) * 100).cast("long").alias("_v"),
+        F.explode(F.array(*[F.lit(b) for b in range(replicas)])).alias("_b"),
     )
-    u = (
-        _hv(
-            F.concat_ws(
-                "#", F.col("event_id").cast("string"), F.col("b").cast("string")
-            )
-        )
-        / F.lit(HASH_SPACE)
-    )
+    key = F.concat_ws("#", F.col("_id").cast("string"), F.col("_b").cast("string"))
+    u = hash60(key) / F.lit(HASH_SPACE)
     w = F.when(u < POIS_CDF[0], 0)
     for k in range(1, len(POIS_CDF)):
         w = w.when(u < POIS_CDF[k], k)
     w = w.otherwise(len(POIS_CDF))
     means = (
-        reps.select("b", "v", w.alias("w"))
-        .groupBy("b")
+        reps.select("_b", "_v", w.alias("_w"))
+        .groupBy("_b")
         .agg(
-            F.sum(F.col("w") * F.col("v")).cast("long").alias("num"),
-            F.sum("w").cast("long").alias("den"),
+            F.sum(F.col("_w") * F.col("_v")).cast("long").alias("num"),
+            F.sum("_w").cast("long").alias("den"),
         )
     )
     mean_b = F.col("num") / F.col("den").cast("double") / 100.0
     ranked = means.select(
-        "b",
         mean_b.alias("mean_b"),
-        F.row_number().over(Window.orderBy(mean_b, "b")).alias("rn"),
+        F.row_number().over(Window.orderBy(mean_b, "_b")).alias("rn"),
     )
-    base = ev.agg(
+    base = df.agg(
         (
-            F.sum(F.round(F.col("value") * 100).cast("long"))
+            F.sum(F.round(F.col(value_col) * 100).cast("long"))
             / F.count(F.lit(1)).cast("double")
             / 100.0
         ).alias("mean_full")
     )
     return ranked.crossJoin(F.broadcast(base)).agg(
-        F.lit(BOOT_B).cast("long").alias("n_replicas"),
+        F.lit(replicas).cast("long").alias("n_replicas"),
         F.round(F.first("mean_full"), 6).alias("mean_full"),
         F.round(F.max(F.when(F.col("rn") == 2, F.col("mean_b"))), 6).alias("ci_lo"),
         F.round(
-            F.max(F.when(F.col("rn") == BOOT_B - 1, F.col("mean_b"))), 6
+            F.max(F.when(F.col("rn") == replicas - 1, F.col("mean_b"))), 6
         ).alias("ci_hi"),
     )
 

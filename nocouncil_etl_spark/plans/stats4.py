@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.experiment_plans import SPLIT_DAY
 from nocouncil_etl_spark.registry import query
@@ -179,21 +180,11 @@ def stat_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reps = spark.range(0, N_PERMS).select(F.col("id").alias("b"))
     flip = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("user_id").cast("string"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hash60(F.concat_ws(
+            "|",
+            F.col("user_id").cast("string"),
+            F.col("b").cast("string"),
+        ))
         % 2
         == 0,
         F.col("d"),

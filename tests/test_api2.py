@@ -66,11 +66,11 @@ def test_rules_verb_matches_catalog_modulo_top(eng, spark, sf_dir):
 
 
 def test_radius_verb_matches_catalog(eng, spark, sf_dir):
+    from nocouncil_etl_spark.functions.numeric import hash60 as _hv
     from nocouncil_etl_spark.plans.geo_plans import (
         LAT_RANGE,
         LON_RANGE,
         RADIUS_MDEG,
-        _hv,
     )
 
     users = eng.table(sf_dir, "events").select("user_id").distinct()

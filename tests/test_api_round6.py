@@ -95,3 +95,23 @@ def test_kmeans_index_facade_roundtrip(eng, spark, tmp_path):
         spark.createDataFrame([(501, [0.25] * 16)], "vec_id long, v array<double>"),
         path, nprobe=4, k=1,
     ).first().c_id == 500
+
+
+def test_kmeans_index_upsert_invalidates_served_manifest(eng, spark, tmp_path):
+    """An upsert appends rows the published fingerprint does not describe:
+    a later serve of the pre-append corpus must rebuild and return that
+    corpus's 80 rows, not the 120 of the grown index."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    corpus = spark.createDataFrame(
+        [(i, [float(round(x, 6)) for x in rng.standard_normal(16)])
+         for i in range(120)],
+        "vec_id long, v array<double>",
+    ).cache()
+    a = corpus.filter(F.col("vec_id") < 80)
+    path = str(tmp_path / "kidx_upsert")
+    eng.build_kmeans_index(a, path, k=4, iters=2)
+    eng.upsert_kmeans_index(corpus.filter(F.col("vec_id") >= 80), path)
+    stored, _, _ = eng.serve_kmeans_index(a, path, k=4, iters=2)
+    assert stored.count() == 80

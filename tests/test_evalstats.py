@@ -93,3 +93,51 @@ def test_welch_t_matches_scipy_free_formula(spark, sf_dir):
     # purchases carry no planted mean shift vs clicks in value itself —
     # the statistic should be finite and the vars positive
     assert r.var_a > 0 and r.var_b > 0
+
+
+def _raw_scores(spark, sf_dir):
+    """Unrounded events.value as the score: near-unique doubles, the
+    generic-score frame Engine.auc accepts (no 2-decimal grid)."""
+    from nocouncil_etl_spark.io import load
+
+    return load(spark, sf_dir, "events").select(
+        F.col("value").alias("score"),
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("label"),
+    )
+
+
+def test_engine_auc_on_raw_scores_has_no_global_window(spark, sf_dir):
+    from nocouncil_etl_spark.api import Engine
+    from nocouncil_etl_spark.plancheck import plan_has_global_window
+
+    out = Engine(spark).auc(_raw_scores(spark, sf_dir), "score", "label")
+    assert not plan_has_global_window(out)
+
+
+def test_engine_auc_on_raw_scores_matches_duckdb_rank_sum(spark, sf_dir, duck):
+    """Engine.auc equals the textbook rank-sum AUC computed by DuckDB:
+    2U = Σ_pos doubled midrank − n_pos(n_pos+1), doubled midrank =
+    2·rank() − 1 + tie count."""
+    from nocouncil_etl_spark.api import Engine
+
+    got = Engine(spark).auc(_raw_scores(spark, sf_dir), "score", "label").first()
+    n_pos, n_neg, u2 = duck.execute(
+        """
+        WITH s AS (
+          SELECT value AS score,
+                 CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS label
+          FROM events
+        ),
+        r AS (
+          SELECT label,
+                 2 * rank() OVER (ORDER BY score) - 1
+                   + count(*) OVER (PARTITION BY score) AS r2
+          FROM s
+        )
+        SELECT CAST(sum(label) AS BIGINT), CAST(sum(1 - label) AS BIGINT),
+               CAST(sum(label * r2) - sum(label) * (sum(label) + 1) AS BIGINT)
+        FROM r
+        """
+    ).fetchone()
+    assert (got.n_pos, got.n_neg, got.u2) == (n_pos, n_neg, u2)
+    assert abs(got.auc - u2 / (2.0 * n_pos * n_neg)) <= 5e-7
