@@ -725,24 +725,15 @@ class Engine:
         """Isotonic calibration curve of ``label_col`` (0/1) against
         ``prob_col`` (∈[0,1]) over ``n_bins`` equal-width bins: returns
         (bin, n, pos, obs_1e9, iso_1e9) with iso the monotone fit in exact
-        1e-9 units (operators/calibration.isotonic_fit — the minimax PAVA
-        kernel behind ml_isotonic_calibration). Cut model-score thresholds
-        on iso, not on raw scores."""
-        from pyspark.sql import functions as F
-
-        from nocouncil_etl_spark.operators.calibration import isotonic_fit
-
-        binned = df.select(
-            F.least(F.lit(n_bins - 1), F.floor(F.col(prob_col) * n_bins))
-            .cast("long")
-            .alias("bin"),
-            F.col(label_col).cast("long").alias("y"),
+        1e-9 units (operators/calibration.calibration_bins + isotonic_fit,
+        the minimax PAVA kernel — ml_isotonic_calibration's two steps). Cut
+        model-score thresholds on iso, not on raw scores."""
+        from nocouncil_etl_spark.operators.calibration import (
+            calibration_bins,
+            isotonic_fit,
         )
-        bins = binned.groupBy("bin").agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("y").cast("long").alias("pos"),
-        )
-        return isotonic_fit(bins)
+
+        return isotonic_fit(calibration_bins(df, prob_col, label_col, n_bins))
 
     def rouge(
         self,

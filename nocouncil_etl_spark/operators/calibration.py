@@ -15,6 +15,24 @@ from pyspark.sql import functions as F
 ISO_SCALE = 1_000_000_000
 
 
+def calibration_bins(
+    df: DataFrame, prob_col: str, label_col: str, n_bins: int
+) -> DataFrame:
+    """isotonic_fit's input from any (probability ∈ [0, 1], 0/1 label)
+    frame: (bin, n, pos) over ``n_bins`` equal-width bins, p = 1 landing
+    in the last bin."""
+    binned = df.select(
+        F.least(F.lit(n_bins - 1), F.floor(F.col(prob_col) * n_bins))
+        .cast("long")
+        .alias("bin"),
+        F.col(label_col).cast("long").alias("y"),
+    )
+    return binned.groupBy("bin").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("y").cast("long").alias("pos"),
+    )
+
+
 def isotonic_fit(bins: DataFrame, scale: int = ISO_SCALE) -> DataFrame:
     """Isotonic (monotone non-decreasing) fit of positive rate over ordered
     bins via the minimax identity iso(i) = max_{j≤i} min_{k≥i} pooled-rate

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.numeric import hash60
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.operators.calibration import isotonic_fit
+from nocouncil_etl_spark.operators.calibration import calibration_bins, isotonic_fit
 from nocouncil_etl_spark.plans.experiment_plans import SPLIT_DAY
 from nocouncil_etl_spark.registry import query
 
@@ -96,14 +96,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
     u = hash60(F.concat(F.lit("iso#"), F.col("event_id").cast("string")))
     u = u / F.lit(HASH_SPACE)
-    p = F.round((2.0 * u + y) / 3.0, 6)
-    binned = ev.select(
-        F.least(F.lit(ISO_BINS - 1), F.floor(p * ISO_BINS)).cast("long").alias("bin"),
-        y.alias("y"),
-    )
-    bins = binned.groupBy("bin").agg(
-        F.count("*").cast("long").alias("n"), F.sum("y").cast("long").alias("pos")
-    )
+    scored = ev.select(F.round((2.0 * u + y) / 3.0, 6).alias("p"), y.alias("y"))
+    bins = calibration_bins(scored, "p", "y", ISO_BINS)
     return isotonic_fit(bins, scale=ISO_SCALE)
 
 
