@@ -659,7 +659,10 @@ class Engine:
         pinned for the session."""
         from pyspark.sql import functions as F
 
-        from nocouncil_etl_spark.operators.graph import pagerank_fixed_point
+        from nocouncil_etl_spark.operators.graph import (
+            pagerank_fixed_point,
+            with_out_degree,
+        )
 
         nodes = (
             edges.select(F.col(src).alias("node"))
@@ -667,11 +670,7 @@ class Engine:
             .distinct()
         )
         n = nodes.count()
-        deg = edges.groupBy(src).agg(F.count("*").alias("d"))
-        e = edges.join(deg, src).select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), "d"
-        )
-        return pagerank_fixed_point(nodes, e, n, iters)
+        return pagerank_fixed_point(nodes, with_out_degree(edges, src, dst), n, iters)
 
     def hits(
         self,

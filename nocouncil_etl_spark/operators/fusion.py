@@ -7,7 +7,7 @@ gapfill advice item established: extract, don't re-implement).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.vectors import cosine

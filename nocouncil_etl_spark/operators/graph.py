@@ -23,6 +23,16 @@ SCALE = 10**9  # rank unit = 1e-9
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as a ratio — integer math only
 
 
+def with_out_degree(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """edges(src, dst) → (src, dst, d): each edge tagged with its source's
+    out-degree ``d``, the edge input ``pagerank_fixed_point`` takes. One keyed
+    count joined back on the source column."""
+    deg = edges.groupBy(src).agg(F.count("*").alias("d"))
+    return edges.join(deg, src).select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), "d"
+    )
+
+
 def pagerank_fixed_point(
     nodes: DataFrame,
     edges: DataFrame,

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.operators.kmeans import MAX_CENTROIDS, _guard_k
+from nocouncil_etl_spark.operators.kmeans import _guard_k
 
 
 def pq_seed(

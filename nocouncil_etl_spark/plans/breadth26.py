@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out_if_narrow, load
-from nocouncil_etl_spark.plans.breadth15 import _pt, _pt_sql
+from nocouncil_etl_spark.plans.breadth15 import _pt
 from nocouncil_etl_spark.registry import query
 
 # --------------------------------------------------------------------------

@@ -23,8 +23,6 @@ and ingestion-time format detection):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

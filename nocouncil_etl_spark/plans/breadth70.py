@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import fan_out, load
-from nocouncil_etl_spark.operators.quantiles import cumulate, with_global_rank
+from nocouncil_etl_spark.operators.quantiles import with_global_rank
 from nocouncil_etl_spark.plans.retrieval_plans import _TOK_SPARK, _TOK_SQL
 from nocouncil_etl_spark.registry import query
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.operators.quantiles import cumulate, dense_cumsum
+from nocouncil_etl_spark.operators.quantiles import dense_cumsum
 from nocouncil_etl_spark.plans.breadth15 import _pt, _pt_sql
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query

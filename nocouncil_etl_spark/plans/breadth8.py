@@ -25,9 +25,7 @@ from pyspark.sql import functions as F
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.pca_plans import (
     D,
-    PCA_ITERS,
     QUANT,
-    VSCALE,
     _pca_oracle,
     vec_pca_power,
 )

@@ -27,11 +27,11 @@ a C4-style corpus pass must.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.operators.quantiles import with_below, with_global_rank
+from nocouncil_etl_spark.operators.quantiles import with_below
 from nocouncil_etl_spark.plans.graph_plans import _EDGES_SQL, _graph
 from nocouncil_etl_spark.registry import query
 

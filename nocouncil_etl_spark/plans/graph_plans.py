@@ -23,7 +23,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
-from nocouncil_etl_spark.operators.graph import SCALE, pagerank_fixed_point
+from nocouncil_etl_spark.operators.graph import (
+    SCALE,
+    pagerank_fixed_point,
+    with_out_degree,
+)
 from nocouncil_etl_spark.registry import query
 
 PR_ITERS = 8
@@ -89,9 +93,7 @@ def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]
         .distinct()
         .select(F.col("node").alias("src"), "dst")
     )
-    deg = edges0.groupBy("src").agg(F.count("*").alias("d"))
-    edges = edges0.join(deg, "src")
-    return nodes, edges, n
+    return nodes, with_out_degree(edges0), n
 
 
 @query("graph_pagerank_topk", oracle=_pr_oracle())

@@ -20,7 +20,7 @@ to DECIMAL(18,6) before averaging.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load

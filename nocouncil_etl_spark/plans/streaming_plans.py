@@ -600,7 +600,6 @@ def stream_topk_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on event_type; counts merge
     associatively so state survives any micro-batch slicing; emission is
     top-k-sized."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.functions.text import (
     STOPWORDS,
-    fingerprint,
     lang_scores,
     predict_lang,
     quality_score,

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.functions.vectors import cosine, dot, l2_norm
+from nocouncil_etl_spark.functions.vectors import cosine, l2_norm
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.operators.centroid_artifact import scratch_path
 from nocouncil_etl_spark.operators.similarity import (

@@ -17,6 +17,23 @@ the engine's daemon re-reads one only when it changed (SCALE.md,
 "Per-Python-task fixed cost"). Plans, operators and results are unchanged.
 ``tune()`` cannot carry this to a session built elsewhere: the daemon module
 is a core conf, read once when the worker factory starts.
+
+Two more builder-only settings cut the fixed cost of each call (SCALE.md,
+"Keeping generated code compiled across calls"):
+
+- ``spark.sql.codegen.cache.maxEntries`` is raised from 100 to 2048, so a
+  warm call reuses the whole-stage-codegen classes an earlier call compiled
+  instead of recompiling them (about 7 ms each). It is a static conf, so it
+  is not in ``RUNTIME_CONFS``: ``tune()`` would fail to set it on every
+  ``load()``.
+- ``spark.python.sql.dataFrameDebugging.enabled`` is false, which turns off
+  PySpark's per-Column call-site capture (about a third of a plan build's
+  Py4J round trips). PySpark reads the flag once per process, at the first
+  Column call. The cost: an analysis error no longer names the Python line
+  that built the failing expression (its "DataFrame context").
+
+A session the driver owns gets neither; both only change how fast the same
+plans are built and compiled.
 """
 
 from __future__ import annotations
@@ -103,6 +120,8 @@ def get_session(app_name: str = "nocouncil_etl_spark") -> SparkSession:
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "nocouncil_etl_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -16,7 +16,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nocouncil_etl_spark.functions.numeric import rsum
 from nocouncil_etl_spark.io import normalize_events_ts, read_parquet

@@ -54,3 +54,15 @@ def test_triangle_count_is_stable(spark, sf_dir):
     b = REG["graph_triangle_count"].fn(spark, sf_dir).collect()[0].n_triangles
     assert a == b
     assert a >= 0
+
+
+def test_engine_pagerank_matches_catalog_ranks(spark, sf_dir):
+    from nocouncil_etl_spark.api import Engine
+
+    _, edges, _ = _graph(spark, sf_dir)
+    links = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    ranks = Engine(spark).pagerank(links, src="a", dst="b", iters=PR_ITERS)
+    got = sorted((-r.r, r.node) for r in ranks.collect())
+    ranks.unpersist()
+    top = REG["graph_pagerank_topk"].fn(spark, sf_dir).collect()
+    assert [(r.node, r.rank_1e9) for r in top] == [(n, -r) for r, n in got[: len(top)]]

@@ -1,14 +1,32 @@
 """tune(): explicit-set detection without the JVM reach-through, and the
-debug log when a conf cannot be applied."""
+debug log when a conf cannot be applied. get_session(): the session keeps
+generated code compiled across calls and builds plans without PySpark's
+per-Column call-site capture (SCALE.md, "Keeping generated code compiled
+across calls")."""
 
 from __future__ import annotations
 
+import json
 import logging
+import os
+import subprocess
+import sys
 
 from nocouncil_etl_spark import session
+from nocouncil_etl_spark.registry import load_all
 
 LIFT_KEY = "spark.sql.autoBroadcastJoinThreshold"
 LIFTED = session.RUNTIME_DEFAULT_LIFTS[LIFT_KEY][1]
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF001 = os.path.join(REPO, "perfbench", "data", "sf0.01")
+# batch_sf001's queries (perfbench/workloads.py)
+BATCH = [
+    "mine_topk_ngrams",
+    "pipeline_council_e2e",
+    "vec_knn_index_kmeans_build",
+    "curation_incremental_e2e",
+]
 
 
 class _NoJvmSession:
@@ -62,3 +80,49 @@ def test_tune_logs_the_key_it_could_not_set(caplog):
     assert any(pinned in m for m in logged)
     assert any(LIFT_KEY in m for m in logged)
     assert conf.values["spark.sql.adaptive.enabled"] == "true"  # the rest still applied
+
+
+def test_warm_batch_pass_compiles_no_generated_code(spark):
+    reg = load_all()
+    compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass() -> int:
+        before = compiled.METRIC_COMPILATION_TIME().getCount()
+        for name in BATCH:
+            reg[name].fn(spark, SF001).collect()
+            spark.catalog.clearCache()
+        return compiled.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert run_pass() > 0
+    # with Spark's 100-entry default the warm pass recompiles 77-78 classes
+    assert run_pass() == 0
+
+
+PROBE = """
+import json
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+from nocouncil_etl_spark.session import get_session
+
+spark = get_session("probe")
+F.col("x")
+print(json.dumps({
+    "debugging": is_debugging_enabled(),
+    "cache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
+}))
+spark.stop()
+"""
+
+
+def test_fresh_session_turns_off_call_site_capture():
+    # a fresh interpreter: PySpark caches the flag at the process's first
+    # Column call
+    env = dict(
+        os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", PROBE], cwd=REPO, env=env,
+        capture_output=True, text=True, timeout=300, check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"debugging": False, "cache": "2048"}
