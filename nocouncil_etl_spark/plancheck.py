@@ -1,10 +1,10 @@
 """Physical-plan inspection helpers (py4j walk over the executed plan).
 
-Used by the unpartitioned-window lint (tests/test_window_lint.py) and the
-dev survey (scripts/window_lint_survey.py): find Window nodes with an
-empty partition spec and measure the actual input cardinality each one
-consumed, from the executed plan's SQL metrics — including Window nodes
-hidden inside cached (InMemoryTableScan) subtrees and AQE query stages.
+Used by the catalog audit's plan rules (tests/test_catalog_audit.py): find
+Window nodes with an empty partition spec and measure the actual input
+cardinality each one consumed, from the executed plan's SQL metrics —
+including Window nodes hidden inside cached (InMemoryTableScan) subtrees
+and AQE query stages.
 
 Why runtime metrics instead of static plan text: the convention being
 enforced is "a global-order window may only consume a sub-linear
@@ -150,7 +150,8 @@ def unbounded_following_agg_frames(df) -> list[str]:
     plan — including frames inside cached subtrees and AQE stages — whose
     upper bound is unboundedFollowing with a lower bound other than
     unboundedPreceding. These are the O(n²)-per-partition suffix-aggregate
-    frames banned by tests/test_frame_lint.py."""
+    frames banned by the catalog audit's frame rule
+    (tests/test_catalog_audit.py)."""
     bad: list[str] = []
     for node in walk_plan(df._jdf.queryExecution().executedPlan()):
         if node.nodeName() != "Window":
@@ -254,21 +255,12 @@ def _ends_narrow_path(base: str) -> bool:
 
 
 def plan_has_global_window(df) -> bool:
-    """Static pre-check (no execution): does the formatted physical plan
-    contain a Window whose second Arguments bracket group is an order
-    spec (ASC/DESC) — i.e. a global-order window?"""
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    for m in re.finditer(
-        r"\(\d+\) Window(?:[^\n]*\n)+?Arguments: ([^\n]*)", buf.getvalue()
-    ):
-        segs = m.group(1).split("], [")
-        spec = segs[1] if len(segs) > 1 else ""
-        if " ASC" in spec or " DESC" in spec:
-            return True
-    return False
+    """Static pre-check (no job runs): does df's physical plan, cached
+    subtrees and AQE stages included, hold a Window with an empty partition
+    spec and a non-empty order spec — a global-order window?"""
+    return any(
+        n.nodeName() == "Window"
+        and n.partitionSpec().size() == 0
+        and n.orderSpec().size() > 0
+        for n in walk_plan(df._jdf.queryExecution().executedPlan())
+    )

@@ -42,7 +42,7 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts → explode → slice. The explode's arity is the per-doc chunk
     count (data-dependent), so the fan-out contract applies — one compact
     shuffle of the doc rows buys full-width parallelism for the chunk
-    stage (lint: tests/test_fanout_lint.py)."""
+    stage (lint: tests/test_catalog_audit.py)."""
     docs = fan_out(load(spark, sf_dir, "documents"))
     w = F.split("text", " ")
     n_chunks = F.ceil(

@@ -20,7 +20,7 @@ What each preserves (the plan shape is the point):
 Money sums fold DECIMAL(18,6)-quantized addends (functions.numeric) so every
 rounded value and threshold comparison is combine-order-independent; integer
 counts are CAST to BIGINT in the oracles (DuckDB sum(int) is HUGEINT — the
-round-1/2 digest-flake class, guarded by tests/test_oracle_parity.py).
+round-1/2 digest-flake class, guarded by tests/test_catalog_audit.py).
 """
 
 from __future__ import annotations

@@ -1,11 +1,13 @@
 """SparkSession factory and runtime tuning.
 
-Local test shape is ``local[32]`` on one JVM; the configs below are chosen so
-the same logical plans scale to a multi-executor cluster: AQE re-plans
-post-shuffle (partition coalescing, skew-join splitting), shuffle partitions
-match local cores instead of the 200 default, Arrow accelerates every
-pandas-UDF boundary, and the session timezone is pinned UTC so timestamp
-semantics match columnar storage and the DuckDB oracle.
+Local test shape is ``local[32]`` on one JVM, with a driver heap of 40% of
+physical memory (at most 16g) unless ``SPARK_DRIVER_MEMORY`` sets it. The
+configs below are chosen so the same logical plans scale to a
+multi-executor cluster: AQE re-plans post-shuffle (partition coalescing,
+skew-join splitting), shuffle partitions match local cores instead of the
+200 default, Arrow accelerates every pandas-UDF boundary, and the session
+timezone is pinned UTC so timestamp semantics match columnar storage and
+the DuckDB oracle.
 
 Python workers start from ``nocouncil_etl_spark.pydaemon`` instead of the
 stock ``pyspark.daemon``: ``get_session`` sets ``spark.python.daemon.module``
@@ -110,12 +112,24 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_session`` asks for unless ``SPARK_DRIVER_MEMORY``
+    is set: 40% of physical memory in whole GiB, at most 16g. A heap larger
+    than the host lets the JVM grow until the kernel kills it (a fixed 16g
+    on a 16 GB host was OOM-killed at 14 GB resident)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, int(phys * 0.4) >> 30))}g"
+
+
 def get_session(app_name: str = "nocouncil_etl_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "nocouncil_etl_spark.pydaemon")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nocouncil_etl_spark.plans.breadth15 import CELL, MAD_MULT, OOV_SCALE, VOCAB_K
+from nocouncil_etl_spark.plans.breadth15 import CELL, MAD_MULT, OOV_SCALE
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from math import comb
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.plans.breadth17 import PASS_N, PASS_SCALE
 from nocouncil_etl_spark.registry import load_all
 

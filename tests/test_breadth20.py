@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from math import comb, log
+from math import log
 
 from nocouncil_etl_spark.plans.breadth20 import LN_SCALE, MAX_OFFSET
 from nocouncil_etl_spark.registry import load_all

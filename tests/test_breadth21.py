@@ -3,7 +3,6 @@ skipping, CEP matches, LSH recall ordering."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.registry import load_all

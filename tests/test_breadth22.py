@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

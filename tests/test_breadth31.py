@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import collections
-import math
 
 from pyspark.sql import functions as F
 
@@ -122,7 +121,6 @@ def test_minhash_sketch_query_has_no_exact_join(spark, sf_dir):
     """The registered (hot) query is sketch-only: its plan never joins
     vocabularies on term — the quadratic exact anchor lives solely in the
     _exact audit twin."""
-    import contextlib, io
 
     df = REG["text_source_minhash_sim"].fn(spark, sf_dir)
     assert "jac_exact_1e6" not in df.columns

@@ -4,7 +4,6 @@ diagnostics."""
 from __future__ import annotations
 
 import collections
-import itertools
 
 from pyspark.sql import functions as F
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import collections
-import math
 
 from pyspark.sql import functions as F
 

@@ -7,8 +7,6 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()
@@ -58,8 +56,6 @@ def test_krippendorff_alpha_in_informative_range(spark, sf_dir):
 
 
 def test_mips_augmented_cosine_reproduces_ip_ranking(spark, sf_dir):
-    from nocouncil_etl_spark.io import load
-
     rows = sorted(
         REG["vec_mips_augment"].fn(spark, sf_dir).collect(), key=lambda r: r.rk
     )

@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import collections
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

@@ -3,8 +3,6 @@ price-volume-mix, CDC chunks, ABC/XYZ."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.breadth46 import CDC_TOP, MA_SLOW
 from nocouncil_etl_spark.registry import load_all

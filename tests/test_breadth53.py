@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from nocouncil_etl_spark.plans.breadth53 import CP_TOP, LAD_MOD, SW_TOP
+from nocouncil_etl_spark.plans.breadth53 import CP_TOP, SW_TOP
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

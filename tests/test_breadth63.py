@@ -3,7 +3,7 @@ Oaxaca-Blinder, Markov entropy rate."""
 
 from __future__ import annotations
 
-from nocouncil_etl_spark.plans.breadth63 import _curve_rows, _xy2d, HB_N
+from nocouncil_etl_spark.plans.breadth63 import _curve_rows, HB_N
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

@@ -3,7 +3,7 @@ Ulcer index, geohash codec."""
 
 from __future__ import annotations
 
-from nocouncil_etl_spark.plans.breadth68 import CM_ROUNDS, WM_JITTER_MOD
+from nocouncil_etl_spark.plans.breadth68 import WM_JITTER_MOD
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

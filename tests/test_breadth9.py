@@ -3,8 +3,6 @@ attribution)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.breadth9 import (
     BP,

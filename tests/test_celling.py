@@ -20,7 +20,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.operators.celling import SIG_BITS, subcell_over_cap
 from nocouncil_etl_spark.registry import load_all

@@ -68,7 +68,7 @@ def test_dpo_pipeline_composition_invariants(spark, sf_dir):
     """The e2e build must respect every stage's contract: pairs come from
     gated+deduped docs, margins are non-negative, splits are deterministic,
     and renders carry both sides."""
-    from nocouncil_etl_spark.plans.dpo_pipeline import MIN_QUALITY, VAL_PCT
+    from nocouncil_etl_spark.plans.dpo_pipeline import MIN_QUALITY
 
     rows = REG["pipeline_dpo_e2e"].fn(spark, sf_dir).collect()
     assert rows

@@ -3,9 +3,6 @@ padding-waste arithmetic, survivorship majority, bigram-vs-unigram LM."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.registry import load_all
 
 REG = load_all()

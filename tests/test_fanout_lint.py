@@ -1,66 +1,16 @@
-"""Repo-wide fan-out-before-explode lint (round-9 discovery #1, round-10
-verdict task).
-
-Scan parallelism follows input BYTES (spark.sql.files.maxPartitionBytes),
-which is wrong for explosive transforms: a small compressed file plans one
-task locally (the whole explode serializes — r9 measured ten queries
-paying 5-8 s each at sf1 this way), and at 100 TB an oversized text file
-becomes a straggler whose explode output is orders of magnitude bigger
-than its input split. The engine's rule — `io.fan_out` ahead of every
-explosive transform (io.py docstring) — was institutional knowledge;
-this lint makes it structural.
-
-Mechanics (nocouncil_etl_spark/plancheck.py::unfanned_generates): for
-every registry query, walk the physical plan (no job runs; AQE stages and
-cached subtrees descended) and flag any Generate node reachable from a
-FILE SCAN through only narrow operators — no Exchange/broadcast/grouped-
-pandas shuffle in between. Generators with STATICALLY bounded fan-out
-(literal arrays, constant-folded sequences, slice with literal length,
-stack with its literal row count, json_tuple) are exempt — constant
-amplification is a wide row, not an explosive transform.
-
-Whitelist entries need a reason; the bar is "the exploded input is
-bounded by construction" (e.g. a constant-size dimension table) — never
-"it's small at test scale".
-"""
+"""Fan-out-before-explode lint per catalog query: the catalog audit's ``fanout``
+verdict (tests/test_catalog_audit.py), one test per query. The query is
+built and run once per session, by whichever of the audit's tests reaches
+it first."""
 
 from __future__ import annotations
 
 import pytest
 
-from nocouncil_etl_spark.plancheck import unfanned_generates
-from nocouncil_etl_spark.registry import load_all
-
-REG = load_all()
-
-WHITELIST: dict[str, str] = {
-    "join_interval_overlap": (
-        "interval-to-bucket sequence explode spans <= 3 buckets by "
-        "construction (literal interval length / bucket width, documented "
-        "in the plan docstring); the (user, bucket) equi-join shuffle "
-        "follows immediately, so the explode stage does trivial work"
-    ),
-    "vec_knn_lsh_multi": (
-        "buckets explode arity == L=4 literal signature tables (operator "
-        "constant in similarity.attach_signature multi mode); the bucket "
-        "equi-join shuffle follows immediately"
-    ),
-}
+from test_catalog_audit import REG, verdict
 
 
 @pytest.mark.parametrize("name", sorted(REG))
-def test_explosive_transforms_are_fanned(name, spark, sf_dir):
-    if name in WHITELIST:
-        return
-    try:
-        df = REG[name].fn(spark, sf_dir)
-        bad = unfanned_generates(df)
-        assert not bad, (
-            f"{name}: {len(bad)} Generate node(s) fed by a file scan with "
-            f"no shuffle in between — the explode runs at byte-derived scan "
-            f"parallelism (first: {bad[0]}). Put io.fan_out ahead of the "
-            "explosive transform, or whitelist with a bounded-by-"
-            "construction reason."
-        )
-    finally:
-        spark.catalog.clearCache()
+def test_explosive_transforms_are_fanned(name, spark, sf_dir, duck):
+    failures = verdict(name, spark, sf_dir, duck)
+    assert "fanout" not in failures, failures["fanout"]

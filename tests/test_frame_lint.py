@@ -1,106 +1,16 @@
-"""Repo-wide suffix-aggregate window-frame lint (round-9 discovery #2,
-round-10 verdict task).
-
-The round-9 sf1 triage measured that an aggregate over a
-``(x, unboundedFollowing)`` frame is O(n²) per partition: Spark's
-UnboundedFollowingWindowFunctionFrame recomputes the aggregate from
-scratch at every row because aggregates cannot retract (18 s on a 160k-row
-partition grid). The engine's idiom is a RUNNING frame over the REVERSED
-ordering — ``F.last(...)`` / running sum with ``(unboundedPreceding,
-currentRow)`` and a descending key (see plans/joins.py:273 and the
-gap-fill interpolator). Round 9 fixed every known site by hand; this lint
-makes the rule structural so query #753 cannot reintroduce it.
-
-Two layers:
-
-1. Plan-level (`unbounded_following_agg_frames`): for every registry
-   query, walk the physical plan (AQE stages + cached subtrees included;
-   no job runs) and flag any window frame whose upper bound is
-   unboundedFollowing with a lower bound other than unboundedPreceding.
-   The (unboundedPreceding, unboundedFollowing) whole-partition frame is
-   exempt — Spark evaluates it once per partition, O(n).
-2. Source-level (AST): some operators localCheckpoint intermediates, which
-   truncates lineage and hides their plans from layer 1. Parse every
-   package module and flag `rowsBetween`/`rangeBetween` calls whose end
-   bound is `Window.unboundedFollowing` unless the start is
-   `Window.unboundedPreceding`. Oracle SQL strings (DuckDB side) are out
-   of scope — DuckDB's window executor is not the engine under lint.
-
-Whitelist empty, like the global-window lint's.
-"""
+"""Suffix-aggregate window-frame lint per catalog query: the catalog audit's ``frame``
+verdict (tests/test_catalog_audit.py), one test per query. The query is
+built and run once per session, by whichever of the audit's tests reaches
+it first."""
 
 from __future__ import annotations
 
-import ast
-import os
-
 import pytest
 
-from nocouncil_etl_spark.plancheck import unbounded_following_agg_frames
-from nocouncil_etl_spark.registry import load_all
-
-REG = load_all()
-
-WHITELIST: dict[str, str] = {}
-
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "nocouncil_etl_spark")
+from test_catalog_audit import REG, verdict
 
 
 @pytest.mark.parametrize("name", sorted(REG))
-def test_no_suffix_aggregate_frames(name, spark, sf_dir):
-    if name in WHITELIST:
-        return
-    try:
-        df = REG[name].fn(spark, sf_dir)
-        bad = unbounded_following_agg_frames(df)
-        assert not bad, (
-            f"{name}: window frame(s) {sorted(set(bad))} end at "
-            "unboundedFollowing without starting at unboundedPreceding — "
-            "O(n²) per partition (the aggregate is recomputed at every "
-            "row). Rewrite as a running frame over the REVERSED ordering "
-            "(plans/joins.py:273) or whitelist with a docstring reason."
-        )
-    finally:
-        spark.catalog.clearCache()
-
-
-def _is_window_attr(node: ast.AST, attr: str) -> bool:
-    return (
-        isinstance(node, ast.Attribute)
-        and node.attr == attr
-        and isinstance(node.value, ast.Name)
-        and node.value.id == "Window"
-    )
-
-
-def test_no_suffix_frame_construction_in_source():
-    """AST layer: catches frames built inside operators whose plans are
-    lineage-truncated (localCheckpoint) before the registry lint sees them."""
-    offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            with open(path, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read(), filename=path)
-            for node in ast.walk(tree):
-                if not (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr in ("rowsBetween", "rangeBetween")
-                    and len(node.args) == 2
-                ):
-                    continue
-                start, end = node.args
-                if _is_window_attr(end, "unboundedFollowing") and not _is_window_attr(
-                    start, "unboundedPreceding"
-                ):
-                    rel = os.path.relpath(path, os.path.dirname(PKG))
-                    offenders.append(f"{rel}:{node.lineno}")
-    assert not offenders, (
-        f"suffix-aggregate frame construction at {offenders}: "
-        "(x, unboundedFollowing) frames are O(n²) per partition — use a "
-        "running frame over the reversed ordering instead"
-    )
+def test_no_suffix_aggregate_frames(name, spark, sf_dir, duck):
+    failures = verdict(name, spark, sf_dir, duck)
+    assert "frame" not in failures, failures["frame"]

@@ -4,8 +4,6 @@ test_kernel_properties discipline applied to the retrieval layer."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.operators.fusion import mmr_greedy, rrf_fuse
 
 

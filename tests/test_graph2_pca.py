@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.graph2 import SEED_MOD, SSSP_ROUNDS, W_A, W_B, W_MOD

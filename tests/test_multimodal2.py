@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plans.multimodal2 import FP_BITS, FP_TOP, N_SLICES
 from nocouncil_etl_spark.registry import load_all

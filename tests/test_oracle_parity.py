@@ -1,96 +1,15 @@
-"""Mirror of the driver's correctness gate: run every registered query on
-Spark AND its DuckDB oracle on the same parquet, compare row count, column
-names, and order-insensitive values. This is the engine's main regression net
-(SURVEY.md §5.2-1)."""
+"""Oracle parity per catalog query: the catalog audit's oracle verdict
+(tests/test_catalog_audit.py), one test per query. The query is built and
+run once per session, by whichever of the audit's tests reaches it first."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
-from nocouncil_etl_spark.registry import load_all
-
-REGISTRY = load_all()
-ORACLE_CASES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
-ROWS_ONLY_CASES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
-
-
-def canon(value):
-    """Canonicalize one cell for order-insensitive comparison."""
-    if value is None:
-        return "∅"
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        # queries round on both sides; absorb residual representation noise
-        return f"{value:.9g}"
-    if isinstance(value, bytes):
-        return value.hex()
-    if isinstance(value, (list, tuple)):
-        return "[" + ",".join(canon(v) for v in value) + "]"
-    return str(value)
-
-
-def table_digest(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(canon(r[i]) for i in order) for r in rows)
-    return [cols[i] for i in order], lines
+from test_catalog_audit import ORACLE_CASES, verdict
 
 
 @pytest.mark.parametrize("name", ORACLE_CASES)
-def test_query_matches_oracle(name, spark, duck, sf_dir):
-    q = REGISTRY[name]
-    sdf = q.fn(spark, sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = list(sdf.columns)
-
-    res = duck.execute(q.oracle)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    s_cols, s_lines = table_digest(spark_cols, spark_rows)
-    d_cols, d_lines = table_digest(duck_cols, duck_rows)
-
-    assert s_cols == d_cols, f"{name}: column mismatch {s_cols} vs {d_cols}"
-    assert len(s_lines) == len(d_lines), (
-        f"{name}: row count {len(s_lines)} vs {len(d_lines)}"
-    )
-    mismatches = [
-        (a, b) for a, b in zip(s_lines, d_lines) if a != b
-    ]
-    assert not mismatches, f"{name}: {len(mismatches)} row diffs; first: {mismatches[0]}"
-
-
-def test_no_oracle_column_is_hugeint(duck):
-    """Driver-digest guard: DuckDB promotes sum(INT)/sum(BIGINT) to HUGEINT
-    (int128), which the verification driver's pandas-mediated digest
-    stringifies differently from Python ints — the only wrong-answer signal
-    in rounds 1-2 (VERDICT r2 'What's wrong #1'). Every integer aggregate in
-    an oracle must be CAST(... AS BIGINT). This asserts the whole registry,
-    without executing, via the relation's lazy type plan."""
-    offenders = {}
-    for name in ORACLE_CASES:
-        rel = duck.sql(REGISTRY[name].oracle)
-        bad = [
-            c for c, t in zip(rel.columns, rel.types) if "HUGEINT" in str(t).upper()
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"HUGEINT oracle columns (CAST AS BIGINT): {offenders}"
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_CASES)
-def test_rows_only_query_runs(name, spark, sf_dir):
-    q = REGISTRY[name]
-    sdf = q.fn(spark, sf_dir)
-    assert sdf.count() >= 0
-    assert len(sdf.columns) > 0
-
-
-def test_entry_smoke(spark):
-    import __spark_entry__ as e
-
-    df = e.entry(spark)
-    rows = df.collect()
-    assert len(rows) > 0
+def test_query_matches_oracle(name, spark, sf_dir, duck):
+    failures = verdict(name, spark, sf_dir, duck)
+    assert "oracle" not in failures, failures["oracle"]

@@ -12,7 +12,6 @@ import io
 import re
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.operators.quantiles import prefix_counts, quantile_normalize_grid

@@ -19,8 +19,6 @@ import math
 import re
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.plans.breadth30 import item_cosine_topk
 from nocouncil_etl_spark.registry import load_all

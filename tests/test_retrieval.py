@@ -6,7 +6,6 @@ import math
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from nocouncil_etl_spark.io import load
 from nocouncil_etl_spark.plancheck import walk_plan

@@ -1,8 +1,8 @@
 """tune(): explicit-set detection without the JVM reach-through, and the
-debug log when a conf cannot be applied. get_session(): the session keeps
-generated code compiled across calls and builds plans without PySpark's
-per-Column call-site capture (SCALE.md, "Keeping generated code compiled
-across calls")."""
+debug log when a conf cannot be applied. get_session(): the default heap
+fits the host, and the session keeps generated code compiled across calls
+and builds plans without PySpark's per-Column call-site capture (SCALE.md,
+"Keeping generated code compiled across calls")."""
 
 from __future__ import annotations
 
@@ -126,3 +126,14 @@ def test_fresh_session_turns_off_call_site_capture():
     )
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert got == {"debugging": False, "cache": "2048"}
+
+
+def test_default_heap_fits_the_host(spark, monkeypatch):
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    pinned = os.environ.get("SPARK_DRIVER_MEMORY")
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    heap = session.default_driver_memory()
+    assert heap.endswith("g") and int(heap[:-1]) << 30 <= max(0.4 * phys, 1 << 30)
+    if not pinned:  # the test session took the default
+        runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+        assert runtime.maxMemory() <= 0.4 * phys

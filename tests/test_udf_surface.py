@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_frontmatter_udtf(spark):

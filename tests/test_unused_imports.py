@@ -2,7 +2,8 @@
 
 The repo ships no linter, so an import left behind by a refactor survives
 until someone happens to read the file. This test parses every module of
-the package, ``scripts/`` and the two top-level entry points, and fails
+the package, ``scripts/``, ``tests/`` and the two top-level entry points,
+and fails
 when a name an ``import`` binds is never read in that file. A name listed
 in the module's ``__all__`` counts as used (a re-export); an import whose
 line carries ``noqa: F401`` is kept on purpose (an import run for its side
@@ -15,7 +16,7 @@ import ast
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ROOTS = ["nocouncil_etl_spark", "scripts"]
+ROOTS = ["nocouncil_etl_spark", "scripts", "tests"]
 FILES = ["bench.py", "__spark_entry__.py"]
 
 

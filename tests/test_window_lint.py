@@ -1,93 +1,16 @@
-"""Repo-wide unpartitioned-window lint (round-6 verdict #7).
-
-The engine's convention: a Window.orderBy() with NO partition key is only
-allowed when its input is sub-linear — an aggregated/bounded frame (days,
-bands, arms, vocab buckets) or the k survivors of a TakeOrderedAndProject.
-Until this test the convention was enforced only by docstring, and
-rec_item_cosine proved it can silently slip in new batches (a global
-row_number over a degree²-sized pair set, fixed this round).
-
-Mechanics (nocouncil_etl_spark/plancheck.py): walk the whole query
-registry at the test scale factor; for each query whose PHYSICAL plan
-contains a global-order Window node, execute it and read every such
-node's actual input cardinality from the executed-plan SQL metrics
-(cached subtrees and AQE stages included). Each global window must
-satisfy one of:
-  - a limit node (TakeOrderedAndProject / GlobalLimit / ...) bounds its
-    input — rank-on-survivors, bounded by construction; or
-  - input rows <= ROW_CAP — an aggregated/bounded frame; or
-  - the query is on the explicit WHITELIST of documented exceptions.
-
-ROW_CAP calibration at sf0.001: raw fact tables are lineitem ~6k /
-events 20k / documents 600 rows, so a raw-data global sort sees
-thousands-to-tens-of-thousands of rows; the catalog's legitimate bounded
-frames (survey: scripts/window_lint_survey.py) stay at/under the
-hour-grid size (~1.5k). The cap sits between those regimes; anything
-legitimately above it must be whitelisted with a docstring justification.
-"""
+"""Unpartitioned-window lint per catalog query: the catalog audit's ``window``
+verdict (tests/test_catalog_audit.py), one test per query. The query is
+built and run once per session, by whichever of the audit's tests reaches
+it first."""
 
 from __future__ import annotations
 
 import pytest
 
-from nocouncil_etl_spark.plancheck import (
-    global_window_inputs,
-    plan_has_global_window,
-)
-from nocouncil_etl_spark.registry import load_all
-
-REG = load_all()
-
-ROW_CAP = 1200
-
-# Documented exceptions — each would carry its justification in the
-# operator's own docstring. The round-6 verdict expected "< ~15 names";
-# after the round-7 refactor (42 offenders onto Fenwick prefix aggregates,
-# the rest onto the range-partitioned two-phase scan — including the last
-# three holdouts: quantile_normalize_frame's pooled rank, the exact-rank
-# percentile anchor's now-partitioned windows, and the string-keyed
-# sorted-neighborhood blocker) the whitelist is EMPTY. Keep the mechanism:
-# a future query with a justified global window adds itself here with a
-# reason string.
-WHITELIST: dict[str, str] = {}
-
-
-def _offenders(df):
-    df.collect()
-    return [
-        (node, rows)
-        for node, rows in global_window_inputs(df)
-        if node != "limit" and not (rows is not None and rows <= ROW_CAP)
-    ]
+from test_catalog_audit import REG, verdict
 
 
 @pytest.mark.parametrize("name", sorted(REG))
-def test_no_unbounded_global_window(name, spark, sf_dir):
-    try:
-        df = REG[name].fn(spark, sf_dir)
-        # cheap static pre-check: most queries plan no global window
-        if not plan_has_global_window(df):
-            return
-        if name in WHITELIST:
-            return
-        bad = _offenders(df)
-        if bad:
-            # SQL metrics on stages shared with earlier tests (cached
-            # subtrees, reused exchanges) can accumulate across
-            # executions; a clean replan separates that noise from a
-            # real unbounded window, which persists. (The r11 full-suite
-            # ('unknown', None) flake on ts_seasonal_anomaly is closed at
-            # the source: window_input_rows now reads the feeding
-            # exchange's shuffleRecordsWritten — the exact input
-            # cardinality — instead of descending past it into AQE stage
-            # state.)
-            spark.catalog.clearCache()
-            bad = _offenders(REG[name].fn(spark, sf_dir))
-        assert not bad, (
-            f"{name}: global-order Window(s) consume unbounded input "
-            f"{bad} (cap {ROW_CAP}); bound the input (aggregate / "
-            f"TakeOrderedAndProject) or whitelist with a docstring "
-            f"justification"
-        )
-    finally:
-        spark.catalog.clearCache()
+def test_no_unbounded_global_window(name, spark, sf_dir, duck):
+    failures = verdict(name, spark, sf_dir, duck)
+    assert "window" not in failures, failures["window"]
